@@ -11,8 +11,10 @@ assembled entirely from pieces that are individually tested elsewhere:
       → JSONL landing zone (the durable hand-off; a Kafka topic at
         scale — the engine contract is only the landed shape)
       → one Structured Streaming query per connection
-        (streaming/pipeline.run_connection_stream: transform →
-        ledger-dedup → deliver → outcome ledger)
+        (streaming/pipeline.run_connection_stream: the transform is
+        planned once per query start; each micro-batch runs ledger +
+        in-batch dedup once into a local checkpoint → deliver → one
+        outcome-ledger append)
       → destination senders (REST / JDBC / Postgres COPY / files)
 
     config control plane (sources/config_api: CRUD + /health)

@@ -22,7 +22,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MAX_RETRY = 10  # jobdb.maxRetryNumber (config.yaml:10)
@@ -267,7 +267,7 @@ class DeliveryLedger:
 def make_status(
     df: DataFrame,
     connection_id: int,
-    state: str,
+    state: str | Column,
     attempt_col=None,
     error_code: str = "",
     error_col=None,
@@ -276,16 +276,21 @@ def make_status(
 ) -> DataFrame:
     """Build ledger rows from a delivered/failed event DataFrame.
 
+    ``state`` is one state for every row, or a Column choosing it per
+    row (``error_col`` likewise), so a mixed-outcome batch is one
+    append.
+
     Non-UTF8 error payloads were replaced with {} by the reference
     (jobs/jobsdb.go:1005-1016) — Spark strings are always valid UTF-8,
     so the guard is structural here.
     """
     attempt = attempt_col if attempt_col is not None else F.lit(1)
     error_response = error_col if error_col is not None else F.lit("")
+    state_col = state if isinstance(state, Column) else F.lit(state)
     return df.select(
         F.col(job_id_col).alias("job_id"),
         F.lit(connection_id).cast("int").alias("connection_id"),
-        F.lit(state).alias("state"),
+        state_col.alias("state"),
         attempt.cast("int").alias("attempt"),
         F.current_timestamp().alias("exec_time"),
         (F.current_timestamp() + F.expr(f"INTERVAL {retry_delay_s} SECONDS")).alias("retry_time"),

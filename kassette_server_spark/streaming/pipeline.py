@@ -8,12 +8,16 @@ checkpoint; its executing/waiting statuses disappear (checkpoint
 replay), leaving the ledger to record delivery outcomes with
 retry/DLQ.
 
-``run_connection_stream`` wires: file/json source → envelope parse →
-identity → skew → per-connection transform → foreachBatch:
-  1. dedup against already-succeeded job ids (ledger, message_id) —
+``run_connection_stream`` builds the plan once per query start:
+file/json source → envelope parse → identity → skew → per-connection
+transform, applied to the STREAMING frame (``uuid()`` still draws new
+ids in every micro-batch and ``current_timestamp()`` is the batch
+time), then foreachBatch runs per micro-batch:
+  1. dedup against already-succeeded job ids (ledger, message_id) and
+     within the batch, and materialize the result once —
      at-least-once delivery + idempotent sink = effective exactly-once;
   2. deliver (REST partition sender or parquet/jdbc write);
-  3. append outcome statuses to the ledger.
+  3. append every outcome status to the ledger in one write.
 
 Retry (R5): failed ledger rows re-enter via ``retry_frame`` unioned
 into a later batch by the caller — mirroring
@@ -29,16 +33,20 @@ from pyspark.sql import functions as F
 
 from .. import pipeline as P
 from ..config import Connection
-from .ledger import DeliveryLedger, MAX_RETRY, STATE_FAILED, STATE_SUCCEEDED, make_status
+from .ledger import DeliveryLedger, STATE_FAILED, STATE_SUCCEEDED, make_status
 
 DeliverFn = Callable[[DataFrame], DataFrame]
 """(events with message_id/event_json) → outcomes
-(message_id, delivered, status, error)."""
+(message_id, delivered, status, error). The events frame is already
+materialized (its plan is a local checkpoint), so ``deliver`` may run
+several actions on it: each sees the same rows and none re-runs the
+transform, the ledger read or the dedup."""
 
 
 def transform_micro_batch(df: DataFrame, conn: Connection, clock=None) -> DataFrame:
-    """The full per-connection batch transform, applied to one
-    micro-batch (or any batch DataFrame with a payload column)."""
+    """The full per-connection batch transform, applied to a streaming
+    source (once per query start) or to any batch DataFrame with a
+    payload column."""
     parsed = P.parse_envelope(df)
     ident = P.synthesize_identity(parsed)
     skewed = P.correct_timestamp_skew(ident, clock=clock)
@@ -52,8 +60,8 @@ def materialize_outcomes(outcomes: DataFrame) -> DataFrame:
 
     localCheckpoint(eager=True) executes every partition exactly once
     and REPLACES the plan with the materialized blocks, so later
-    actions (the succeeded/failed ledger branches, counts, retries)
-    can never re-run the HTTP sends. cache() is NOT enough — under
+    actions (the ledger append, the emptiness check, retries) can
+    never re-run the HTTP sends. cache() is NOT enough — under
     executor memory pressure cached partitions are evicted and the
     next action silently recomputes them through deliver(), re-sending
     to the destination; a lost checkpoint block instead fails loudly.
@@ -72,19 +80,24 @@ def deliver_with_ledger(
     done = ledger.processed_job_ids().filter(F.col("connection_id") == conn.id).select("job_id")
     fresh = batch.join(done, batch.message_id == done.job_id, "left_anti")
     # client retries can land the same messageId twice in ONE micro-batch
-    # (the ledger only knows about earlier batches) — dedup within too
-    fresh = fresh.dropDuplicates(["message_id"])
+    # (the ledger only knows about earlier batches) — dedup within too.
+    # Materialized once: the sink's actions and the ledger rows then
+    # read the same rows (the same uuid() ids, the same kept retry
+    # copy) without re-running the ledger read and both shuffles
+    fresh = fresh.dropDuplicates(["message_id"]).localCheckpoint(eager=True)
     outcomes = materialize_outcomes(deliver(fresh))
-    n_total = outcomes.count()
-    ok = outcomes.filter(F.col("delivered"))
-    failed = outcomes.filter(~F.col("delivered"))
-    if n_total:
-        if ok.limit(1).count():
-            ledger.append(make_status(ok, conn.id, STATE_SUCCEEDED, attempt_col=attempt_col))
-        if failed.limit(1).count():
-            ledger.append(
-                make_status(failed, conn.id, STATE_FAILED, attempt_col=attempt_col, error_col=F.col("error"))
-            )
+    if outcomes.isEmpty():
+        return
+    delivered = F.col("delivered")
+    ledger.append(
+        make_status(
+            outcomes,
+            conn.id,
+            F.when(delivered, STATE_SUCCEEDED).otherwise(STATE_FAILED),
+            attempt_col=attempt_col,
+            error_col=F.when(delivered, "").otherwise(F.col("error")),
+        )
+    )
 
 
 def run_connection_stream(
@@ -103,14 +116,14 @@ def run_connection_stream(
         spark.readStream.schema("payload string")
         .json(source_dir)
     )
+    events = transform_micro_batch(raw, conn)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        events = transform_micro_batch(batch_df, conn)
-        deliver_with_ledger(events, conn, ledger, deliver)
+        deliver_with_ledger(batch_df, conn, ledger, deliver)
 
     trigger = {"availableNow": True} if available_now else {"processingTime": "2 seconds"}
     return (
-        raw.writeStream.foreachBatch(sink)
+        events.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(**trigger)
         .start()

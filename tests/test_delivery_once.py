@@ -1,6 +1,7 @@
 """Regression: delivery partitions must execute exactly once per
-micro-batch even though the ledger writer inspects the outcome frame
-multiple times (succeeded + failed branches)."""
+micro-batch even though the outcome frame is read more than once
+(emptiness check, ledger append), and a micro-batch appends its
+outcomes to the ledger in at most one write."""
 
 from __future__ import annotations
 
@@ -23,22 +24,22 @@ CONN = Connection(
 )
 
 
-def test_delivery_partitions_run_exactly_once(spark, tmp_path):
+def _batch(spark, n=8):
     events = [
-        {"event_id": f"e{i}", "userId": "u", "messageId": f"m{i}"} for i in range(8)
+        {"event_id": f"e{i}", "userId": "u", "messageId": f"m{i}"} for i in range(n)
     ]
     payload = json.dumps(
         {"batch": events, "writeKey": "wk", "requestIP": "1.1.1.1",
          "receivedAt": "2024-03-04T05:06:07.123Z"}
     )
     raw = spark.createDataFrame([(payload,)], ["payload"])
-    batch = transform_micro_batch(raw, CONN, clock=F.lit("2024-01-01").cast("timestamp"))
-    lg = DeliveryLedger(spark, str(tmp_path / "ledger"))
+    return transform_micro_batch(raw, CONN, clock=F.lit("2024-01-01").cast("timestamp"))
 
-    # delivery with a side-effect counter per executed row: a file per
-    # (message_id, invocation) — duplicates would collide into extras
-    marker_dir = tmp_path / "sends"
-    marker_dir.mkdir()
+
+def _marking_deliver(spark, marker_dir):
+    """A delivery with a side-effect counter per executed row: a file
+    per (message_id, invocation) — duplicates would collide into
+    extras. Odd ids fail."""
 
     def deliver(df):
         # multi-partition so partial caching would be observable
@@ -52,20 +53,78 @@ def test_delivery_partitions_run_exactly_once(spark, tmp_path):
                 while os.path.exists(f"{base}.{k}"):
                     k += 1
                 open(f"{base}.{k}", "w").close()
-                # odd ids fail
                 ok = int(r["message_id"][1:]) % 2 == 0
                 yield (r["message_id"], ok, 200 if ok else 500, "" if ok else "boom")
 
         rdd = spread.rdd.mapPartitions(send)
         return spark.createDataFrame(rdd, "message_id string, delivered boolean, status int, error string")
 
-    deliver_with_ledger(batch, CONN, lg, deliver)
+    return deliver
+
+
+def _count_appends(lg):
+    calls = []
+    append = lg.append
+
+    def counted(statuses):
+        calls.append(statuses)
+        append(statuses)
+
+    lg.append = counted
+    return calls
+
+
+def test_delivery_partitions_run_exactly_once(spark, tmp_path):
+    batch = _batch(spark)
+    lg = DeliveryLedger(spark, str(tmp_path / "ledger"))
+    marker_dir = tmp_path / "sends"
+    marker_dir.mkdir()
+
+    deliver_with_ledger(batch, CONN, lg, _marking_deliver(spark, marker_dir))
     sends = sorted(p.name for p in marker_dir.iterdir())
     # every message sent exactly once (all markers end in .0)
     assert len(sends) == 8 and all(s.endswith(".0") for s in sends), sends
     latest = {r.job_id: r.state for r in lg.latest_state().collect()}
     assert sum(1 for s in latest.values() if s == "succeeded") == 4
     assert sum(1 for s in latest.values() if s == "failed") == 4
+
+
+def test_mixed_outcome_batch_is_one_ledger_append(spark, tmp_path):
+    """4 delivered + 4 failed outcomes land in ONE append, with the
+    state and error chosen per row."""
+    lg = DeliveryLedger(spark, str(tmp_path / "ledger"))
+    marker_dir = tmp_path / "sends"
+    marker_dir.mkdir()
+    calls = _count_appends(lg)
+
+    deliver_with_ledger(_batch(spark), CONN, lg, _marking_deliver(spark, marker_dir))
+    assert len(calls) == 1
+    rows = {r.job_id: (r.state, r.error_response, r.attempt, r.connection_id)
+            for r in lg._read().collect()}
+    assert rows == {
+        f"m{i}": ("succeeded", "", 1, CONN.id) if i % 2 == 0 else ("failed", "boom", 1, CONN.id)
+        for i in range(8)
+    }
+
+
+def test_fully_deduped_batch_appends_nothing(spark, tmp_path):
+    """A replayed batch whose ids all succeeded already makes no ledger
+    append, so no empty parquet part joins the ledger."""
+    lg = DeliveryLedger(spark, str(tmp_path / "ledger"))
+    batch = _batch(spark)
+
+    def deliver_all(df):
+        return df.select(
+            "message_id", F.lit(True).alias("delivered"), F.lit(200).alias("status"), F.lit("").alias("error")
+        )
+
+    deliver_with_ledger(batch, CONN, lg, deliver_all)
+    parts = sorted(p.name for p in (tmp_path / "ledger").glob("part-*"))
+    calls = _count_appends(lg)
+    deliver_with_ledger(batch, CONN, lg, deliver_all)
+    assert calls == []
+    assert sorted(p.name for p in (tmp_path / "ledger").glob("part-*")) == parts
+    assert lg.processed_job_ids().count() == 8
 
 
 def test_outcomes_survive_cache_eviction(spark, tmp_path):

@@ -201,6 +201,64 @@ def test_streaming_pipeline_no_loss_across_restart(spark, tmp_path):
     assert lg.processed_job_ids().count() == 3
 
 
+def test_stream_builds_transform_once_per_start(spark, tmp_path, monkeypatch):
+    """The transform is built on the streaming frame once per query
+    start, not once per micro-batch. Events without a messageId still
+    get fresh uuid() ids in every micro-batch, and the delivered file
+    and the ledger record the same ids."""
+    import kassette_server_spark.streaming.pipeline as sp
+
+    builds = []
+    transform = sp.transform_micro_batch
+
+    def counted(*a, **kw):
+        builds.append(a[0].isStreaming)
+        return transform(*a, **kw)
+
+    monkeypatch.setattr(sp, "transform_micro_batch", counted)
+    src_dir = tmp_path / "in"
+    src_dir.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "delivered")
+    lg = DeliveryLedger(spark, str(tmp_path / "ledger"))
+
+    def deliver(df):
+        df.select("message_id", "event_json").write.mode("append").parquet(out_dir)
+        return df.select(
+            "message_id", F.lit(True).alias("delivered"), F.lit(200).alias("status"), F.lit("").alias("error")
+        )
+
+    def land(name, first):
+        events = [{**ev(i), "messageId": ""} for i in range(first, first + 3)]
+        (src_dir / name).write_text(json.dumps({"payload": envelope(events)}) + "\n")
+
+    # one query over two micro-batches (each batch reads one file from
+    # the same partition index, where a per-query uuid seed would repeat)
+    q = run_connection_stream(spark, CONN, str(src_dir), ckpt, lg, deliver, available_now=False)
+    try:
+        for k in range(2):
+            land(f"b{k}.json", 3 * k)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 2 and builds == [True]
+
+    # a restart builds it once more
+    land("b2.json", 6)
+    q2 = run_connection_stream(spark, CONN, str(src_dir), ckpt, lg, deliver)
+    q2.awaitTermination(60)
+    assert builds == [True, True]
+
+    delivered = [(r.message_id, json.loads(r.event_json)["event_id"])
+                 for r in spark.read.parquet(out_dir).collect()]
+    ids = [m for m, _ in delivered]
+    assert sorted(e for _, e in delivered) == [f"e{i}" for i in range(9)]
+    assert len(set(ids)) == 9 and all(ids)
+    succeeded = {r.job_id for r in lg.processed_job_ids().collect()}
+    assert succeeded == set(ids)
+
+
 # --- sessionization ----------------------------------------------------------
 
 
