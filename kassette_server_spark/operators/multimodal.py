@@ -29,6 +29,9 @@ schemas. Two tiers of codecs:
   transcodes (q230+), the audio codecs (G.711/IMA, q246+), and the
   video resize + re-mux chain (mjpeg_avi_resample_stats, q260).
 
+Every wrapper that derives its rows from the id alone goes through
+`_map_ids`, the tier's single per-id Spark shape.
+
 Scale notes (100 TB of media):
 - Binary payloads ride in parquet/Arrow pages; mapInPandas streams
   RECORD batches so one oversized blob can't OOM an executor — cap
@@ -39,7 +42,7 @@ Scale notes (100 TB of media):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -47,6 +50,30 @@ from pyspark.sql import DataFrame
 from .layout import ensure_scan_parallelism as _spread
 
 META_SCHEMA = "doc_id long, n_bytes long, width long, height long, fmt string"
+
+
+def _map_ids(
+    df: DataFrame,
+    id_col: str,
+    rows: Callable[[int], Iterator[tuple]],
+    schema: str,
+) -> DataFrame:
+    """One Arrow-batched mapInPandas over ids behind the input-width
+    guard (layout.ensure_scan_parallelism — no-op on many-split
+    corpora), no per-key shuffle: ``rows(i)`` yields the output tuples
+    for id ``i`` (one per doc, or one per frame), in the column order
+    ``schema`` declares; the pandas column names are read off
+    ``schema`` so the two cannot drift apart."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [row for v in pdf[id_col] for row in rows(int(v))],
+                columns=columns,
+            )
+
+    return _spread(df).mapInPandas(batches, schema=schema)
 
 
 def _fake_decode(payload: bytes) -> dict:
@@ -786,64 +813,54 @@ def png_depth_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFram
     behind the input-width guard, no per-key shuffle. Output: (doc_id, width, height,
     sum16, sum16i, sum4, sum2, sum1, sum_pal)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pal4 = bytes(
-            v for k in range(16) for v in ((17 * k) % 256, (29 * k) % 256, (53 * k) % 256)
+    pal4 = bytes(
+        v for k in range(16) for v in ((17 * k) % 256, (29 * k) % 256, (53 * k) % 256)
+    )
+
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        xs = np.arange(w, dtype=np.int64)[None, :]
+        ys = np.arange(h, dtype=np.int64)[:, None]
+        g16 = ((1000 * i + 257 * xs + 991 * ys) % 65536).astype(np.uint16)
+        pay = encode_png_deep(w, h, g16.astype(">u2").tobytes(), 16)
+        dw, dh, dch, dd, spx = decode_png_pixels_deep(pay)
+        assert (dw, dh, dch, dd) == (w, h, 1, 16)
+        sum16 = int(np.frombuffer(spx, dtype=">u2").sum(dtype=np.int64))
+
+        rgb16 = np.stack(
+            [(1000 * i + 257 * xs + 991 * ys + 7777 * c) % 65536 for c in range(3)],
+            axis=-1,
+        ).astype(np.uint16)
+        pay = encode_png_deep(
+            w, h, rgb16.astype(">u2").tobytes(), 16, channels=3, interlace=True
         )
-        for pdf in it:
-            rows = []
-            for vv in pdf[id_col]:
-                i = int(vv)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                g16 = ((1000 * i + 257 * xs + 991 * ys) % 65536).astype(np.uint16)
-                pay = encode_png_deep(w, h, g16.astype(">u2").tobytes(), 16)
-                dw, dh, dch, dd, spx = decode_png_pixels_deep(pay)
-                assert (dw, dh, dch, dd) == (w, h, 1, 16)
-                sum16 = int(np.frombuffer(spx, dtype=">u2").sum(dtype=np.int64))
+        dw, dh, dch, dd, spx = decode_png_pixels_deep(pay)
+        assert (dw, dh, dch, dd) == (w, h, 3, 16)
+        sum16i = int(np.frombuffer(spx, dtype=">u2").sum(dtype=np.int64))
 
-                rgb16 = np.stack(
-                    [(1000 * i + 257 * xs + 991 * ys + 7777 * c) % 65536 for c in range(3)],
-                    axis=-1,
-                ).astype(np.uint16)
-                pay = encode_png_deep(
-                    w, h, rgb16.astype(">u2").tobytes(), 16, channels=3, interlace=True
-                )
-                dw, dh, dch, dd, spx = decode_png_pixels_deep(pay)
-                assert (dw, dh, dch, dd) == (w, h, 3, 16)
-                sum16i = int(np.frombuffer(spx, dtype=">u2").sum(dtype=np.int64))
+        subs = []
+        for d, form in ((4, "x2y"), (2, "xy"), (1, "xy")):
+            if form == "x2y":
+                s = ((i + xs + 2 * ys) % (1 << d)).astype(np.uint8)
+            else:
+                s = ((i + xs + ys) % (1 << d)).astype(np.uint8)
+            pay = encode_png_deep(w, h, s.tobytes(), d)
+            dw, dh, dch, dd2, spx = decode_png_pixels_deep(pay)
+            assert (dw, dh, dch, dd2) == (w, h, 1, d)
+            subs.append(int(np.frombuffer(spx, dtype=np.uint8).sum(dtype=np.int64)))
+        sum4, sum2, sum1 = subs
 
-                subs = []
-                for d, form in ((4, "x2y"), (2, "xy"), (1, "xy")):
-                    if form == "x2y":
-                        s = ((i + xs + 2 * ys) % (1 << d)).astype(np.uint8)
-                    else:
-                        s = ((i + xs + ys) % (1 << d)).astype(np.uint8)
-                    pay = encode_png_deep(w, h, s.tobytes(), d)
-                    dw, dh, dch, dd2, spx = decode_png_pixels_deep(pay)
-                    assert (dw, dh, dch, dd2) == (w, h, 1, d)
-                    subs.append(int(np.frombuffer(spx, dtype=np.uint8).sum(dtype=np.int64)))
-                sum4, sum2, sum1 = subs
+        idx = ((i + xs + 2 * ys) % 16).astype(np.uint8)
+        pay = encode_png_deep(w, h, idx.tobytes(), 4, palette=pal4)
+        dw, dh, dch, dd2, spx = decode_png_pixels_deep(pay)
+        assert (dw, dh, dch, dd2) == (w, h, 3, 8)
+        sum_pal = int(np.frombuffer(spx, dtype=np.uint8).sum(dtype=np.int64))
 
-                idx = ((i + xs + 2 * ys) % 16).astype(np.uint8)
-                pay = encode_png_deep(w, h, idx.tobytes(), 4, palette=pal4)
-                dw, dh, dch, dd2, spx = decode_png_pixels_deep(pay)
-                assert (dw, dh, dch, dd2) == (w, h, 3, 8)
-                sum_pal = int(np.frombuffer(spx, dtype=np.uint8).sum(dtype=np.int64))
+        yield i, w, h, sum16, sum16i, sum4, sum2, sum1, sum_pal
 
-                rows.append((i, w, h, sum16, sum16i, sum4, sum2, sum1, sum_pal))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "sum16", "sum16i",
-                    "sum4", "sum2", "sum1", "sum_pal",
-                ],
-            )
-
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, sum16 long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, width long, height long, sum16 long, "
         "sum16i long, sum4 long, sum2 long, sum1 long, sum_pal long",
     )
 
@@ -2426,6 +2443,54 @@ def decode_jpeg_pixels(
     return width, height, ncomp, cropped.tobytes()
 
 
+# Subsampling mode → its MCU in pixels (width, height). Each JPEG
+# round-trip wrapper below keeps its image constant per MCU-sized tile:
+# the subset on which the lossy path (box downsample, DCT, flat-8
+# quant) is bit-exact, so the decoded channel sums stay closed-form.
+_MCU = {"444": (8, 8), "420": (16, 16), "422": (16, 8), "411": (32, 8)}
+_JPEG_MCU_SCHEMA = (
+    "doc_id long, width long, height long, n_mcus long, "
+    "sum_c0 long, sum_c1 long, sum_c2 long"
+)
+_JPEG_SCAN_SCHEMA = (
+    "doc_id long, width long, height long, n_scans long, "
+    "sum_c0 long, sum_c1 long, sum_c2 long"
+)
+
+
+def _tile_pixels(i: int, w: int, h: int, tw: int, th: int, channels: int) -> bytes:
+    """Row-major, channel-interleaved pixels of the codec tier's
+    tile-constant image: ch_c(x, y) = (i + c + 3·(x div tw) +
+    5·(y div th)) mod 256; 1x1 tiles give the gradient (i + 3x + 5y)."""
+    tx = np.arange(w)[None, :] // tw
+    ty = np.arange(h)[:, None] // th
+    return (
+        np.stack([(i + c + 3 * tx + 5 * ty) % 256 for c in range(channels)], axis=-1)
+        .astype(np.uint8)
+        .tobytes()
+    )
+
+
+def _jpeg_tile_roundtrip(
+    i: int, w: int, h: int, channels: int, subsampling: str = "444",
+    progressive: bool = False, **encode_opts,
+) -> tuple[bytes, int, list[int]]:
+    """Encode id ``i``'s one-MCU-per-tile image (baseline, or SOF2 when
+    ``progressive``), decode it, assert the decoded dims, and return
+    (payload, n_mcus, per-channel pixel sums)."""
+    tw, th = _MCU[subsampling]
+    encode = encode_jpeg_progressive_pixels if progressive else encode_jpeg_pixels
+    pay = encode(
+        w, h, _tile_pixels(i, w, h, tw, th, channels),
+        channels=channels, subsampling=subsampling, **encode_opts,
+    )
+    dw, dh, dch, dpx = decode_jpeg_pixels(pay)
+    assert (dw, dh, dch) == (w, h, channels)
+    a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, channels)
+    n_mcus = ((w + tw - 1) // tw) * ((h + th - 1) // th)
+    return pay, n_mcus, [int(s) for s in a.sum(axis=0, dtype=np.int64)]
+
+
 def jpeg_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """The JPEG member of the real-decode tier: per id, a grayscale
     image whose pixels are CONSTANT within each 8x8 block —
@@ -2444,31 +2509,13 @@ def jpeg_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, width, height, px_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                px = (
-                    (
-                        i
-                        + 3 * (np.arange(w)[None, :] // 8)
-                        + 5 * (np.arange(h)[:, None] // 8)
-                    )
-                    % 256
-                ).astype(np.uint8).tobytes()
-                pay = encode_jpeg_gray_pixels(w, h, px)
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 1)
-                rows.append((i, dw, dh, int(sum(dpx))))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "px_sum"]
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        _, _, (px_sum,) = _jpeg_tile_roundtrip(i, w, h, 1)
+        yield i, w, h, px_sum
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, px_sum long",
+    return _map_ids(
+        df, id_col, rows, "doc_id long, width long, height long, px_sum long"
     )
 
 
@@ -2493,37 +2540,16 @@ def jpeg_restart_roundtrip_stats(
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, width, height, n_restarts, px_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 32, 8 + (i * 3) % 24
-                px = (
-                    (
-                        i
-                        + 3 * (np.arange(w)[None, :] // 8)
-                        + 5 * (np.arange(h)[:, None] // 8)
-                    )
-                    % 256
-                ).astype(np.uint8).tobytes()
-                pay = encode_jpeg_pixels(
-                    w, h, px, channels=1, restart_interval=restart_interval
-                )
-                n_mcus = ((w + 7) // 8) * ((h + 7) // 8)
-                n_restarts = (n_mcus - 1) // restart_interval
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 1)
-                rows.append((i, dw, dh, n_restarts, int(sum(dpx))))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "n_restarts", "px_sum"],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 32, 8 + (i * 3) % 24
+        _, n_mcus, (px_sum,) = _jpeg_tile_roundtrip(
+            i, w, h, 1, restart_interval=restart_interval
+        )
+        yield i, w, h, (n_mcus - 1) // restart_interval, px_sum
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, n_restarts long, "
-        "px_sum long",
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, width long, height long, n_restarts long, px_sum long",
     )
 
 
@@ -2555,45 +2581,14 @@ def jpeg_420_roundtrip_stats(
     corpora), no per-key shuffle. Output: (doc_id, width, height, n_mcus, sum_c0, sum_c1,
     sum_c2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 16 + i % 33, 16 + (i * 3) % 25
-                tx = np.arange(w)[None, :] // 16
-                ty = np.arange(h)[:, None] // 16
-                px = (
-                    np.stack(
-                        [(i + c + 3 * tx + 5 * ty) % 256 for c in range(3)],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                pay = encode_jpeg_pixels(
-                    w, h, px, channels=3,
-                    restart_interval=restart_interval, subsampling="420",
-                )
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                s = a.sum(axis=0, dtype=np.int64)
-                n_mcus = ((w + 15) // 16) * ((h + 15) // 16)
-                rows.append((i, w, h, n_mcus, int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_mcus",
-                    "sum_c0", "sum_c1", "sum_c2",
-                ],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 16 + i % 33, 16 + (i * 3) % 25
+        _, n_mcus, sums = _jpeg_tile_roundtrip(
+            i, w, h, 3, "420", restart_interval=restart_interval
+        )
+        yield i, w, h, n_mcus, *sums
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, n_mcus long, "
-        "sum_c0 long, sum_c1 long, sum_c2 long",
-    )
+    return _map_ids(df, id_col, rows, _JPEG_MCU_SCHEMA)
 
 
 def jpeg_progressive_roundtrip_stats(
@@ -2622,63 +2617,32 @@ def jpeg_progressive_roundtrip_stats(
     corpora), no per-key shuffle. Output: (doc_id, width, height, n_scans, sum_c0, sum_c1,
     sum_c2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 24, 8 + (i * 3) % 16
-                bx = np.arange(w)[None, :] // 8
-                by = np.arange(h)[:, None] // 8
-                px = (
-                    np.stack(
-                        [(i + c + 3 * bx + 5 * by) % 256 for c in range(3)],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 24, 8 + (i * 3) % 16
+        pay, _, sums = _jpeg_tile_roundtrip(i, w, h, 3, progressive=True)
+        # lossy differential leg: progressive == baseline decode
+        # (sampled — see docstring; the fuzzer covers full density)
+        if i % 16 == 0:
+            xs = np.arange(w)[None, :]
+            ys = np.arange(h)[:, None]
+            lossy = (
+                np.stack(
+                    [(i + 7 * xs + 13 * ys + c) % 256 for c in range(3)],
+                    axis=-1,
                 )
-                pay = encode_jpeg_progressive_pixels(w, h, px, channels=3)
-                n_scans = pay.count(b"\xff\xda")
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                s = a.sum(axis=0, dtype=np.int64)
-                # lossy differential leg: progressive == baseline decode
-                # (sampled — see docstring; the fuzzer covers full density)
-                if i % 16 == 0:
-                    xs = np.arange(w)[None, :]
-                    ys = np.arange(h)[:, None]
-                    lossy = (
-                        np.stack(
-                            [(i + 7 * xs + 13 * ys + c) % 256
-                             for c in range(3)],
-                            axis=-1,
-                        )
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-                    base = decode_jpeg_pixels(
-                        encode_jpeg_pixels(w, h, lossy, channels=3)
-                    )
-                    prog = decode_jpeg_pixels(
-                        encode_jpeg_progressive_pixels(w, h, lossy, channels=3)
-                    )
-                    assert base == prog
-                rows.append((i, w, h, n_scans, int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_scans",
-                    "sum_c0", "sum_c1", "sum_c2",
-                ],
+                .astype(np.uint8)
+                .tobytes()
             )
+            base = decode_jpeg_pixels(
+                encode_jpeg_pixels(w, h, lossy, channels=3)
+            )
+            prog = decode_jpeg_pixels(
+                encode_jpeg_progressive_pixels(w, h, lossy, channels=3)
+            )
+            assert base == prog
+        yield i, w, h, pay.count(b"\xff\xda"), *sums
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, n_scans long, "
-        "sum_c0 long, sum_c1 long, sum_c2 long",
-    )
+    return _map_ids(df, id_col, rows, _JPEG_SCAN_SCHEMA)
 
 
 def jpeg_422_roundtrip_stats(
@@ -2702,45 +2666,14 @@ def jpeg_422_roundtrip_stats(
     corpora), no per-key shuffle. Output: (doc_id, width, height, n_mcus, sum_c0, sum_c1,
     sum_c2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 16 + i % 37, 8 + (i * 3) % 21
-                tx = np.arange(w)[None, :] // 16
-                ty = np.arange(h)[:, None] // 8
-                px = (
-                    np.stack(
-                        [(i + c + 3 * tx + 5 * ty) % 256 for c in range(3)],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                pay = encode_jpeg_pixels(
-                    w, h, px, channels=3,
-                    restart_interval=restart_interval, subsampling="422",
-                )
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                s = a.sum(axis=0, dtype=np.int64)
-                n_mcus = ((w + 15) // 16) * ((h + 7) // 8)
-                rows.append((i, w, h, n_mcus, int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_mcus",
-                    "sum_c0", "sum_c1", "sum_c2",
-                ],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 16 + i % 37, 8 + (i * 3) % 21
+        _, n_mcus, sums = _jpeg_tile_roundtrip(
+            i, w, h, 3, "422", restart_interval=restart_interval
+        )
+        yield i, w, h, n_mcus, *sums
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, n_mcus long, "
-        "sum_c0 long, sum_c1 long, sum_c2 long",
-    )
+    return _map_ids(df, id_col, rows, _JPEG_MCU_SCHEMA)
 
 
 def jpeg_channel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2761,39 +2694,14 @@ def jpeg_channel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     corpora), no per-key shuffle. Output: (doc_id, n_px, sum_c0, sum_c1, sum_c2,
     mean_c0..mean_c2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                bx = np.arange(w)[None, :] // 8
-                by = np.arange(h)[:, None] // 8
-                px = (
-                    np.stack(
-                        [(i + c + 3 * bx + 5 * by) % 256 for c in range(3)],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                pay = encode_jpeg_pixels(
-                    w, h, px, channels=3, restart_interval=2
-                )
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                s = a.sum(axis=0, dtype=np.int64)
-                rows.append((i, w * h, int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_px", "sum_c0", "sum_c1", "sum_c2"],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        _, _, sums = _jpeg_tile_roundtrip(i, w, h, 3, restart_interval=2)
+        yield i, w * h, *sums
 
-    out = _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, n_px long, sum_c0 long, sum_c1 long, "
-        "sum_c2 long",
+    out = _map_ids(
+        df, id_col, rows,
+        "doc_id long, n_px long, sum_c0 long, sum_c1 long, sum_c2 long",
     )
     from pyspark.sql import functions as F
 
@@ -2840,37 +2748,21 @@ def png_to_jpeg_transcode_stats(df: DataFrame, id_col: str = "doc_id") -> DataFr
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, width, height, px_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                px = (
-                    (
-                        i
-                        + 3 * (np.arange(w)[None, :] // 8)
-                        + 5 * (np.arange(h)[:, None] // 8)
-                    )
-                    % 256
-                ).astype(np.uint8).tobytes()
-                png = encode_png_filtered(
-                    w, h, px, channels=1,
-                    filters=[(i + y) % 5 for y in range(h)],
-                )
-                jpg = transcode_png_to_jpeg(png)
-                meta = parse_jpeg_meta(jpg)
-                dw, dh, dch, dpx = decode_jpeg_pixels(jpg)
-                assert (dw, dh, dch) == (w, h, 1)
-                assert (meta["width"], meta["height"]) == (w, h)
-                rows.append((i, dw, dh, int(sum(dpx))))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "px_sum"]
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        png = encode_png_filtered(
+            w, h, _tile_pixels(i, w, h, 8, 8, 1), channels=1,
+            filters=[(i + y) % 5 for y in range(h)],
+        )
+        jpg = transcode_png_to_jpeg(png)
+        meta = parse_jpeg_meta(jpg)
+        dw, dh, dch, dpx = decode_jpeg_pixels(jpg)
+        assert (dw, dh, dch) == (w, h, 1)
+        assert (meta["width"], meta["height"]) == (w, h)
+        yield i, dw, dh, int(sum(dpx))
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, px_sum long",
+    return _map_ids(
+        df, id_col, rows, "doc_id long, width long, height long, px_sum long"
     )
 
 
@@ -2890,46 +2782,36 @@ def png_to_jpeg_transcode_rgb_stats(
 
     Output: (doc_id, width, height, sum_r, sum_g, sum_b)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                bx = np.arange(w)[None, :] // 8
-                by = np.arange(h)[:, None] // 8
-                px = (
-                    np.stack(
-                        [
-                            (i + 3 * bx + 5 * by) % 256,  # R
-                            (i + 2 * bx + 7 * by) % 256,  # G
-                            (i + bx + by) % 256,  # B
-                        ],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                png = encode_png_filtered(
-                    w, h, px, channels=3,
-                    filters=[(i + y) % 5 for y in range(h)],
-                )
-                jpg = transcode_png_to_jpeg(png)
-                dw, dh, dch, dpx = decode_jpeg_pixels(jpg)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                sums = a.sum(axis=0, dtype=np.int64)
-                rows.append(
-                    (i, dw, dh, int(sums[0]), int(sums[1]), int(sums[2]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"],
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        bx = np.arange(w)[None, :] // 8
+        by = np.arange(h)[:, None] // 8
+        px = (
+            np.stack(
+                [
+                    (i + 3 * bx + 5 * by) % 256,  # R
+                    (i + 2 * bx + 7 * by) % 256,  # G
+                    (i + bx + by) % 256,  # B
+                ],
+                axis=-1,
             )
+            .astype(np.uint8)
+            .tobytes()
+        )
+        png = encode_png_filtered(
+            w, h, px, channels=3,
+            filters=[(i + y) % 5 for y in range(h)],
+        )
+        jpg = transcode_png_to_jpeg(png)
+        dw, dh, dch, dpx = decode_jpeg_pixels(jpg)
+        assert (dw, dh, dch) == (w, h, 3)
+        a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
+        sums = a.sum(axis=0, dtype=np.int64)
+        yield i, dw, dh, int(sums[0]), int(sums[1]), int(sums[2])
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, width long, height long, "
         "sum_r long, sum_g long, sum_b long",
     )
 
@@ -3021,24 +2903,17 @@ def encode_media_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the full signature/CRC/marker-walk path, and an oracle can
     recompute the expected metadata from the id formulas alone."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for v in pdf[id_col]:
-                i = int(v)
-                if i % 3 == 0:
-                    payloads.append(encode_png(8 + i % 32, 8 + (i * 3) % 24))
-                elif i % 3 == 1:
-                    payloads.append(encode_wav(256 + i % 1024, 8000 + 100 * (i % 80)))
-                else:
-                    payloads.append(
-                        encode_jpeg(
-                            16 + i % 100, 16 + (i * 7) % 100, progressive=i % 2 == 0
-                        )
-                    )
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": payloads})
+    def rows(i: int) -> Iterator[tuple]:
+        if i % 3 == 0:
+            yield i, encode_png(8 + i % 32, 8 + (i * 3) % 24)
+        elif i % 3 == 1:
+            yield i, encode_wav(256 + i % 1024, 8000 + 100 * (i % 80))
+        else:
+            yield i, encode_jpeg(
+                16 + i % 100, 16 + (i * 7) % 100, progressive=i % 2 == 0
+            )
 
-    return _spread(df).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _map_ids(df, id_col, rows, f"{id_col} long, payload binary")
 
 
 # --- GIF (stdlib-only, real container structure) ---------------------------
@@ -3324,28 +3199,17 @@ def gif_to_png_transcode_stats(
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, width, height, px_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                px = (
-                    (i + 3 * np.arange(w)[None, :] + 5 * np.arange(h)[:, None])
-                    % 256
-                ).astype(np.uint8).tobytes()
-                gif = encode_gif_pixels(w, h, px, interlaced=bool(i % 2))
-                png = transcode_gif_to_png(gif)
-                dw, dh, ch, rgb = decode_png_pixels(png)
-                assert (dw, dh, ch) == (w, h, 3)
-                rows.append((i, dw, dh, int(sum(rgb))))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "px_sum"]
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        px = _tile_pixels(i, w, h, 1, 1, 1)
+        gif = encode_gif_pixels(w, h, px, interlaced=bool(i % 2))
+        png = transcode_gif_to_png(gif)
+        dw, dh, ch, rgb = decode_png_pixels(png)
+        assert (dw, dh, ch) == (w, h, 3)
+        yield i, dw, dh, int(sum(rgb))
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, px_sum long",
+    return _map_ids(
+        df, id_col, rows, "doc_id long, width long, height long, px_sum long"
     )
 
 
@@ -3363,27 +3227,16 @@ def gif_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, width, height, px_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                px = (
-                    (i + 3 * np.arange(w)[None, :] + 5 * np.arange(h)[:, None])
-                    % 256
-                ).astype(np.uint8).tobytes()
-                pay = encode_gif_pixels(w, h, px)
-                dw, dh, out = decode_gif_pixels(pay)
-                assert (dw, dh) == (w, h) and out == px
-                rows.append((i, dw, dh, int(sum(out))))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "px_sum"]
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        px = _tile_pixels(i, w, h, 1, 1, 1)
+        pay = encode_gif_pixels(w, h, px)
+        dw, dh, out = decode_gif_pixels(pay)
+        assert (dw, dh) == (w, h) and out == px
+        yield i, dw, dh, int(sum(out))
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, px_sum long",
+    return _map_ids(
+        df, id_col, rows, "doc_id long, width long, height long, px_sum long"
     )
 
 
@@ -3512,29 +3365,22 @@ def encode_media_payloads_ext(df: DataFrame, id_col: str = "doc_id") -> DataFram
     24 bpp). Same contract: real containers, oracle-computable
     metadata from the id formulas alone."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for v in pdf[id_col]:
-                i = int(v)
-                m = i % 5
-                if m == 0:
-                    payloads.append(encode_png(8 + i % 32, 8 + (i * 3) % 24))
-                elif m == 1:
-                    payloads.append(encode_wav(256 + i % 1024, 8000 + 100 * (i % 80)))
-                elif m == 2:
-                    payloads.append(
-                        encode_jpeg(
-                            16 + i % 100, 16 + (i * 7) % 100, progressive=i % 2 == 0
-                        )
-                    )
-                elif m == 3:
-                    payloads.append(encode_gif(4 + i % 64, 4 + (i * 5) % 48))
-                else:
-                    payloads.append(encode_bmp(4 + (i * 3) % 50, 4 + i % 40))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": payloads})
+    def rows(i: int) -> Iterator[tuple]:
+        m = i % 5
+        if m == 0:
+            yield i, encode_png(8 + i % 32, 8 + (i * 3) % 24)
+        elif m == 1:
+            yield i, encode_wav(256 + i % 1024, 8000 + 100 * (i % 80))
+        elif m == 2:
+            yield i, encode_jpeg(
+                16 + i % 100, 16 + (i * 7) % 100, progressive=i % 2 == 0
+            )
+        elif m == 3:
+            yield i, encode_gif(4 + i % 64, 4 + (i * 5) % 48)
+        else:
+            yield i, encode_bmp(4 + (i * 3) % 50, 4 + i % 40)
 
-    return _spread(df).mapInPandas(batches, schema=f"{id_col} long, payload binary")
+    return _map_ids(df, id_col, rows, f"{id_col} long, payload binary")
 
 
 # --- media transforms (round 9): resize / downsample / frame-sample ---------
@@ -3696,29 +3542,18 @@ def wav_resample_stats(
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, n_in, n_out, rate_out, sum_out)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                n = 64 + i % 64
-                s = (((i + 7 * np.arange(n, dtype=np.int64)) % 4001) - 2000)
-                wav = encode_wav(n, 48000, 1, s.astype("<i2").tobytes())
-                rz = resample_wav_payload(wav, up, down)
-                meta = parse_wav_meta(rz)
-                out = parse_wav_samples(rz)
-                rows.append(
-                    (i, n, len(out), meta["sample_rate"], int(sum(out)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_in", "n_out", "rate_out", "sum_out"],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        n = 64 + i % 64
+        s = (((i + 7 * np.arange(n, dtype=np.int64)) % 4001) - 2000)
+        wav = encode_wav(n, 48000, 1, s.astype("<i2").tobytes())
+        rz = resample_wav_payload(wav, up, down)
+        meta = parse_wav_meta(rz)
+        out = parse_wav_samples(rz)
+        yield i, n, len(out), meta["sample_rate"], int(sum(out))
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, n_in long, n_out long, rate_out long, "
-        "sum_out long",
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, n_in long, n_out long, rate_out long, sum_out long",
     )
 
 
@@ -3823,42 +3658,32 @@ def transform_media_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     kind has no such field.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                m = i % 3
-                if m == 0:
-                    w, h = 8 + i % 16, 8 + (i * 3) % 12
-                    bmp = encode_bmp_pixels(w, h, formula_bmp_pixels(i, w, h))
-                    rz = resize_bmp_payload(bmp, w // 2, h // 2)
-                    meta = parse_bmp_meta(rz)
-                    rows.append((i, "bmp", meta["width"], meta["height"],
-                                 None, None, None, None))
-                elif m == 1:
-                    wav = encode_wav(256 + i % 1024, 8000 + 100 * (i % 80))
-                    ds = downsample_wav_payload(wav, 2)
-                    meta = parse_wav_meta(ds)
-                    rows.append((i, "wav", None, None, None,
-                                 meta["sample_rate"], meta["n_samples"],
-                                 meta["duration_ms"]))
-                else:
-                    gif = encode_gif(16 + i % 32, 16 + (i * 5) % 32,
-                                     1 + i % 8)
-                    sm = sample_gif_frames_payload(gif, 2)
-                    meta = parse_gif_meta(sm)
-                    rows.append((i, "gif", meta["width"], meta["height"],
-                                 meta["n_frames"], None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "kind", "width", "height", "n_frames",
-                         "sample_rate", "n_samples", "duration_ms"],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        m = i % 3
+        if m == 0:
+            w, h = 8 + i % 16, 8 + (i * 3) % 12
+            bmp = encode_bmp_pixels(w, h, formula_bmp_pixels(i, w, h))
+            rz = resize_bmp_payload(bmp, w // 2, h // 2)
+            meta = parse_bmp_meta(rz)
+            yield (i, "bmp", meta["width"], meta["height"],
+                   None, None, None, None)
+        elif m == 1:
+            wav = encode_wav(256 + i % 1024, 8000 + 100 * (i % 80))
+            ds = downsample_wav_payload(wav, 2)
+            meta = parse_wav_meta(ds)
+            yield (i, "wav", None, None, None,
+                   meta["sample_rate"], meta["n_samples"], meta["duration_ms"])
+        else:
+            gif = encode_gif(16 + i % 32, 16 + (i * 5) % 32,
+                             1 + i % 8)
+            sm = sample_gif_frames_payload(gif, 2)
+            meta = parse_gif_meta(sm)
+            yield (i, "gif", meta["width"], meta["height"],
+                   meta["n_frames"], None, None, None)
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, kind string, width long, height long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, kind string, width long, height long, "
         "n_frames long, sample_rate long, n_samples long, duration_ms long",
     )
 
@@ -3884,27 +3709,16 @@ def png_resize_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Output: (doc_id, width, height, px_sum) — post-resize values read
     back off the re-encoded bytes."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                px = (
-                    (i + 3 * np.arange(w)[None, :] + 5 * np.arange(h)[:, None])
-                    % 256
-                ).astype(np.uint8).tobytes()
-                rz = resize_png_payload(encode_png(w, h, px), w // 2, h // 2)
-                meta = parse_png_meta(rz)
-                _, _, _, rpx = decode_png_pixels(rz)
-                rows.append((i, meta["width"], meta["height"], sum(rpx)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "px_sum"]
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        px = _tile_pixels(i, w, h, 1, 1, 1)
+        rz = resize_png_payload(encode_png(w, h, px), w // 2, h // 2)
+        meta = parse_png_meta(rz)
+        _, _, _, rpx = decode_png_pixels(rz)
+        yield i, meta["width"], meta["height"], sum(rpx)
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, px_sum long",
+    return _map_ids(
+        df, id_col, rows, "doc_id long, width long, height long, px_sum long"
     )
 
 
@@ -3928,45 +3742,37 @@ def png_resize_rgb_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle. Output: (doc_id, width, height, sum_r, sum_g, sum_b)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                px = (
-                    np.stack(
-                        [
-                            (i + xs + 2 * ys) % 256,  # R
-                            (i + 2 * xs + ys) % 256,  # G
-                            (i + xs + ys) % 256,  # B
-                        ],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                src = encode_png_filtered(
-                    w, h, px, channels=3,
-                    filters=[(i + y) % 5 for y in range(h)],
-                )
-                rz = resize_png_payload(src, w // 2, h // 2)
-                meta = parse_png_meta(rz)
-                nw, nh, ch, rpx = decode_png_pixels(rz)
-                assert (nw, nh, ch) == (meta["width"], meta["height"], 3)
-                a = np.frombuffer(rpx, dtype=np.uint8).reshape(-1, 3)
-                sums = a.sum(axis=0, dtype=np.int64)
-                rows.append((i, nw, nh, int(sums[0]), int(sums[1]), int(sums[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"],
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        xs = np.arange(w)[None, :]
+        ys = np.arange(h)[:, None]
+        px = (
+            np.stack(
+                [
+                    (i + xs + 2 * ys) % 256,  # R
+                    (i + 2 * xs + ys) % 256,  # G
+                    (i + xs + ys) % 256,  # B
+                ],
+                axis=-1,
             )
+            .astype(np.uint8)
+            .tobytes()
+        )
+        src = encode_png_filtered(
+            w, h, px, channels=3,
+            filters=[(i + y) % 5 for y in range(h)],
+        )
+        rz = resize_png_payload(src, w // 2, h // 2)
+        meta = parse_png_meta(rz)
+        nw, nh, ch, rpx = decode_png_pixels(rz)
+        assert (nw, nh, ch) == (meta["width"], meta["height"], 3)
+        a = np.frombuffer(rpx, dtype=np.uint8).reshape(-1, 3)
+        sums = a.sum(axis=0, dtype=np.int64)
+        yield i, nw, nh, int(sums[0]), int(sums[1]), int(sums[2])
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, width long, height long, "
         "sum_r long, sum_g long, sum_b long",
     )
 
@@ -3996,54 +3802,47 @@ def image_channel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Output: (doc_id, n_px, sum_b, sum_g, sum_r, mean_b, mean_g,
     mean_r)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                bmp = encode_bmp_pixels(w, h, formula_bmp_pixels(i, w, h))
-                s = bmp_channel_stats(bmp)
-                if i % 16 == 0:
-                    # sampled cross-codec tripwire (ADVICE r11): same
-                    # pixels as a top-down RGB PNG (channel sums are
-                    # row-order-invariant, so the BMP's bottom-up y
-                    # works verbatim); decode must agree with the BMP
-                    # walk. 1/16 of rows — the dedicated q232/q235
-                    # specs carry the full-coverage PNG paths.
-                    xs = np.arange(w)[None, :]
-                    ys = np.arange(h)[:, None]
-                    png_px = (
-                        np.stack(
-                            [
-                                (i + xs + 2 * ys) % 256,  # R
-                                (i + 2 * xs + ys) % 256,  # G
-                                (i + xs + ys) % 256,  # B
-                            ],
-                            axis=-1,
-                        )
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-                    _, _, ch, rpx = decode_png_pixels(
-                        encode_png(w, h, png_px, channels=3)
-                    )
-                    a = np.frombuffer(rpx, dtype=np.uint8).reshape(-1, 3)
-                    psums = a.sum(axis=0, dtype=np.int64)
-                    if (int(psums[2]), int(psums[1]), int(psums[0])) != (
-                        s["sum_b"], s["sum_g"], s["sum_r"],
-                    ):
-                        raise ValueError(
-                            f"BMP/PNG channel-sum mismatch for id {i}"
-                        )
-                rows.append((i, s["n_px"], s["sum_b"], s["sum_g"], s["sum_r"]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_px", "sum_b", "sum_g", "sum_r"]
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        bmp = encode_bmp_pixels(w, h, formula_bmp_pixels(i, w, h))
+        s = bmp_channel_stats(bmp)
+        if i % 16 == 0:
+            # sampled cross-codec tripwire (ADVICE r11): same
+            # pixels as a top-down RGB PNG (channel sums are
+            # row-order-invariant, so the BMP's bottom-up y
+            # works verbatim); decode must agree with the BMP
+            # walk. 1/16 of rows — the dedicated q232/q235
+            # specs carry the full-coverage PNG paths.
+            xs = np.arange(w)[None, :]
+            ys = np.arange(h)[:, None]
+            png_px = (
+                np.stack(
+                    [
+                        (i + xs + 2 * ys) % 256,  # R
+                        (i + 2 * xs + ys) % 256,  # G
+                        (i + xs + ys) % 256,  # B
+                    ],
+                    axis=-1,
+                )
+                .astype(np.uint8)
+                .tobytes()
             )
+            _, _, ch, rpx = decode_png_pixels(
+                encode_png(w, h, png_px, channels=3)
+            )
+            a = np.frombuffer(rpx, dtype=np.uint8).reshape(-1, 3)
+            psums = a.sum(axis=0, dtype=np.int64)
+            if (int(psums[2]), int(psums[1]), int(psums[0])) != (
+                s["sum_b"], s["sum_g"], s["sum_r"],
+            ):
+                raise ValueError(
+                    f"BMP/PNG channel-sum mismatch for id {i}"
+                )
+        yield i, s["n_px"], s["sum_b"], s["sum_g"], s["sum_r"]
 
-    out = _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, n_px long, sum_b long, sum_g long, sum_r long",
+    out = _map_ids(
+        df, id_col, rows,
+        "doc_id long, n_px long, sum_b long, sum_g long, sum_r long",
     )
     from pyspark.sql import functions as F
 
@@ -4108,49 +3907,32 @@ def audio_frame_features(
     zero_crossings).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                n = 512 + i % 512
-                raw = b"".join(
-                    struct.pack("<h", (((i + t) * 257) % 32768) - 16384)
-                    for t in range(n)
-                )
-                samples = parse_wav_samples(encode_wav(n, 16000, 1, raw))
-                for f0 in range(0, n, frame):
-                    chunk = samples[f0 : f0 + frame]
-                    zc = sum(
-                        1
-                        for a, b in zip(chunk, chunk[1:])
-                        if (a < 0) != (b < 0)
-                    )
-                    rows.append(
-                        (
-                            i,
-                            f0 // frame,
-                            len(chunk),
-                            sum(abs(s) for s in chunk),
-                            sum(s * s for s in chunk),
-                            zc,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "frame_id",
-                    "n_samples",
-                    "sum_abs",
-                    "sum_sq",
-                    "zero_crossings",
-                ],
+    def rows(i: int) -> Iterator[tuple]:
+        n = 512 + i % 512
+        raw = b"".join(
+            struct.pack("<h", (((i + t) * 257) % 32768) - 16384)
+            for t in range(n)
+        )
+        samples = parse_wav_samples(encode_wav(n, 16000, 1, raw))
+        for f0 in range(0, n, frame):
+            chunk = samples[f0 : f0 + frame]
+            zc = sum(
+                1
+                for a, b in zip(chunk, chunk[1:])
+                if (a < 0) != (b < 0)
+            )
+            yield (
+                i,
+                f0 // frame,
+                len(chunk),
+                sum(abs(s) for s in chunk),
+                sum(s * s for s in chunk),
+                zc,
             )
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, frame_id long, n_samples long, sum_abs long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, frame_id long, n_samples long, sum_abs long, "
         "sum_sq long, zero_crossings long",
     )
 
@@ -4259,45 +4041,33 @@ def g711_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     corpora), no per-key shuffle. Output: (doc_id, n, mu_code_sum, mu_decoded_sum,
     a_code_sum, a_decoded_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        j = np.arange(64, dtype=np.int64)
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
-                mc = mulaw_encode(s)
-                md = mulaw_decode(mc)
-                ac = alaw_encode(s)
-                ad = alaw_decode(ac)
-                # canonical-form self-check in-path: re-encoding the
-                # decoded signal must reproduce the byte stream (A-law
-                # exactly; μ-law up to its negative-zero quirk — code
-                # 0x7F decodes to 0, which re-encodes as +0 = 0xFF —
-                # so μ-law checks VALUE idempotence instead)
-                assert np.array_equal(mulaw_decode(mulaw_encode(md)), md)
-                assert np.array_equal(alaw_encode(ad), ac)
-                rows.append(
-                    (
-                        i,
-                        64,
-                        int(mc.astype(np.int64).sum()),
-                        int(md.astype(np.int64).sum()),
-                        int(ac.astype(np.int64).sum()),
-                        int(ad.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n", "mu_code_sum", "mu_decoded_sum",
-                    "a_code_sum", "a_decoded_sum",
-                ],
-            )
+    j = np.arange(64, dtype=np.int64)
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, n long, mu_code_sum long, mu_decoded_sum long, "
+    def rows(i: int) -> Iterator[tuple]:
+        s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
+        mc = mulaw_encode(s)
+        md = mulaw_decode(mc)
+        ac = alaw_encode(s)
+        ad = alaw_decode(ac)
+        # canonical-form self-check in-path: re-encoding the
+        # decoded signal must reproduce the byte stream (A-law
+        # exactly; μ-law up to its negative-zero quirk — code
+        # 0x7F decodes to 0, which re-encodes as +0 = 0xFF —
+        # so μ-law checks VALUE idempotence instead)
+        assert np.array_equal(mulaw_decode(mulaw_encode(md)), md)
+        assert np.array_equal(alaw_encode(ad), ac)
+        yield (
+            i,
+            64,
+            int(mc.astype(np.int64).sum()),
+            int(md.astype(np.int64).sum()),
+            int(ac.astype(np.int64).sum()),
+            int(ad.astype(np.int64).sum()),
+        )
+
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, n long, mu_code_sum long, mu_decoded_sum long, "
         "a_code_sum long, a_decoded_sum long",
     )
 
@@ -4419,40 +4189,28 @@ def ima_adpcm_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFram
     corpora), no per-key shuffle. Output: (doc_id, n, code_sum, decoded_sum, final_pred,
     final_index)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        j = np.arange(64, dtype=np.int64)
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
-                packed, fpred, fidx = ima_adpcm_encode(s)
-                dec = ima_adpcm_decode(packed, 64)
-                assert int(dec[-1]) == fpred
-                code_sum = sum(
-                    (b & 0x0F) + (b >> 4) for b in packed
-                )
-                rows.append(
-                    (
-                        i,
-                        64,
-                        int(code_sum),
-                        int(dec.astype(np.int64).sum()),
-                        fpred,
-                        fidx,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n", "code_sum", "decoded_sum",
-                    "final_pred", "final_index",
-                ],
-            )
+    j = np.arange(64, dtype=np.int64)
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, n long, code_sum long, decoded_sum long, "
+    def rows(i: int) -> Iterator[tuple]:
+        s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
+        packed, fpred, fidx = ima_adpcm_encode(s)
+        dec = ima_adpcm_decode(packed, 64)
+        assert int(dec[-1]) == fpred
+        code_sum = sum(
+            (b & 0x0F) + (b >> 4) for b in packed
+        )
+        yield (
+            i,
+            64,
+            int(code_sum),
+            int(dec.astype(np.int64).sum()),
+            fpred,
+            fidx,
+        )
+
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, n long, code_sum long, decoded_sum long, "
         "final_pred long, final_index long",
     )
 
@@ -4699,38 +4457,23 @@ def wav_codec_container_stats(df: DataFrame, id_col: str = "doc_id") -> DataFram
     corpora), no per-key shuffle. Output: (doc_id, n, n_blocks, alaw_sum, mulaw_sum,
     ima_sum)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                n = 64 + i % 64
-                j = np.arange(n, dtype=np.int64)
-                s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
-                sums = {}
-                for codec in ("alaw", "mulaw", "ima"):
-                    pay = encode_wav_compressed(
-                        s, codec=codec, block_align=12
-                    )
-                    meta = parse_wav_meta_ext(pay)
-                    assert meta["n_samples"] == n
-                    dec = decode_wav_compressed(pay)
-                    sums[codec] = int(dec.astype(np.int64).sum())
-                n_blocks = (n + 16) // 17  # spb = 1 + (12-4)*2 = 17
-                rows.append(
-                    (i, n, n_blocks, sums["alaw"], sums["mulaw"], sums["ima"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n", "n_blocks",
-                    "alaw_sum", "mulaw_sum", "ima_sum",
-                ],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        n = 64 + i % 64
+        j = np.arange(n, dtype=np.int64)
+        s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
+        sums = {}
+        for codec in ("alaw", "mulaw", "ima"):
+            pay = encode_wav_compressed(s, codec=codec, block_align=12)
+            meta = parse_wav_meta_ext(pay)
+            assert meta["n_samples"] == n
+            dec = decode_wav_compressed(pay)
+            sums[codec] = int(dec.astype(np.int64).sum())
+        n_blocks = (n + 16) // 17  # spb = 1 + (12-4)*2 = 17
+        yield i, n, n_blocks, sums["alaw"], sums["mulaw"], sums["ima"]
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, n long, n_blocks long, alaw_sum long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, n long, n_blocks long, alaw_sum long, "
         "mulaw_sum long, ima_sum long",
     )
 
@@ -4756,43 +4499,30 @@ def compressed_audio_frame_features(
     corpora), no per-key shuffle. Output: (doc_id, codec, frame_id, n_samples, sum_abs,
     sum_sq, zero_crossings)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                n = 64 + i % 64
-                j = np.arange(n, dtype=np.int64)
-                s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
-                for codec, frame in (("mulaw", 16), ("ima", 17)):
-                    pay = encode_wav_compressed(s, codec=codec, block_align=12)
-                    dec = decode_wav_compressed(pay).astype(np.int64)
-                    assert dec.size == n
-                    for f0 in range(0, n, frame):
-                        c = dec[f0 : f0 + frame]
-                        zc = int(((c[:-1] < 0) != (c[1:] < 0)).sum())
-                        rows.append(
-                            (
-                                i,
-                                codec,
-                                f0 // frame,
-                                int(c.size),
-                                int(np.abs(c).sum()),
-                                int((c * c).sum()),
-                                zc,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "codec", "frame_id", "n_samples",
-                    "sum_abs", "sum_sq", "zero_crossings",
-                ],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        n = 64 + i % 64
+        j = np.arange(n, dtype=np.int64)
+        s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
+        for codec, frame in (("mulaw", 16), ("ima", 17)):
+            pay = encode_wav_compressed(s, codec=codec, block_align=12)
+            dec = decode_wav_compressed(pay).astype(np.int64)
+            assert dec.size == n
+            for f0 in range(0, n, frame):
+                c = dec[f0 : f0 + frame]
+                zc = int(((c[:-1] < 0) != (c[1:] < 0)).sum())
+                yield (
+                    i,
+                    codec,
+                    f0 // frame,
+                    int(c.size),
+                    int(np.abs(c).sum()),
+                    int((c * c).sum()),
+                    zc,
+                )
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, codec string, frame_id long, n_samples long, "
+    return _map_ids(
+        df, id_col, rows,
+        "doc_id long, codec string, frame_id long, n_samples long, "
         "sum_abs long, sum_sq long, zero_crossings long",
     )
 
@@ -4819,45 +4549,14 @@ def jpeg_411_roundtrip_stats(
     corpora), no per-key shuffle. Output: (doc_id, width, height, n_mcus, sum_c0, sum_c1,
     sum_c2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 32 + i % 41, 8 + (i * 3) % 21
-                tx = np.arange(w)[None, :] // 32
-                ty = np.arange(h)[:, None] // 8
-                px = (
-                    np.stack(
-                        [(i + c + 3 * tx + 5 * ty) % 256 for c in range(3)],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                pay = encode_jpeg_pixels(
-                    w, h, px, channels=3,
-                    restart_interval=restart_interval, subsampling="411",
-                )
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                s = a.sum(axis=0, dtype=np.int64)
-                n_mcus = ((w + 31) // 32) * ((h + 7) // 8)
-                rows.append((i, w, h, n_mcus, int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_mcus",
-                    "sum_c0", "sum_c1", "sum_c2",
-                ],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 32 + i % 41, 8 + (i * 3) % 21
+        _, n_mcus, sums = _jpeg_tile_roundtrip(
+            i, w, h, 3, "411", restart_interval=restart_interval
+        )
+        yield i, w, h, n_mcus, *sums
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, n_mcus long, "
-        "sum_c0 long, sum_c1 long, sum_c2 long",
-    )
+    return _map_ids(df, id_col, rows, _JPEG_MCU_SCHEMA)
 
 
 def jpeg_progressive_420_roundtrip_stats(
@@ -4887,45 +4586,14 @@ def jpeg_progressive_420_roundtrip_stats(
     corpora), no per-key shuffle. Output: (doc_id, width, height, n_scans, sum_c0, sum_c1,
     sum_c2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 16 + i % 37, 16 + (i * 3) % 29
-                tx = np.arange(w)[None, :] // 16
-                ty = np.arange(h)[:, None] // 16
-                px = (
-                    np.stack(
-                        [(i + c + 3 * tx + 5 * ty) % 256 for c in range(3)],
-                        axis=-1,
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                )
-                pay = encode_jpeg_progressive_pixels(
-                    w, h, px, channels=3, subsampling="420",
-                    ac_refine=ac_refine,
-                )
-                n_scans = pay.count(b"\xff\xda")
-                dw, dh, dch, dpx = decode_jpeg_pixels(pay)
-                assert (dw, dh, dch) == (w, h, 3)
-                a = np.frombuffer(dpx, dtype=np.uint8).reshape(-1, 3)
-                s = a.sum(axis=0, dtype=np.int64)
-                rows.append((i, w, h, n_scans, int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_scans",
-                    "sum_c0", "sum_c1", "sum_c2",
-                ],
-            )
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 16 + i % 37, 16 + (i * 3) % 29
+        pay, _, sums = _jpeg_tile_roundtrip(
+            i, w, h, 3, "420", progressive=True, ac_refine=ac_refine
+        )
+        yield i, w, h, pay.count(b"\xff\xda"), *sums
 
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, width long, height long, n_scans long, "
-        "sum_c0 long, sum_c1 long, sum_c2 long",
-    )
+    return _map_ids(df, id_col, rows, _JPEG_SCAN_SCHEMA)
 
 
 # --- AVI / MJPEG (VERDICT r14 #3: the last plug point becomes a codec) ------
@@ -5479,53 +5147,41 @@ def avi_audio_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     guard (layout.ensure_scan_parallelism — no-op on many-split
     corpora), no per-key shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                nf = 2 + i % 3
-                frames = [
-                    np.full((8, 8), (i + 7 * f) % 256, np.uint8).tobytes()
-                    for f in range(nf)
-                ]
-                j = np.arange(64, dtype=np.int64)
-                s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
-                pay = encode_avi_mjpeg(
-                    8, 8, frames, fps=10, channels=1,
-                    audio=s, audio_codec="mulaw", sample_rate=8000,
-                )
-                meta, fr, aspans = _avi_parse(pay)
-                assert meta["n_audio_chunks"] == nf
-                code_sum = sum(
-                    int(np.frombuffer(pay[a:b], np.uint8).sum(dtype=np.int64))
-                    for a, b in aspans
-                )
-                meta2, dec = extract_avi_audio(pay)
-                assert meta2["audio_fmt"] == _WAV_FMT_MULAW
-                assert dec.size == 64
-                _, dw, dh, _, dpx = decode_avi_frames(pay, every_n=nf)[0]
-                assert (dw, dh) == (8, 8)
-                rows.append(
-                    (
-                        i,
-                        64,
-                        nf,
-                        len(aspans),
-                        code_sum,
-                        int(dec.astype(np.int64).sum()),
-                        int(np.frombuffer(dpx, np.uint8).sum(dtype=np.int64)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n", "n_frames", "n_chunks",
-                    "code_sum", "decoded_sum", "vid0_sum",
-                ],
-            )
+    j = np.arange(64, dtype=np.int64)
 
-    return _spread(df).mapInPandas(batches, schema=AVI_AUDIO_SCHEMA)
+    def rows(i: int) -> Iterator[tuple]:
+        nf = 2 + i % 3
+        frames = [
+            np.full((8, 8), (i + 7 * f) % 256, np.uint8).tobytes()
+            for f in range(nf)
+        ]
+        s = ((7919 * i + 104729 * j) % 65536 - 32768).astype(np.int16)
+        pay = encode_avi_mjpeg(
+            8, 8, frames, fps=10, channels=1,
+            audio=s, audio_codec="mulaw", sample_rate=8000,
+        )
+        meta, fr, aspans = _avi_parse(pay)
+        assert meta["n_audio_chunks"] == nf
+        code_sum = sum(
+            int(np.frombuffer(pay[a:b], np.uint8).sum(dtype=np.int64))
+            for a, b in aspans
+        )
+        meta2, dec = extract_avi_audio(pay)
+        assert meta2["audio_fmt"] == _WAV_FMT_MULAW
+        assert dec.size == 64
+        _, dw, dh, _, dpx = decode_avi_frames(pay, every_n=nf)[0]
+        assert (dw, dh) == (8, 8)
+        yield (
+            i,
+            64,
+            nf,
+            len(aspans),
+            code_sum,
+            int(dec.astype(np.int64).sum()),
+            int(np.frombuffer(dpx, np.uint8).sum(dtype=np.int64)),
+        )
+
+    return _map_ids(df, id_col, rows, AVI_AUDIO_SCHEMA)
 
 
 def avi_audio_extract(
@@ -5596,45 +5252,21 @@ def mjpeg_avi_frame_stats(
     corpora), no per-key shuffle. Output: (doc_id, frame_idx, width,
     height, px_sum), one row per SAMPLED frame."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 8 + i % 16, 8 + (i * 3) % 12
-                nf = 2 + i % 3
-                frames = [
-                    (
-                        (
-                            i
-                            + 7 * f
-                            + 3 * (np.arange(w)[None, :] // 8)
-                            + 5 * (np.arange(h)[:, None] // 8)
-                        )
-                        % 256
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                    for f in range(nf)
-                ]
-                pay = encode_avi_mjpeg(w, h, frames, fps=10, channels=1)
-                for idx, dw, dh, dch, dpx in decode_avi_frames(pay, every_n):
-                    assert (dw, dh, dch) == (w, h, 1)
-                    rows.append(
-                        (
-                            i,
-                            idx,
-                            dw,
-                            dh,
-                            int(np.frombuffer(dpx, np.uint8).sum(dtype=np.int64)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height", "px_sum"],
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 8 + i % 16, 8 + (i * 3) % 12
+        frames = [_tile_pixels(i + 7 * f, w, h, 8, 8, 1) for f in range(2 + i % 3)]
+        pay = encode_avi_mjpeg(w, h, frames, fps=10, channels=1)
+        for idx, dw, dh, dch, dpx in decode_avi_frames(pay, every_n):
+            assert (dw, dh, dch) == (w, h, 1)
+            yield (
+                i,
+                idx,
+                dw,
+                dh,
+                int(np.frombuffer(dpx, np.uint8).sum(dtype=np.int64)),
             )
 
-    return _spread(df).mapInPandas(batches, schema=AVI_FRAME_SCHEMA)
+    return _map_ids(df, id_col, rows, AVI_FRAME_SCHEMA)
 
 
 def mjpeg_avi_resample_stats(
@@ -5663,59 +5295,33 @@ def mjpeg_avi_resample_stats(
     [ORIGINAL index], width, height, px_sum), one row per sampled
     frame."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for v in pdf[id_col]:
-                i = int(v)
-                w, h = 16 + 2 * (i % 8), 16 + 2 * ((i * 3) % 6)
-                nf = 2 + i % 3
-                frames = [
-                    (
-                        (
-                            i
-                            + 7 * f
-                            + 3 * (np.arange(w)[None, :] // 16)
-                            + 5 * (np.arange(h)[:, None] // 16)
-                        )
-                        % 256
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                    for f in range(nf)
-                ]
-                pay = encode_avi_mjpeg(w, h, frames, fps=10, channels=1)
-                sampled = decode_avi_frames(pay, every_n)
-                orig_idx = [s[0] for s in sampled]
-                halved = [
-                    np.frombuffer(px, np.uint8)
-                    .reshape(fh, fw)[::2, ::2]
-                    .tobytes()
-                    for _, fw, fh, _, px in (
-                        (s[0], s[1], s[2], s[3], s[4]) for s in sampled
-                    )
-                ]
-                pay2 = encode_avi_mjpeg(
-                    w // 2, h // 2, halved, fps=10, channels=1
-                )
-                meta2 = parse_avi_meta(pay2)
-                assert meta2["n_frames"] == len(halved)
-                for (ni, dw, dh, dch, dpx), oi in zip(
-                    decode_avi_frames(pay2, 1), orig_idx
-                ):
-                    assert (dw, dh, dch) == (w // 2, h // 2, 1)
-                    rows.append(
-                        (
-                            i,
-                            oi,
-                            dw,
-                            dh,
-                            int(np.frombuffer(dpx, np.uint8).sum(dtype=np.int64)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height", "px_sum"],
+    def rows(i: int) -> Iterator[tuple]:
+        w, h = 16 + 2 * (i % 8), 16 + 2 * ((i * 3) % 6)
+        frames = [_tile_pixels(i + 7 * f, w, h, 16, 16, 1) for f in range(2 + i % 3)]
+        pay = encode_avi_mjpeg(w, h, frames, fps=10, channels=1)
+        sampled = decode_avi_frames(pay, every_n)
+        orig_idx = [s[0] for s in sampled]
+        halved = [
+            np.frombuffer(px, np.uint8)
+            .reshape(fh, fw)[::2, ::2]
+            .tobytes()
+            for _, fw, fh, _, px in sampled
+        ]
+        pay2 = encode_avi_mjpeg(
+            w // 2, h // 2, halved, fps=10, channels=1
+        )
+        meta2 = parse_avi_meta(pay2)
+        assert meta2["n_frames"] == len(halved)
+        for (ni, dw, dh, dch, dpx), oi in zip(
+            decode_avi_frames(pay2, 1), orig_idx
+        ):
+            assert (dw, dh, dch) == (w // 2, h // 2, 1)
+            yield (
+                i,
+                oi,
+                dw,
+                dh,
+                int(np.frombuffer(dpx, np.uint8).sum(dtype=np.int64)),
             )
 
-    return _spread(df).mapInPandas(batches, schema=AVI_FRAME_SCHEMA)
+    return _map_ids(df, id_col, rows, AVI_FRAME_SCHEMA)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Isolated best-of-3 (after 1 warmup) for a list of specs, one session.
 
-Usage: python plans/r16/batch_profile.py <spec> [<spec> ...]
+Usage: python plans/r17/batch_profile.py <spec> [<spec> ...]
 """
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for the named specs to plans/r16/<q>_<tag>.txt.
 
-Usage: python plans/r16/dump_plans.py <tag> <spec> [<spec> ...]
+Usage: python plans/r17/dump_plans.py <tag> <spec> [<spec> ...]
 """
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Full oracle sweep: compare every declared spec against its DuckDB oracle.
 
-Usage: python plans/r16/oracle_sweep.py [sf_dir] [spec ...]
+Usage: python plans/r17/oracle_sweep.py [sf_dir] [spec ...]
 Prints one line per spec and a final OK/FAIL tally.
 """
 from __future__ import annotations

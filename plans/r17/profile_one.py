@@ -2,7 +2,7 @@
 """Isolate one spec: warmup + best-of-3 noop-sink timing, plus the
 per-JOB wall-clock breakdown from a StatusTracker poll thread.
 
-Usage: python plans/r16/profile_one.py q249_ivfpq_adc_topk [sf_dir]
+Usage: python plans/r17/profile_one.py q249_ivfpq_adc_topk [sf_dir]
 """
 from __future__ import annotations
 

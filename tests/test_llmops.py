@@ -556,3 +556,19 @@ def test_decode_media_meta_sniffs_gif_and_bmp(spark):
     assert (out[1].kind, out[1].width, out[1].height) == ("gif", 10, 20)
     assert (out[2].kind, out[2].width, out[2].height) == ("bmp", 30, 40)
     assert out[3].kind == "unknown" and out[4].kind == "unknown"
+
+
+def test_encode_media_payloads_keyed_by_any_id_col(spark):
+    """Both payload generators name their id column after ``id_col``
+    (the schema they declare), not a hard-coded doc_id."""
+    from kassette_server_spark.operators import multimodal as mm
+
+    df = spark.range(10).withColumnRenamed("id", "k")
+    sigs = (mm.PNG_SIG, b"RIFF", mm.JPEG_SIG, b"GIF8", mm.BMP_SIG)
+    for encode, n_kinds in (
+        (mm.encode_media_payloads, 3),
+        (mm.encode_media_payloads_ext, 5),
+    ):
+        got = {r.k: bytes(r.payload) for r in encode(df, id_col="k").collect()}
+        assert sorted(got) == list(range(10))
+        assert all(p.startswith(sigs[k % n_kinds]) for k, p in got.items())
