@@ -3,10 +3,24 @@
 
 Usage: python bench.py            # sf dir from $SPARK_GRAFT_SF_DIR (default sf0.1)
 
-Each query is executed to completion with a `noop`-format write — the
-whole plan runs on the executors (scan → shuffle → agg) but nothing is
-collected to the driver, so timings reflect engine throughput, not
-driver materialization. One warmup query absorbs JVM/codegen startup.
+Each spec runs in two timed parts: ``build_s``, the ``spec.fn()`` call
+(driver plan construction plus any eager actions), and ``exec_s``, a
+`noop`-format write — the whole plan runs on the executors (scan →
+shuffle → agg) but nothing is collected to the driver. A spec's
+reading is build + exec, best-of-2 (median-of-3 for the iterative
+specs), and ``value`` is the sum of the readings. One warmup query
+absorbs JVM/codegen startup; the ``q14_topk`` sentinel, sampled before,
+at each third of and after the sweep, brackets box load.
+
+Every sample runs under its own ``setJobGroup``. After a spec's last
+sample, outside the timed region, its jobs, executed stages, tasks,
+executor run time and input/shuffle bytes are read from the status
+store (``perfbench/common.job_metrics``). These counts are close to
+deterministic, so a plan regression shows as changed counts rather than
+as a wall-clock reading to argue with. A spec whose jobs or stages have
+left the store (session.py retains 100 of each) records null, not an
+undercount. The per-spec map goes to BENCH_FULL.json; stdout carries a
+compact summary only.
 """
 
 from __future__ import annotations
@@ -16,11 +30,15 @@ import os
 import re
 import sys
 import time
+import uuid
+
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kassette_server_spark.queries import all_specs  # noqa: E402
 from kassette_server_spark.session import get_spark  # noqa: E402
+from perfbench.common import job_metrics  # noqa: E402
 
 
 def run_to_completion(df) -> None:
@@ -105,189 +123,96 @@ CODEC = frozenset(
 )
 assert not (COMPOSED & CODEC), "a spec may belong to exactly one band"
 
-# Measured band thresholds. r16 basis note (CODEC membership changed
-# 28 → 29 with q261, re-derived on this round's quiet sweep — see the
-# "Measured (round 16)" BASELINE.md section when it lands; q261 is an
-# in-class G.711+container spec, isolated ≈0.6-0.8 s at sf0.1).
-# Prior r15 basis re-derivation (CODEC membership
-# changed 26 → 28 with q259/q260, so the band comment restates the
-# basis per the standing rule): quiet r15 full run 288.6 s / 259
-# (sentinel samples 0.321/0.209/0.130/0.124 — hot first third, the
-# recheck block adjudicated q84/q78/q80 as that transient: sweep
-# 15.5/4.1/3.0 s, recheck 0.68/0.78/0.69 at sentinel 0.120). CODEC
-# outlier-adjusted mean 0.662 s/spec for 28 members (q259 0.76,
-# q260 0.95 — both in class); band STAYS 1.4 (~2x basis). Core
-# adjusted 0.833 raw with the hot first third included — band stays
-# 0.80 with the sentinel-first interpretation rule below. COMPOSED
-# 4.20 raw (band 3.8; isolated PQ medians match the r13/r14 class).
-# Prior r14 basis (quiet full run AFTER the two
-# r14 engine fixes — the input-width guard on the codec maps and the
-# AppStatusListener retention cap in session.py — 257 specs, 289.1 s,
-# sentinel samples 0.361/0.222/0.127/0.137): core 0.906 raw at a
-# ~1.3x sentinel = 0.69 normalized — the r13 basis (0.659) within
-# noise; band stays 0.80 (stated at the 0.10-0.13 sentinel; apply the
-# sentinel ratio before comparing). COMPOSED (17 members incl. q255)
-# 4.52 raw = 3.4 normalized — inside the 3.8 band (the 8.28 reading
-# before the retention cap was listener-state GC debt: with the
-# default 100k-task retention the mid-run sentinel hit 0.672; capped,
-# the spike is gone and q249 read 7.9 instead of 32.4). CODEC
-# re-derived for the 26-member tier (VERDICT r13 #2): 0.704 raw after
-# the input-width guard (the tier had been running single-core on
-# one-file inputs); band = 1.4 (~2x the quiet basis) — the old 2.8
-# band could NOT catch a regression back to the single-core plan
-# (which measured 2.2 quiet); 1.4 can. The PQ family reports
-# median-of-3 (see high_variance below): its cost is sequential
-# Lloyd/search JOBS, and scheduler swing at sf0.1 dwarfs plan work.
-# Interpretation rule: compare sentinel_last (and the mid-run samples)
+# Band thresholds in s/spec. Basis: the quiet r15 full run (288.6 s
+# over 259 specs), kept in r16 when q261 (an in-class G.711 + container
+# spec, ≈0.6-0.8 s isolated) made CODEC 29 members. Core read 0.833
+# raw with a hot first third, 0.66-0.69 normalized to a 0.10-0.13 s
+# sentinel: band 0.80, stated at that sentinel (apply the sentinel
+# ratio before comparing). COMPOSED 4.20 raw: band 3.8. CODEC 0.662:
+# band 1.4, ~2x basis and below the 2.2 s/spec of the tier's old
+# single-core plan. Interpretation rule: compare the sentinel samples
 # FIRST — a tier above band with a proportionally hot sentinel is box
-# load, a tier above band with flat sentinels is a plan regression.
-# Re-derive (quiet box, full run, state the new basis here) whenever
-# tier MEMBERSHIP changes — a band carried across a membership change
-# is exactly the false alarm VERDICT r12 flagged.
+# load; above band with flat sentinels is a plan regression, and the
+# per-spec job and stage counts in BENCH_FULL.json name the spec whose
+# plan changed. Re-derive (quiet box, full run, state the new basis
+# here) whenever tier MEMBERSHIP changes.
 BANDS_S_PER_SPEC = {"core": 0.80, "composed": 3.8, "codec": 1.4}
 
-# Outlier self-adjudication (VERDICT r14 #2): a spec reading more than
-# RECHECK_RATIO x its committed BENCH_FULL.json reference inside a
-# sweep is automatically RE-RUN (best-of-2) at the END of the sweep in
-# the same session, and BOTH readings land in the JSON under
-# `rechecks`. Motivation: the r14 driver map read q226 at 39.9 s
-# (11.8x its r13 reading) while every quiet measurement — including
-# the judge's own isolated best-of-3 — read ~3 s; the sentinel
-# protocol brackets box load but cannot localize a one-spec transient,
-# so the harness itself must produce the second reading instead of a
-# human re-measuring each round. The recheck block samples the
-# sentinel first: a recheck that is STILL hot under a hot sentinel is
-# box load; still hot under a quiet sentinel is a real regression.
-RECHECK_RATIO = 3.0
-RECHECK_FLOOR_S = 0.5  # ignore ratio trips inside scheduler noise
-RECHECK_MAX = 20  # bound added sweep time; worst offenders first
-
-# Recheck escalation (VERDICT r15 #3): the same-session recheck cannot
-# clear SESSION-LOCAL Python-worker heat — r15's q84 (3.89 s) and q118
-# (4.14 s) "failed" their rechecks at a clean q14_topk sentinel yet
-# read 0.68/1.64 s in the committed quiet sweep, because the JVM
-# sentinel is blind to Arrow/Python-worker-pool state. Two fixes:
-# (a) a second, tiny mapInPandas sentinel (time_py_sentinel) sampled
-#     alongside q14_topk brackets exactly that state;
-# (b) a recheck still > ESCALATE_RATIO x its reference while BOTH
-#     sentinels are clean escalates to ONE fresh-subprocess re-run
-#     (new JVM + new Python-worker pool), recorded in the same
-#     `rechecks` entry — the harness produces the isolated reading a
-#     judge previously had to take by hand.
 COMPACT_DOC_MAX = 1500  # bytes; r15's capture window kept only 2,273
-ESCALATE_RATIO = 2.5
-ESCALATE_MAX = 5  # each escalation pays a ~20-30 s JVM cold start
-ESCALATE_SENTINEL_CLEAN = 1.5  # "clean" = within 1.5x the session min
-ESCALATE_TIMEOUT_S = 300
 
+# Per-spec layer counts in BENCH_FULL.json: key -> job_metrics key.
+LAYER_KEYS = {
+    "jobs": "spark.jobs",
+    "stages": "spark.stages",
+    "tasks": "spark.tasks",
+    "executor_run_s": "spark.executor_run_s",
+    "input_bytes": "spark.input_bytes",
+    "shuffle_read_bytes": "spark.shuffle_read_bytes",
+    "shuffle_write_bytes": "spark.shuffle_write_bytes",
+}
 
-def time_py_sentinel(spark) -> float:
-    """Arrow/Python-worker sentinel: a fixed tiny mapInPandas identity
-    over 8 partitions. Pure JVM load leaves it flat; a hot Python
-    worker pool / Arrow channel (the q84/q118 failure mode) shows up
-    here and nowhere in q14_topk."""
-
-    def _ident(batches):
-        yield from batches
-
+def time_sample(spark, spec, sf_dir: str, group: str) -> tuple[float, float]:
+    """(build_s, exec_s) of one run of ``spec``, its jobs tagged
+    ``group``: ``spec.fn()``, then the noop write."""
+    spark.sparkContext.setJobGroup(group, spec.name)
     t0 = time.perf_counter()
-    spark.range(0, 8192, 1, 8).mapInPandas(_ident, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    return time.perf_counter() - t0
+    df = spec.fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    run_to_completion(df)
+    return t1 - t0, time.perf_counter() - t1
 
 
-def fresh_subprocess_time(name: str, sf_dir: str, repo_dir: str):
-    """Best-of-2 (after one codegen warmup) for one spec in a FRESH
-    subprocess — new JVM, new Python-worker pool, no session-local
-    heat. Returns seconds, or None if the subprocess fails/times out
-    (recorded as-is; never fails the sweep)."""
-    import subprocess
+def layer_counts(spark, prev_group: str, group: str) -> dict | None:
+    """LAYER_KEYS readings for the jobs tagged ``group``, or None when
+    any of those jobs, or any stage they executed, has left the status
+    store (it evicts the oldest first, skipped stages before all).
 
-    code = (
-        "import sys, time\n"
-        f"sys.path.insert(0, {repo_dir!r})\n"
-        "from kassette_server_spark.queries import all_specs\n"
-        "from kassette_server_spark.session import get_spark\n"
-        "spark = get_spark(app_name='kassette-bench-escalate')\n"
-        f"spec = all_specs()[{name!r}]\n"
-        "def run():\n"
-        f"    spec.fn(spark, {sf_dir!r}).write.format('noop')"
-        ".mode('overwrite').save()\n"
-        "run()\n"
-        "times = []\n"
-        "for _ in range(2):\n"
-        "    t0 = time.perf_counter(); run()\n"
-        "    times.append(time.perf_counter() - t0)\n"
-        "print('ESCALATED_BEST %.4f' % min(times), file=sys.stderr)\n"
-    )
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True,
-            text=True,
-            timeout=ESCALATE_TIMEOUT_S,
-        )
-        m = re.search(r"ESCALATED_BEST ([0-9.]+)", proc.stderr + proc.stdout)
-        return float(m.group(1)) if m else None
-    except Exception:
+    Jobs run one at a time here, so ``group``'s job ids follow right
+    after ``prev_group``'s: a gap there is an evicted job."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    prev = tracker.getJobIdsForGroup(prev_group)
+    ids = sorted(tracker.getJobIdsForGroup(group))
+    if not prev or ids != list(range(max(prev) + 1, max(prev) + 1 + len(ids))):
         return None
-
-
-def select_outliers(
-    timings: dict[str, float],
-    reference: dict[str, float],
-    ratio: float = RECHECK_RATIO,
-    floor: float = RECHECK_FLOOR_S,
-    cap: int = RECHECK_MAX,
-) -> list[tuple[str, float, float]]:
-    """(name, sweep_s, ref_s) for every spec tripping the recheck rule,
-    worst ratio first, capped. Specs absent from the reference (new
-    this round) are never outliers — there is nothing to contradict."""
-    return sorted(
-        (
-            (name, t, reference[name])
-            for name, t in timings.items()
-            if name in reference and t > floor and t > ratio * reference[name]
-        ),
-        key=lambda x: -(x[1] / x[2]),
-    )[:cap]
-
-
-def load_reference_timings(path: str) -> dict[str, float]:
-    """Per-spec reference = the committed previous-generation
-    BENCH_FULL.json (read BEFORE the sweep overwrites it). Empty when
-    absent/unparseable — first generation has nothing to adjudicate
-    against.
-
-    A spec the previous sweep ITSELF adjudicated (a `rechecks` entry)
-    uses its recheck reading as the reference, not the hot sweep
-    value — otherwise one transient poisons the next round's detector
-    (a q84 sweep reading of 15.5 s with a 0.68 s recheck must not set
-    the bar at 3x15.5)."""
     try:
-        with open(path) as f:
-            doc = json.load(f)
-        ref = {
-            str(k): float(v)
-            for k, v in doc.get("queries", {}).items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-        for k, rc in doc.get("rechecks", {}).items():
-            # the most-isolated prior reading wins: fresh-subprocess
-            # escalation > same-session recheck > (never) the hot sweep
-            v = None
-            for key in ("fresh_subprocess", "recheck"):
-                try:
-                    v = float(rc[key])
-                    break
-                except (TypeError, KeyError, ValueError):
-                    continue
-            if v is not None and k in ref and v > 0:
-                ref[k] = v
-        return ref
-    except (OSError, ValueError):
-        return {}
+        for jid in ids:
+            job = store.job(jid)
+            kept = sum(_executed(store, sid) for sid in tracker.getJobInfo(jid).stageIds)
+            if kept < job.numCompletedStages() + job.numFailedStages():
+                return None
+    except Py4JJavaError:  # the job itself left the store
+        return None
+    m = job_metrics(spark, ids)
+    return {k: round(m[src], 3) if k.endswith("_s") else int(m[src]) for k, src in LAYER_KEYS.items()}
+
+
+def _executed(store, stage_id: int) -> bool:
+    try:
+        status = store.lastStageAttempt(stage_id).status().toString()
+    except Py4JJavaError:  # evicted
+        return False
+    return status in ("COMPLETE", "FAILED")
+
+
+def measure(spark, spec, sf_dir: str, samples: int):
+    """Run ``spec`` ``samples`` (>= 2) times, each under its own job
+    group. Returns every sample's (build_s, exec_s) and the
+    ``layer_counts`` of the last one, read outside the timed region."""
+    groups = [f"bench-{uuid.uuid4().hex}" for _ in range(samples)]
+    times = [time_sample(spark, spec, sf_dir, g) for g in groups]
+    return times, layer_counts(spark, groups[-2], groups[-1])
+
+
+def layer_entry(build_s: float, exec_s: float, counts: dict | None) -> dict:
+    """One spec's BENCH_FULL.json ``layers`` entry."""
+    return {
+        "build_s": round(build_s, 4),
+        "exec_s": round(exec_s, 4),
+        **(counts or dict.fromkeys(LAYER_KEYS)),
+    }
 
 
 def build_compact_doc(
@@ -302,39 +227,17 @@ def build_compact_doc(
     n_codec: int,
     sentinel: str,
     sentinel_samples: list[float],
-    py_sentinel_samples: list[float],
-    rechecks: dict[str, dict],
     sf: float,
 ) -> str:
     """The single stdout JSON line, size-gated.
 
     The driver archives only a finite TAIL of stdout; the 142-entry
-    per-query map overflowed it in r6 (parsed:null, VERDICT r6 #2) and
-    the r15 recheck feature re-introduced the same failure by embedding
-    the full 16-entry rechecks map (VERDICT r15 "What's wrong" #1 —
-    the capture kept only the final 2,273 bytes and beheaded the JSON).
-    So: slowest-10 queries only, rechecks as count + the 3 worst by
-    sweep/ref ratio, and a hard assert against COMPACT_DOC_MAX. The
-    full maps live in BENCH_FULL.json."""
+    per-query map overflowed it in r6 (parsed:null, VERDICT r6 #2), and
+    r15 did it again with an embedded 16-entry recheck map (the capture kept
+    only the final 2,273 bytes and beheaded the JSON). So: slowest-10
+    queries only and a hard assert against COMPACT_DOC_MAX. The full
+    maps live in BENCH_FULL.json."""
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    rechecks_compact = {
-        "count": len(rechecks),
-        "top3": {
-            n: {
-                "sweep": rc["sweep"],
-                "recheck": rc["recheck"],
-                **(
-                    {"fresh": rc["fresh_subprocess"]}
-                    if "fresh_subprocess" in rc
-                    else {}
-                ),
-            }
-            for n, rc in sorted(
-                rechecks.items(),
-                key=lambda kv: -(kv[1]["sweep"] / kv[1]["ref"]),
-            )[:3]
-        },
-    }
     doc = json.dumps(
         {
             "metric": "declared_query_set_total_wall_clock",
@@ -355,9 +258,7 @@ def build_compact_doc(
             "sentinel_first": sentinel_samples[0],
             "sentinel_last": sentinel_samples[-1],
             "sentinel_samples": sentinel_samples,
-            "py_sentinel_samples": py_sentinel_samples,
             "bands_s_per_spec": BANDS_S_PER_SPEC,
-            "rechecks": rechecks_compact,
             "sf": sf,
             "full_map": "BENCH_FULL.json",
         }
@@ -383,20 +284,11 @@ def main() -> None:
     result_fd = os.dup(1)
     os.dup2(2, 1)
 
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    full_path = os.path.join(repo_dir, "BENCH_FULL.json")
-    reference = load_reference_timings(full_path)  # before the overwrite
-
     spark = get_spark(app_name="kassette-bench")
     specs = all_specs()
 
     # warmup: JIT/codegen + parquet footer caches
     run_to_completion(specs["q01_scan_filter"].fn(spark, sf_dir))
-
-    def time_spec(name: str) -> float:
-        t0 = time.perf_counter()
-        run_to_completion(specs[name].fn(spark, sf_dir))
-        return time.perf_counter() - t0
 
     # Noise sentinel (VERDICT r7 #4, r9 #2): the same fixed cheap spec
     # timed immediately after warmup, at each third of the sweep, and
@@ -408,15 +300,17 @@ def main() -> None:
     # q202-q211 stretch at ~2x with quiet endpoints (VERDICT r9 "What's
     # wrong" #1); three-plus samples bracket every third of the sweep.
     SENTINEL = "q14_topk"
-    # warm the Python-worker pool once so the first py-sentinel sample
-    # measures steady state, not worker-process fork cost
-    time_py_sentinel(spark)
-    sentinel_samples: list[float] = [
-        round(min(time_spec(SENTINEL) for _ in range(2)), 4)
-    ]
-    py_sentinel_samples: list[float] = [
-        round(min(time_py_sentinel(spark) for _ in range(2)), 4)
-    ]
+
+    def sentinel_sample() -> float:
+        return round(
+            min(
+                sum(time_sample(spark, specs[SENTINEL], sf_dir, "bench-sentinel"))
+                for _ in range(2)
+            ),
+            4,
+        )
+
+    sentinel_samples: list[float] = [sentinel_sample()]
 
     # best-of-2: first run pays whole-stage-codegen compilation for the
     # plan shape, second measures steady-state engine throughput. The
@@ -445,71 +339,25 @@ def main() -> None:
     }
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     names = sorted(specs)
     third = max(1, (len(names) + 2) // 3)
     for i, name in enumerate(names):
-        samples = [time_spec(name) for _ in range(3 if name in high_variance else 2)]
+        times, counts = measure(
+            spark, specs[name], sf_dir, 3 if name in high_variance else 2
+        )
+        totals = [b + e for b, e in times]
+        order = sorted(range(len(times)), key=totals.__getitem__)
+        # median of 3, else best of 2; its build/exec split goes along
+        pick = order[1] if name in high_variance else order[0]
+        timings[name] = round(totals[pick], 4)
         if name in high_variance:
-            timings[name] = round(sorted(samples)[1], 4)  # median of 3
-            spreads[name] = round(max(samples) - min(samples), 4)
-        else:
-            timings[name] = round(min(samples), 4)
+            spreads[name] = round(max(totals) - min(totals), 4)
+        layers[name] = layer_entry(*times[pick], counts)
         if (i + 1) % third == 0 and (i + 1) < len(names):
-            sentinel_samples.append(
-                round(min(time_spec(SENTINEL) for _ in range(2)), 4)
-            )
-            py_sentinel_samples.append(
-                round(min(time_py_sentinel(spark) for _ in range(2)), 4)
-            )
+            sentinel_samples.append(sentinel_sample())
 
-    sentinel_samples.append(round(min(time_spec(SENTINEL) for _ in range(2)), 4))
-    py_sentinel_samples.append(
-        round(min(time_py_sentinel(spark) for _ in range(2)), 4)
-    )
-
-    # end-of-sweep outlier rechecks (VERDICT r14 #2): same session, so
-    # a transient that hit only one stretch of the sweep has passed by
-    # now, while a plan regression reproduces.
-    outliers = select_outliers(timings, reference)
-    rechecks: dict[str, dict[str, float]] = {}
-    if outliers:
-        sentinel_recheck = round(min(time_spec(SENTINEL) for _ in range(2)), 4)
-        py_sentinel_recheck = round(
-            min(time_py_sentinel(spark) for _ in range(2)), 4
-        )
-        # "clean" = within ESCALATE_SENTINEL_CLEAN x this session's own
-        # minimum, i.e. the box is at its observed-best on BOTH the JVM
-        # and the Python-worker axes right now
-        jvm_clean = sentinel_recheck <= ESCALATE_SENTINEL_CLEAN * min(
-            sentinel_samples
-        )
-        py_clean = py_sentinel_recheck <= ESCALATE_SENTINEL_CLEAN * min(
-            py_sentinel_samples
-        )
-        escalated = 0
-        for name, t, ref in outliers:
-            rc: dict[str, float] = {
-                "sweep": t,
-                "ref": ref,
-                "recheck": round(min(time_spec(name) for _ in range(2)), 4),
-                "sentinel_at_recheck": sentinel_recheck,
-                "py_sentinel_at_recheck": py_sentinel_recheck,
-            }
-            # VERDICT r15 #3: still >2.5x reference with both sentinels
-            # clean — same-session state the sentinels can't see, or a
-            # real regression; one fresh subprocess decides which.
-            if (
-                rc["recheck"] > ESCALATE_RATIO * ref
-                and jvm_clean
-                and py_clean
-                and escalated < ESCALATE_MAX
-            ):
-                fresh = fresh_subprocess_time(name, sf_dir, repo_dir)
-                rc["fresh_subprocess"] = (
-                    round(fresh, 4) if fresh is not None else None
-                )
-                escalated += 1
-            rechecks[name] = rc
+    sentinel_samples.append(sentinel_sample())
 
     sentinel_first, sentinel_last = sentinel_samples[0], sentinel_samples[-1]
     total = round(sum(timings.values()), 4)
@@ -531,8 +379,6 @@ def main() -> None:
         n_codec=n_codec,
         sentinel=SENTINEL,
         sentinel_samples=sentinel_samples,
-        py_sentinel_samples=py_sentinel_samples,
-        rechecks=rechecks,
         sf=sf,
     )
     full = json.dumps(
@@ -546,7 +392,6 @@ def main() -> None:
             "sentinel_first": sentinel_first,
             "sentinel_last": sentinel_last,
             "sentinel_samples": sentinel_samples,
-            "py_sentinel_samples": py_sentinel_samples,
             "core_sec_per_query": round(core_total / max(1, n_core), 4),
             "composed_sec_per_query": round(
                 composed_total / max(1, n_composed), 4
@@ -555,18 +400,14 @@ def main() -> None:
             "composed_tier": sorted(COMPOSED),
             "codec_tier": sorted(CODEC),
             "median_of_3": sorted(high_variance),
-            "rechecks": rechecks,
-            "recheck_rule": f"sweep > {RECHECK_RATIO}x committed "
-            f"BENCH_FULL reference and > {RECHECK_FLOOR_S}s -> "
-            "best-of-2 re-run at end of sweep, same session",
-            "escalate_rule": f"recheck still > {ESCALATE_RATIO}x reference "
-            f"with BOTH sentinels <= {ESCALATE_SENTINEL_CLEAN}x their "
-            "session min -> one fresh-subprocess best-of-2 "
-            f"(cap {ESCALATE_MAX}), recorded as fresh_subprocess",
             "spread_sec": spreads,
             "variance_note": "median-of-3 specs are iterative "
             "(fixpoint CC / banded verify) and swing with per-job "
             "scheduler overhead; all others are best-of-2",
+            "layers": layers,
+            "layers_note": "build_s/exec_s split the sample behind "
+            "`queries`; the counts are the spec's last sample, null when "
+            "its jobs or stages left the status store",
         },
         indent=1,
     )

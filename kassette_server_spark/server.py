@@ -95,7 +95,7 @@ def default_deliver_factory(work_dir: str):
     return factory
 
 
-def dispatching_deliver_factory(work_dir: str, parallel_copy: bool = False):
+def dispatching_deliver_factory(work_dir: str):
     """Production-shaped sender dispatch: a postgres destination with
     connection config gets the real K3 path; anything else falls back
     to the JSON-file sender.
@@ -114,16 +114,12 @@ def dispatching_deliver_factory(work_dir: str, parallel_copy: bool = False):
       folds unquoted to lowercase — same relation the quoted COPY
       targets); any mixed-case name takes the quoted engine renderer so
       CREATE and COPY agree on the case-preserved relation.
-    - Commit boundary DEFAULTS to the reference's whole-batch
-      transaction (integrations/postgres/main.go:108-151): the batch is
-      coalesced to ONE partition so a failure commits nothing and the
-      ledger's whole-batch retry cannot duplicate rows (ADVICE r6 #3).
-      Micro-batches are gateway-batch sized, so one COPY stream is the
-      right default. ``parallel_copy=True`` opts into per-partition
-      COPY transactions (one each, like Spark's own JDBC sink) for
-      bulk backfills against destinations with a primary key /
-      ON CONFLICT dedup, where partial-commit + whole-batch retry is
-      idempotent and the parallel stream wins.
+    - Commit boundary is the reference's whole-batch transaction
+      (integrations/postgres/main.go:108-151): the batch is coalesced
+      to ONE partition so a failure commits nothing and the ledger's
+      whole-batch retry cannot duplicate rows (ADVICE r6 #3).
+      Micro-batches are gateway-batch sized, so one COPY stream is
+      enough.
     """
     import subprocess
 
@@ -160,11 +156,9 @@ def dispatching_deliver_factory(work_dir: str, parallel_copy: bool = False):
                         )
                     ddl_done = True
                 present = [c for c in fields if c in df.columns]
-                out = df.select(*present)
-                if not parallel_copy:
-                    # reference whole-batch transaction: one partition
-                    # → one COPY → all-or-nothing commit
-                    out = out.coalesce(1)
+                # reference whole-batch transaction: one partition
+                # → one COPY → all-or-nothing commit
+                out = df.select(*present).coalesce(1)
                 write_postgres_copy_dest(out, dest)
                 ok, status, err = True, 200, ""
             except Exception as e:  # whole batch reported failed as one unit

@@ -19,6 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: directory holding the ``kassette_server_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -135,7 +138,14 @@ def get_spark(
             ),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    # The daemon module above is imported by the Python worker, which
+    # sees the driver's cwd, not its sys.path: put the package's parent
+    # on the workers' PYTHONPATH so the session works from any cwd.
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -70,7 +70,6 @@ class StreamingSupervisor:
     def __init__(self, start: StartFn):
         self._start = start
         self._queries: dict[int, object] = {}
-        self._conns: dict[int, Connection] = {}
         #: in-flight drain-then-stop threads, one per connection id
         self._stopping: dict[int, threading.Thread] = {}
         #: per-cid pending-start token: the ONE queued/in-flight start
@@ -171,7 +170,6 @@ class StreamingSupervisor:
                 self._pending_start.pop(cid, None)
                 self._failed.pop(cid, None)  # disabled ≠ failed
                 q = self._queries.pop(cid, None)
-                self._conns.pop(cid, None)
             if q is not None:
                 self._begin_stop(cid, q)
         for cid in diff.added + diff.changed:
@@ -293,7 +291,6 @@ class StreamingSupervisor:
                 if self._pending_start.get(cid) is token:
                     self._pending_start.pop(cid, None)
                     self._queries[cid] = q
-                    self._conns[cid] = conn
                     self._failed.pop(cid, None)
                     return
             # superseded while starting: stop the orphan we just
@@ -359,7 +356,6 @@ class StreamingSupervisor:
             self._pending_start.clear()
             queries = list(self._queries.items())
             self._queries.clear()
-            self._conns.clear()
         for cid, q in queries:
             self._begin_stop(cid, q)
         # an in-flight start whose token we just cleared will schedule

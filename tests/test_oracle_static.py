@@ -10,6 +10,8 @@ forgotten cast fails here in milliseconds instead of at the driver.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from kassette_server_spark.oracle import duckdb_connection
@@ -86,126 +88,148 @@ def test_bench_codec_tier_names_are_registered():
     assert not (bench.CODEC & bench.COMPOSED)
 
 
-def test_bench_outlier_recheck_rule():
-    """VERDICT r14 #2: the recheck selector trips only on >ratio x the
-    committed reference AND above the absolute floor, ranks worst
-    ratio first, caps the list, and never flags specs without a
-    reference row (new this round)."""
-    import bench
-
-    ref = {"a": 1.0, "b": 0.1, "c": 2.0, "d": 0.05}
-    timings = {
-        "a": 3.5,   # 3.5x ref, above floor -> outlier
-        "b": 0.4,   # 4x ref but under the 0.5s floor -> noise, skip
-        "c": 40.0,  # 20x ref -> outlier, ranked first
-        "d": 0.6,   # 12x ref and above floor -> outlier
-        "e": 99.0,  # no reference row -> never an outlier
-    }
-    got = bench.select_outliers(timings, ref)
-    assert [n for n, _, _ in got] == ["c", "d", "a"]
-    assert got[0] == ("c", 40.0, 2.0)
-    # the cap bounds added sweep time
-    big = {f"q{i}": 10.0 for i in range(50)}
-    capped = bench.select_outliers(big, {k: 1.0 for k in big})
-    assert len(capped) == bench.RECHECK_MAX
-
-
-def test_bench_reference_loader_tolerates_absence(tmp_path):
-    import bench
-
-    assert bench.load_reference_timings(str(tmp_path / "missing.json")) == {}
-    p = tmp_path / "garbage.json"
-    p.write_text("{not json")
-    assert bench.load_reference_timings(str(p)) == {}
-    q = tmp_path / "ok.json"
-    q.write_text('{"queries": {"a": 1.5, "bad": "x", "zero": 0}}')
-    assert bench.load_reference_timings(str(q)) == {"a": 1.5}
-
-
-def test_bench_reference_prefers_recheck_readings(tmp_path):
-    """A spec the previous sweep adjudicated must contribute its
-    RECHECK reading as the next round's reference — the hot sweep
-    value would set the outlier bar at 3x the transient."""
-    import bench
-
-    p = tmp_path / "full.json"
-    p.write_text(
-        '{"queries": {"a": 15.5, "b": 1.0},'
-        ' "rechecks": {"a": {"sweep": 15.5, "ref": 2.3, "recheck": 0.68},'
-        '              "zz": {"recheck": 1.0}}}'
-    )
-    got = bench.load_reference_timings(str(p))
-    assert got == {"a": 0.68, "b": 1.0}
-
-
-def test_bench_reference_prefers_fresh_subprocess_over_recheck(tmp_path):
-    """VERDICT r15 #3: when a recheck escalated to a fresh-subprocess
-    re-run, THAT is the most isolated prior reading and becomes the
-    reference; a failed escalation (null) falls back to the recheck."""
-    import bench
-
-    p = tmp_path / "full.json"
-    p.write_text(
-        '{"queries": {"a": 15.5, "b": 4.1, "c": 1.0},'
-        ' "rechecks": {'
-        '   "a": {"sweep": 15.5, "ref": 2.3, "recheck": 3.9,'
-        '         "fresh_subprocess": 1.04},'
-        '   "b": {"sweep": 4.1, "ref": 1.0, "recheck": 2.8,'
-        '         "fresh_subprocess": null}}}'
-    )
-    got = bench.load_reference_timings(str(p))
-    assert got == {"a": 1.04, "b": 2.8, "c": 1.0}
-
-
 def test_bench_compact_doc_fits_capture_window_worst_case():
     """VERDICT r15 "What's wrong" #1: the r15 compact stdout doc
-    embedded the full 16-entry rechecks map, overflowed the driver's
-    ~2.3 KB stdout tail capture, and the round recorded parsed:null —
-    the exact r6 failure the code comments warned about. Lock the doc
-    under COMPACT_DOC_MAX at WORST-CASE inputs: a full-registry-sized
-    timing map with the longest real spec names, the recheck list at
-    its RECHECK_MAX cap, every top-3 entry carrying a fresh_subprocess
-    reading, and five sentinel samples on both axes."""
+    embedded a per-spec map, overflowed the driver's ~2.3 KB stdout
+    tail capture, and the round recorded parsed:null — the exact r6
+    failure the code comments warned about. Lock the doc under
+    COMPACT_DOC_MAX at WORST-CASE inputs: a full-registry-sized timing
+    map with the longest real spec names and wide values, and five
+    sentinel samples."""
     import json
 
     import bench
 
     long_names = sorted(SPECS, key=len, reverse=True)
-    timings = {n: 123.4567 for n in long_names}
-    rechecks = {
-        n: {
-            "sweep": 123.4567,
-            "ref": 1.2345,
-            "recheck": 12.3456,
-            "sentinel_at_recheck": 0.3148,
-            "py_sentinel_at_recheck": 0.1234,
-            "fresh_subprocess": 1.0412,
-        }
-        for n in long_names[: bench.RECHECK_MAX]
-    }
+    timings = {n: 12345.6789 for n in long_names}
     doc = bench.build_compact_doc(
         timings=timings,
-        total=12345.6789,
-        core_total=1234.5678,
+        total=123456.7891,
+        core_total=12345.6789,
         n_core=214,
-        composed_total=123.4567,
+        composed_total=12345.6789,
         n_composed=17,
-        codec_total=123.4567,
-        n_codec=28,
+        codec_total=12345.6789,
+        n_codec=29,
         sentinel="q14_topk",
-        sentinel_samples=[0.4297, 0.3148, 0.2099, 0.1304, 0.1244],
-        py_sentinel_samples=[0.1234, 0.1234, 0.1234, 0.1234, 0.1234],
-        rechecks=rechecks,
-        sf=0.1,
+        sentinel_samples=[10.4297, 10.3148, 10.2099, 10.1304, 10.1244],
+        sf=0.001,
     )
     assert len(doc) < bench.COMPACT_DOC_MAX
     parsed = json.loads(doc)
-    assert parsed["rechecks"]["count"] == bench.RECHECK_MAX
-    assert len(parsed["rechecks"]["top3"]) == 3
     assert len(parsed["queries"]) == 10
-    # every top3 entry carries the escalated reading when present
-    for rc in parsed["rechecks"]["top3"].values():
-        assert rc["fresh"] == 1.0412
+    assert set(parsed["queries"]) <= set(long_names)
+
+
+class _FakeStatus:
+    """statusTracker() and status-store stand-in: job ids per group,
+    stage ids per job, how many stages each job executed, and the
+    status of each stage the store still holds (absent = evicted)."""
+
+    def __init__(self, groups, stages, ran, status):
+        self.groups, self.stages, self.ran, self.status = groups, stages, ran, status
+
+    def getJobIdsForGroup(self, group):
+        return self.groups.get(group, [])
+
+    def getJobInfo(self, jid):
+        return SimpleNamespace(stageIds=self.stages[jid])
+
+    def job(self, jid):
+        return SimpleNamespace(
+            numCompletedStages=lambda: self.ran[jid], numFailedStages=lambda: 0
+        )
+
+    def lastStageAttempt(self, sid):
+        from py4j.protocol import Py4JJavaError
+
+        if sid not in self.status:
+            raise Py4JJavaError("evicted", SimpleNamespace(_target_id="o0"))
+        state = SimpleNamespace(toString=lambda: self.status[sid])
+        return SimpleNamespace(status=lambda: state)
+
+
+def _fake_spark(fake):
+    jsc_sc = SimpleNamespace(
+        listenerBus=lambda: SimpleNamespace(waitUntilEmpty=lambda: None),
+        statusStore=lambda: fake,
+    )
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(
+            statusTracker=lambda: fake, _jsc=SimpleNamespace(sc=lambda: jsc_sc)
+        )
+    )
+
+
+_FAKE_METRICS = {
+    "spark.jobs": 2.0,
+    "spark.stages": 3.0,
+    "spark.tasks": 11.0,
+    "spark.spill_bytes": 0.0,
+    "spark.executor_run_s": 0.41200000000000003,
+    "spark.executor_cpu_s": 0.3,
+    "spark.jvm_gc_s": 0.0,
+    "spark.input_bytes": 6528.0,
+    "spark.shuffle_read_bytes": 314755.0,
+    "spark.shuffle_write_bytes": 314755.0,
+    "spark.result_bytes": 12457.0,
+}
+
+
+def test_bench_full_layer_entry_schema(monkeypatch):
+    """ROADMAP item 1: each spec's BENCH_FULL.json ``layers`` entry
+    carries the build/exec split and the last sample's counts under
+    pinned keys, built here from a fake job_metrics reading. Skipped
+    stages that left the store do not void the counts."""
+    import bench
+
+    seen = []
+
+    def fake_job_metrics(spark, job_ids):
+        seen.append(list(job_ids))
+        return dict(_FAKE_METRICS)
+
+    monkeypatch.setattr(bench, "job_metrics", fake_job_metrics)
+    fake = _FakeStatus(
+        groups={"prev": [1, 2], "last": [4, 3]},
+        stages={3: [5, 6], 4: [7, 8]},
+        ran={3: 2, 4: 1},
+        status={5: "COMPLETE", 6: "COMPLETE", 7: "COMPLETE"},  # 8 skipped, evicted
+    )
+    counts = bench.layer_counts(_fake_spark(fake), "prev", "last")
+    assert seen == [[3, 4]]
+    assert bench.layer_entry(0.123456, 0.98765, counts) == {
+        "build_s": 0.1235,
+        "exec_s": 0.9877,
+        "jobs": 2,
+        "stages": 3,
+        "tasks": 11,
+        "executor_run_s": 0.412,
+        "input_bytes": 6528,
+        "shuffle_read_bytes": 314755,
+        "shuffle_write_bytes": 314755,
+    }
+
+
+def test_bench_layer_counts_null_when_evicted(monkeypatch):
+    """A sample whose oldest jobs (a gap after the previous sample's
+    ids) or any stage it executed left the status store records null
+    counts, never an undercount."""
+    import bench
+
+    monkeypatch.setattr(bench, "job_metrics", lambda spark, ids: dict(_FAKE_METRICS))
+    stages, ran = {5: [1], 6: [2], 7: [3]}, {5: 1, 6: 1, 7: 1}
+    done = {1: "COMPLETE", 2: "COMPLETE", 3: "COMPLETE"}
+    cases = [
+        _FakeStatus({"prev": [3], "last": [6, 7]}, stages, ran, done),  # job 4 gone
+        _FakeStatus({"prev": [], "last": [5, 6, 7]}, stages, ran, done),  # no boundary
+        _FakeStatus({"prev": [4], "last": [5, 6, 7]}, stages, ran, {1: "COMPLETE", 3: "COMPLETE"}),
+    ]
+    for fake in cases:
+        assert bench.layer_counts(_fake_spark(fake), "prev", "last") is None
+    entry = bench.layer_entry(0.5, 1.5, None)
+    assert entry["build_s"] == 0.5 and entry["exec_s"] == 1.5
+    assert all(entry[k] is None for k in bench.LAYER_KEYS)
 
 
 def test_bench_window_has_video_tier_first_rows():
