@@ -38,6 +38,20 @@ LEDGER_SCHEMA = (
 )
 
 
+def _latest_rows(lg: DataFrame, *cols: str) -> DataFrame:
+    """The ledger's one latest-row rule: per (job, connection), the
+    ``cols`` of the row with the greatest (exec_time, attempt), as one
+    max_by aggregate. compact() and latest_state() both read through
+    it, so compaction preserves every derived view bit-for-bit."""
+    return (
+        lg.groupBy("job_id", "connection_id")
+        .agg(
+            F.max_by(F.struct(*cols), F.struct("exec_time", "attempt")).alias("s")
+        )
+        .select("job_id", "connection_id", "s.*")
+    )
+
+
 class DeliveryLedger:
     """Append-only delivery ledger over a parquet directory."""
 
@@ -154,22 +168,14 @@ class DeliveryLedger:
         with self._write_lock:
             self._recover_interrupted_compaction()
             lg = self._read()
-            full = (
-                lg.groupBy("job_id", "connection_id")
-                .agg(
-                    F.max_by(
-                        F.struct(
-                            "state",
-                            "attempt",
-                            "exec_time",
-                            "retry_time",
-                            "error_code",
-                            "error_response",
-                        ),
-                        F.struct("exec_time", "attempt"),
-                    ).alias("s")
-                )
-                .select("job_id", "connection_id", "s.*")
+            full = _latest_rows(
+                lg,
+                "state",
+                "attempt",
+                "exec_time",
+                "retry_time",
+                "error_code",
+                "error_response",
             )
             tmp = self._compact_tmp
             old = self._compact_old
@@ -224,16 +230,8 @@ class DeliveryLedger:
         """Latest status row per (job, connection) — the reference's
         MAX(id) GROUP BY job_id as a single max_by aggregate (one
         shuffle, partial agg map-side)."""
-        lg = self._read()
-        return (
-            lg.groupBy("job_id", "connection_id")
-            .agg(
-                F.max_by(
-                    F.struct("state", "attempt", "exec_time", "retry_time", "error_code"),
-                    F.struct("exec_time", "attempt"),
-                ).alias("s")
-            )
-            .select("job_id", "connection_id", "s.*")
+        return _latest_rows(
+            self._read(), "state", "attempt", "exec_time", "retry_time", "error_code"
         )
 
     def retry_candidates(self, now=None) -> DataFrame:

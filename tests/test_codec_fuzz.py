@@ -485,6 +485,32 @@ def test_truncated_payloads_raise_or_decode_complete(seed):
             assert got == expect, (kind, cut, len(pay))
 
 
+@pytest.mark.parametrize("codec", ["mulaw", "alaw", "ima"])
+def test_truncated_wav_fmt_or_fact_chunk_raises_value_error(codec):
+    """A cut inside the ``fmt `` or ``fact`` chunk is a corrupt
+    container, and every WAV reader reports it the same way — one
+    ValueError from the shared RIFF walk, never an incidental
+    struct.error from whichever reader happened to unpack first."""
+    from kassette_server_spark.operators.multimodal import (
+        decode_wav_compressed,
+        encode_wav_compressed,
+        parse_wav_meta,
+        parse_wav_meta_ext,
+        parse_wav_samples,
+    )
+
+    pay = encode_wav_compressed(np.arange(-50, 50, dtype=np.int16) * 300, codec=codec)
+    assert pay[12:16] == b"fmt " and pay[36:40] == b"fact"
+    # fmt body spans bytes 20..36, fact body 44..48
+    cuts = [(c, "fmt") for c in range(20, 36)] + [(c, "fact") for c in range(44, 48)]
+    for cut, chunk in cuts:
+        for read in (
+            parse_wav_meta, parse_wav_meta_ext, parse_wav_samples, decode_wav_compressed
+        ):
+            with pytest.raises(ValueError, match=f"truncated {chunk} chunk"):
+                read(pay[:cut])
+
+
 @pytest.mark.parametrize("seed", range(30))
 def test_bitflipped_png_raises_or_decodes_identically(seed):
     """PNG carries per-chunk CRCs, so EVERY single-bit flip anywhere in
