@@ -92,12 +92,12 @@ def main() -> None:
     print("pruned search == in-memory search: OK")
 
     # --- the re-train FLIP (VERDICT r13 #4) --------------------------------
-    # When pq_index_monitor's gate reports retrain=True, the caller
-    # trains generation g+1 on the CURRENT corpus and commits a fresh
-    # index directory; searchers pick up the new generation while g
-    # stays immutable and readable. codebooks.json is the commit marker
-    # (written last, atomically), so a crash mid-flip is invisible and
-    # the retry is idempotent.
+    # When the per-cell residual error (ivfpq_qerr_by_cell, q255) says
+    # the codebooks no longer fit, the caller trains generation g+1 on
+    # the CURRENT corpus and commits a fresh index directory; searchers
+    # pick up the new generation while g stays immutable and readable.
+    # codebooks.json is the commit marker (written last, atomically), so
+    # a crash mid-flip is invisible and the retry is idempotent.
     from kassette_server_spark.operators.pq import (
         ivfpq_committed_generations,
         ivfpq_search_generation,
@@ -106,7 +106,7 @@ def main() -> None:
 
     gens_root = os.path.join(out, "generations")
     ivfpq_write_generation(emb, gens_root, 0, kc=8, m=8, k=16, iters=2)
-    # ... gate fires (pq_index_monitor -> retrain=True) ...
+    # ... residual error has drifted: re-train ...
     current_corpus = emb  # served corpus + the drifted stream, in production
     ivfpq_write_generation(current_corpus, gens_root, 1, kc=8, m=8, k=16, iters=2)
     print(f"committed generations: {ivfpq_committed_generations(gens_root)}")

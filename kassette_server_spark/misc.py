@@ -28,13 +28,3 @@ def with_counters(df: DataFrame, name: str) -> DataFrame:
     StreamingQueryListener events — the go-metrics gauge analogue
     (services/stats.go:40-68) without a second pass over the data."""
     return df.observe(name, F.count(F.lit(1)).alias("rows"))
-
-
-def write_s3_json(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ()) -> None:
-    """K7 S3 sink (integrations/s3/main.go:23-47 uploads one JSON blob
-    per flush): native distributed JSON write; with an s3a:// path and
-    cluster credentials this is the production form."""
-    w = df.write.mode("append")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.json(path)

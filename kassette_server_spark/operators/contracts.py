@@ -115,32 +115,6 @@ def validate_contract(
     return report
 
 
-def split_by_contract(
-    df: DataFrame, row_rules: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """Quarantine split: (passing, violating) — violating rows carry a
-    ``violated_rules`` array naming every rule they break (NULL
-    verdicts violate, as in validate_contract). The streaming use is a
-    foreachBatch gate in front of delivery: passing rows flow to the
-    destination, violating rows to a quarantine sink with their
-    reasons, so one bad upstream drop cannot poison a run NOR vanish
-    silently. Pure map-side: one array expression per row, a filter
-    each side, no shuffle."""
-    verdicts = F.array(
-        *[
-            F.when(cond.isNull() | ~cond, F.lit(name)).otherwise(F.lit(None))
-            for name, cond in row_rules.items()
-        ]
-    )
-    tagged = df.withColumn(
-        "violated_rules",
-        F.filter(verdicts, lambda v: v.isNotNull()),
-    )
-    passing = tagged.where(F.size("violated_rules") == 0).drop("violated_rules")
-    violating = tagged.where(F.size("violated_rules") > 0)
-    return passing, violating
-
-
 def contract_oracle_sql(
     source_sql: str,
     row_rules: dict[str, str],

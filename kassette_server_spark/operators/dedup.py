@@ -161,16 +161,6 @@ def _minhash_expr(seed: int, hash_fn: str) -> Column:
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 8, hash_fn: str = "md5"
-) -> DataFrame:
-    """One row per doc with minhash columns mh0..mh{n-1}.
-
-    Single shuffle: groupBy(doc_id) computes all minima in one pass
-    (partial aggregation map-side)."""
-    return sh.groupBy("doc_id").agg(*[_minhash_expr(s, hash_fn) for s in range(num_hashes)])
-
-
 def lsh_candidates(sig: DataFrame, num_hashes: int = 8, bands: int = 4) -> DataFrame:
     """Band the signature and self-join on (band_id, band_hash).
 
@@ -475,30 +465,6 @@ def connected_components(
     )
 
 
-def exact_dedup_stream(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: keep the FIRST-seen row per content
-    digest, across micro-batches, with bounded state.
-
-    ``dropDuplicatesWithinWatermark`` on the md5 digest is the
-    streaming counterpart of :func:`exact_dedup`: digest state is
-    evicted once the event-time watermark passes it, so state size is
-    bounded by the duplicate horizon (the ingest-pipeline contract:
-    re-sent batches arrive within minutes, not days), not by corpus
-    size. The digest is 16 bytes per in-horizon key — the same
-    shuffle-narrowing trick as the batch path.
-    """
-    return (
-        stream.withColumn("digest", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["digest"])
-    )
-
-
 def minhash_signature_col(text_col: Column | str = "text", k: int = 3, num_hashes: int = 8) -> Column:
     """Per-ROW minhash signature as array<long> — pure expressions, no
     cross-row aggregation, so it is computable on a stream. Component i
@@ -558,9 +524,9 @@ def minhash_dedup_stream(
     est_jaccard)``. A doc appears once per band; because the explode
     happens inside the micro-batch, ALL of a doc's band rows land in
     the same batch, so the final per-doc reduction (suppressed iff ANY
-    bucket matched) is batch-local and exact — apply
-    :func:`minhash_stream_doc_verdicts` inside ``foreachBatch`` (a
-    second *stateful* agg after this operator would hit Spark's
+    bucket matched: ``groupBy(doc_id)`` with ``min(dup_of)``) is
+    batch-local and exact — run it inside ``foreachBatch`` (a second
+    *stateful* agg after this operator would hit Spark's
     chained-stateful restrictions; the batch-local groupBy doesn't).
 
     Like the batch path, suppression is greedy first-seen-wins; a later
@@ -712,17 +678,6 @@ def minhash_dedup_stream_from_plan(
         bands=b,
         threshold=threshold,
         watermark=watermark,
-    )
-
-
-def minhash_stream_doc_verdicts(verdicts: DataFrame) -> DataFrame:
-    """Batch-local per-doc reduction of the per-bucket verdict stream
-    (use inside foreachBatch): a doc is kept iff NO bucket matched;
-    dup_of = the smallest matching keeper."""
-    return (
-        verdicts.groupBy("doc_id")
-        .agg(F.min("dup_of").alias("dup_of"), F.max("est_jaccard").alias("est_jaccard"))
-        .withColumn("keep", F.col("dup_of").isNull())
     )
 
 

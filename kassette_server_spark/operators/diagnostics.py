@@ -156,90 +156,6 @@ def key_skew_oracle_sql(
     """
 
 
-# -- streaming skew monitor ---------------------------------------------------
-def key_counts_merge_into_store(
-    batch_df: DataFrame, batch_id: int, key_col: str, store_path: str
-) -> bool:
-    """foreachBatch body: fold a micro-batch's per-key counts into a
-    persistent additive store (the countmin/hist ``merged_through``
-    batch-id fence — a replayed batch is skipped, not double-counted).
-
-    State is one row per DISTINCT key seen so far. That is the EXACT
-    profile; for open-ended key domains where even the key list is big
-    data, use the Count-Min heavy-hitter store (sketches.py, q85) —
-    this store is for join-key domains you are about to shuffle on,
-    where the count frame is exactly what the salting decision needs.
-    The merged frame is written DISTRIBUTED (write_store is a parquet
-    write of the dataframe; nothing is collected to the driver).
-    """
-    from .store import generation_committed, read_store, write_store
-
-    spark = batch_df.sparkSession
-    if generation_committed(store_path, batch_id):
-        return False
-    new = (
-        batch_df.where(F.col(key_col).isNotNull())
-        .groupBy(F.col(key_col).alias("key"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    old = read_store(spark, store_path)
-    if old is not None:
-        hwm = old.agg(F.max("merged_through")).collect()[0][0]
-        if hwm is not None and batch_id <= hwm:
-            return False
-        merged = (
-            old.select("key", "cnt")
-            .unionByName(new)
-            .groupBy("key")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        merged = new
-    out = merged.withColumn("merged_through", F.lit(int(batch_id)))
-    write_store(out, store_path, int(batch_id))
-    return True
-
-
-def skew_monitor(
-    batch_df: DataFrame,
-    batch_id: int,
-    key_col: str,
-    store_path: str,
-    target_partitions: int = 32,
-):
-    """foreachBatch body: fold the batch into the key-count store and
-    report the RUNNING skew stats — the live "is this join key getting
-    hot, what salt would I need now" monitor feeding the deterministic
-    salting paths (the batch analogue is q163).
-
-    Returns the 1-row (n_rows, n_keys, max_cnt, skew_ratio, salt_r)
-    report for this batch, or None on a replay skip / empty store —
-    at-least-once replays produce no duplicate monitoring rows.
-    """
-    from .store import read_store
-
-    merged = key_counts_merge_into_store(batch_df, batch_id, key_col, store_path)
-    if not merged:
-        return None
-    cur = read_store(batch_df.sparkSession, store_path).select("key", "cnt")
-    rows = cur.agg(
-        F.sum("cnt").alias("n_rows"),
-        F.count("*").alias("n_keys"),
-        F.max("cnt").alias("max_cnt"),
-    ).collect()
-    if not rows or rows[0].n_rows is None or rows[0].n_rows == 0:
-        return None
-    r = rows[0]
-    p = int(target_partitions)
-    return {
-        "n_rows": r.n_rows,
-        "n_keys": r.n_keys,
-        "max_cnt": r.max_cnt,
-        "skew_ratio": (r.max_cnt * r.n_keys) / r.n_rows,
-        "salt_r": (r.max_cnt * p + r.n_rows - 1) // r.n_rows,
-    }
-
-
 # -- join cardinality pre-flight ----------------------------------------------
 def join_cardinality_preflight(
     left: DataFrame,
@@ -460,63 +376,6 @@ def zonemap_oracle_sql(
              AS false_positive_rows
     FROM per_bucket
     """
-
-
-def join_size_monitor(
-    left_batch: DataFrame,
-    left_batch_id: int,
-    right_batch: DataFrame,
-    right_batch_id: int,
-    left_key: str,
-    right_key: str,
-    left_store: str,
-    right_store: str,
-):
-    """Streaming sibling of :func:`join_cardinality_preflight`: fold
-    each side's micro-batch into its own fenced key-count store
-    (:func:`key_counts_merge_into_store` twice — each store carries its
-    own ``merged_through`` fence, so either side replaying is skipped
-    independently), then report the RUNNING exact inner-join forecast
-    over the accumulated streams: "if I joined everything seen so far,
-    how many rows come out and how hot is the hottest key".
-
-    Returns a dict (total_out, n_matched_keys, max_out, max_share) —
-    the forecast after folding whichever sides were NEW — or None when
-    BOTH sides were replays (no duplicate monitoring rows under
-    at-least-once) or either store is still empty.
-    """
-    from .store import read_store
-
-    merged_l = key_counts_merge_into_store(
-        left_batch, left_batch_id, left_key, left_store
-    )
-    merged_r = key_counts_merge_into_store(
-        right_batch, right_batch_id, right_key, right_store
-    )
-    if not merged_l and not merged_r:
-        return None
-    spark = left_batch.sparkSession
-    sl = read_store(spark, left_store)
-    sr = read_store(spark, right_store)
-    if sl is None or sr is None:
-        return None
-    per_key = (
-        sl.select("key", F.col("cnt").alias("ca"))
-        .join(sr.select("key", F.col("cnt").alias("cb")), "key")
-        .select((F.col("ca") * F.col("cb")).alias("out_rows"))
-    )
-    rows = per_key.agg(
-        F.coalesce(F.sum("out_rows"), F.lit(0)).alias("total_out"),
-        F.count("*").alias("n_matched_keys"),
-        F.max("out_rows").alias("max_out"),
-    ).collect()
-    r = rows[0]
-    return {
-        "total_out": r.total_out,
-        "n_matched_keys": r.n_matched_keys,
-        "max_out": r.max_out,
-        "max_share": (r.max_out / r.total_out) if r.total_out else None,
-    }
 
 
 def shingle_saturation_report(

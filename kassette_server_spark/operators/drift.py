@@ -1064,8 +1064,7 @@ def embedding_label_sums(
     runs on: (label, n_<tag>, s<tag>_0..s<tag>_{dim-1}) with each
     component floor-quantized to 2^scale_bits fixed point. ADDITIVE
     (exact integer sums), so batches union-and-sum into the identical
-    frame a single pass would produce — the property the streaming
-    monitor's store merge relies on."""
+    frame a single pass would produce."""
     # r16 (driver-side build cost): each composed-Column spelling of
     # these dim aggregate expressions cost ~6 py4j round trips; at
     # dim=64 the construction alone measured ~0.85 s per side per
@@ -1187,91 +1186,3 @@ def embedding_drift_oracle_sql(
            END AS norm_ratio
     FROM v
     """
-
-
-def embedding_sums_merge_into_store(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_path: str,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale_bits: int = 20,
-) -> bool:
-    """foreachBatch body: fold a micro-batch's per-label embedding
-    sufficient statistics into a persistent store. The statistics are
-    ADDITIVE exact integers (embedding_label_sums), so the store
-    reuses the countmin/hist ``merged_through`` batch-id fence —
-    Spark's documented foreachBatch exactly-once recipe: a replayed
-    batch at or below the high-water mark is skipped rather than
-    double-counted, and the store always equals the single-pass sums
-    of everything merged. State is label-cardinality rows of dim+2
-    integers regardless of stream volume. Returns whether the batch
-    was merged."""
-    from .store import generation_committed, read_store, write_store
-
-    spark = batch_df.sparkSession
-    if generation_committed(store_path, batch_id):
-        return False
-    new = embedding_label_sums(
-        batch_df, label_col, vec_col, dim, scale_bits, tag="c"
-    )
-    old = read_store(spark, store_path)
-    if old is not None:
-        hwm = old.agg(F.max("merged_through")).collect()[0][0]
-        if hwm is not None and batch_id <= hwm:
-            return False
-        merged = (
-            old.drop("merged_through")
-            .unionByName(new)
-            .groupBy("label")
-            .agg(
-                F.sum("n_c").alias("n_c"),
-                *[F.sum(f"sc_{i}").alias(f"sc_{i}") for i in range(dim)],
-            )
-        )
-    else:
-        merged = new
-    rows = merged.collect()  # bounded: label-cardinality rows
-    from .store import local_frame
-
-    out = local_frame(spark, rows, merged.schema).withColumn(
-        "merged_through", F.lit(int(batch_id))
-    )
-    write_store(out, store_path, int(batch_id))
-    return True
-
-
-def embedding_drift_monitor(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_path: str,
-    ref_sums: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale_bits: int = 20,
-):
-    """foreachBatch body: the streaming sibling of q226 — fold the
-    micro-batch into the running sufficient-statistic store
-    (replay-fenced) and report the RUNNING corpus's per-label centroid
-    drift against a frozen reference (``ref_sums`` =
-    embedding_label_sums(reference, tag="r"), computed once and
-    reused). Because the statistics are exact additive integers, the
-    running report after batch N is bit-identical to the batch report
-    embedding_drift would give on the concatenation of batches 0..N —
-    the streamed monitor can never diverge from its batch twin.
-
-    Returns the list of (label, n_ref, n_cur, cos_centroid,
-    norm_ratio) rows for this batch, or None when the batch was a
-    replay skip (at-least-once replays produce no duplicate report).
-    """
-    from .store import read_store
-
-    merged = embedding_sums_merge_into_store(
-        batch_df, batch_id, store_path, label_col, vec_col, dim, scale_bits
-    )
-    if not merged:
-        return None
-    cur = read_store(batch_df.sparkSession, store_path).drop("merged_through")
-    return _embedding_drift_from_sums(ref_sums, cur, dim).collect()

@@ -592,109 +592,6 @@ def ndcg_oracle_sql(
     """
 
 
-# -- streaming AUC monitor ----------------------------------------------------
-def score_label_merge_into_store(
-    batch_df: DataFrame,
-    batch_id: int,
-    score_col: str,
-    label_col: str,
-    store_path: str,
-) -> bool:
-    """foreachBatch body: fold a micro-batch's per-score (cnt, pos)
-    counts into a persistent additive store under the countmin/hist
-    ``merged_through`` batch-id fence (replays skipped, never
-    double-counted; distributed parquet write, nothing collected).
-
-    State is one row per DISTINCT score value — the same
-    value-cardinality bound :func:`roc_auc_by` ranks over. Quantize
-    continuous scores upstream if their cardinality is unbounded.
-    """
-    from .store import generation_committed, read_store, write_store
-
-    spark = batch_df.sparkSession
-    if generation_committed(store_path, batch_id):
-        return False
-    new = (
-        batch_df.where(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(F.col(score_col).alias("score"))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col(label_col).cast("long")).alias("pos"),
-        )
-    )
-    old = read_store(spark, store_path)
-    if old is not None:
-        hwm = old.agg(F.max("merged_through")).collect()[0][0]
-        if hwm is not None and batch_id <= hwm:
-            return False
-        merged = (
-            old.select("score", "cnt", "pos")
-            .unionByName(new)
-            .groupBy("score")
-            .agg(F.sum("cnt").alias("cnt"), F.sum("pos").alias("pos"))
-        )
-    else:
-        merged = new
-    out = merged.withColumn("merged_through", F.lit(int(batch_id)))
-    write_store(out, store_path, int(batch_id))
-    return True
-
-
-def auc_monitor(
-    batch_df: DataFrame,
-    batch_id: int,
-    score_col: str,
-    label_col: str,
-    store_path: str,
-):
-    """foreachBatch body: fold the batch into the score/label store and
-    report the RUNNING exact AUC — "is the quality score still
-    separating good from bad as the stream drifts" (the streaming
-    sibling of q158, same midrank identity, same integer core).
-
-    Returns a dict (n_pos, n_neg, two_u, auc) for this batch — auc is
-    None while the accumulated stream is single-class — or None on a
-    replay skip / empty store (no duplicate reports under
-    at-least-once).
-    """
-    from .store import read_store
-
-    merged = score_label_merge_into_store(
-        batch_df, batch_id, score_col, label_col, store_path
-    )
-    if not merged:
-        return None
-    cur = read_store(batch_df.sparkSession, store_path).select(
-        "score", "cnt", "pos"
-    )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = cur.select(
-        "cnt",
-        "pos",
-        (2 * F.coalesce(F.sum("cnt").over(w), F.lit(0)) + F.col("cnt") + 1).alias(
-            "two_rank"
-        ),
-    )
-    rows = ranked.agg(
-        F.sum("pos").alias("n_pos"),
-        F.sum(F.col("cnt") - F.col("pos")).alias("n_neg"),
-        F.sum(F.col("pos") * F.col("two_rank")).alias("two_r_pos"),
-    ).collect()
-    if not rows or rows[0].n_pos is None:
-        return None
-    r = rows[0]
-    two_u = r.two_r_pos - r.n_pos * (r.n_pos + 1)
-    denom = 2 * r.n_pos * r.n_neg
-    return {
-        "n_pos": r.n_pos,
-        "n_neg": r.n_neg,
-        "two_u": two_u,
-        "auc": (two_u / denom) if denom else None,
-    }
-
-
 # -- Spearman rank correlation ------------------------------------------------
 def spearman_by(
     df: DataFrame, group_col: str, x_col: str, y_col: str

@@ -1,11 +1,5 @@
-"""Physical-layout operators: bucketed co-located joins and salted
-skew joins — the two layout levers that matter most at 100 TB.
-
-Bucketing: write both join sides bucketed by the join key →
-subsequent equi-joins read bucket-aligned files and skip the shuffle
-entirely (SortMergeJoin with zero Exchange). This is the engine's
-answer to the reference's per-destination physical tables: pay the
-layout cost once at write, join for free forever.
+"""Physical-layout operators: salted skew joins, scan-parallelism
+guards and z-order keys.
 
 Salting: a join key with a celebrity value overwhelms one task. AQE
 skew-join splits oversized partitions automatically for sort-merge
@@ -18,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # A prior width-guaranteeing spread as it prints in the analyzed
@@ -37,30 +31,6 @@ _RR_REPARTITION = re.compile(
     r"\bRepartition (\d+), true\b"
     r"|\bRepartitionByExpression \[xxhash64\([^\]]*\)\], (\d+)"
 )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist bucketed (and optionally sorted) by the join key."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, left_key: str, right_key: str
-) -> DataFrame:
-    """Join two same-bucketed tables — Catalyst sees matching output
-    partitionings and plans a shuffle-free join."""
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, lt[left_key] == rt[right_key])
 
 
 def salted_join(

@@ -11,9 +11,8 @@ schemas. Two tiers of codecs:
   dimensions/components/progressive flag) — see encode_png/
   parse_png_meta, encode_wav/parse_wav_meta, encode_jpeg/
   parse_jpeg_meta and the sniffing decode_media_meta.
-- One stubbed hook where the environment lacks the library
-  (`real_decode` for PIL-tier formats — WebP/TIFF/...);
-  `decode_image_meta` keeps its deterministic fake for the
+- No library tier: PIL-tier formats (WebP/TIFF/...) have no decoder
+  here; `decode_image_meta` keeps its deterministic fake for the
   plumbing-only contract (q41). Video is REAL as of r15: MJPEG-in-AVI
   (RIFF walk + per-frame baseline-JPEG decode, `encode_avi_mjpeg` /
   `parse_avi_meta` / `decode_avi_frames` / `frame_sample`).
@@ -86,19 +85,6 @@ def _fake_decode(payload: bytes) -> dict:
     return {"n_bytes": n, "width": n % 640, "height": (n * 7) % 480, "fmt": "fake/rgb8"}
 
 
-def real_decode(payload: bytes) -> dict:  # pragma: no cover - env has no codecs
-    """Plug point for a LIBRARY codec (PIL.Image.open etc.) covering
-    formats beyond the stdlib tier. NOTE the stdlib tier below is now
-    a real PIXEL tier for the formats a synthetic corpus exercises:
-    PNG (decode_png_pixels — all non-palette 8-bit color types, all
-    five filters), baseline JPEG (decode_jpeg_pixels — real Huffman
-    scan, 1/3 components), GIF (decode_gif_pixels — full LZW), BMP,
-    and WAV — and since r13 progressive/subsampled/AC-refined JPEG,
-    since r15 MJPEG-in-AVI video; this hook remains for WebP, TIFF,
-    and friends."""
-    raise NotImplementedError("image codec not available in this environment")
-
-
 def decode_image_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
     """Binary column → typed metadata via Arrow-batched mapInPandas."""
 
@@ -110,38 +96,6 @@ def decode_image_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = 
             yield out
 
     return _spread(df).mapInPandas(batches, schema=META_SCHEMA)
-
-
-AUDIO_META_SCHEMA = "doc_id long, n_bytes long, sample_rate long, n_samples long, duration_ms long, fmt string"
-
-
-def _fake_audio_decode(payload: bytes) -> dict:
-    """Deterministic stand-in for an audio codec (librosa/ffmpeg not
-    available): metadata derived from payload length."""
-    n = len(payload)
-    sr = 16000
-    n_samples = n * 8  # pretend 8 samples per byte
-    return {
-        "n_bytes": n,
-        "sample_rate": sr,
-        "n_samples": n_samples,
-        "duration_ms": (n_samples * 1000) // sr,
-        "fmt": "fake/pcm16",
-    }
-
-
-def decode_audio_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
-    """Audio twin of decode_image_meta: binary → typed metadata via
-    Arrow-batched mapInPandas; codec stubbed, plumbing real."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = pdf[payload_col].map(_fake_audio_decode)
-            out = pd.DataFrame(list(metas))
-            out.insert(0, "doc_id", pdf[id_col].values)
-            yield out
-
-    return _spread(df).mapInPandas(batches, schema=AUDIO_META_SCHEMA)
 
 
 # frame_sample (video) is REAL as of r15 — see the AVI/MJPEG section at
@@ -1052,6 +1006,8 @@ def _jpeg_segments(payload: bytes, pos: int = 2, scans: bool = False):
         if marker in _JPEG_STANDALONE:
             pos += 2
             continue
+        if pos + 4 > n:  # a scan walk can reach here with 2-3 bytes left
+            raise ValueError(f"truncated segment {marker:#x}")
         (length,) = struct.unpack_from(">H", payload, pos + 2)
         if length < 2 or pos + 2 + length > n:
             raise ValueError(f"truncated segment {marker:#x}")
@@ -1465,11 +1421,6 @@ def encode_jpeg_pixels(
     )
 
 
-def encode_jpeg_gray_pixels(width: int, height: int, pixels: bytes) -> bytes:
-    """Grayscale shorthand for :func:`encode_jpeg_pixels`."""
-    return encode_jpeg_pixels(width, height, pixels, channels=1)
-
-
 def encode_jpeg_progressive_pixels(
     width: int, height: int, pixels: bytes, channels: int = 1,
     subsampling: str = "444", ac_refine: bool = False,
@@ -1774,6 +1725,8 @@ def _jpeg_frame(data: bytes) -> tuple[int, int, list[tuple[int, int, int, int]]]
     MCU), 4:2:0 (luma 2x2), 4:2:2 (luma 2x1) or 4:1:1 (luma 4x1) with
     1x1 chroma; anything else (inverted ratios, 1x4, non-dyadic, ...)
     raises rather than mis-reads."""
+    if len(data) < 6:
+        raise ValueError("truncated SOF header")
     precision, height, width, ncomp = struct.unpack_from(">BHHB", data, 0)
     if precision != 8 or ncomp not in (1, 3):
         raise ValueError(
@@ -1863,6 +1816,20 @@ class _JpegTables:
                 raise ValueError("missing quant table")
             qts.append(np.array(self.quant[ctq], dtype=np.float64))
         return qts
+
+
+def _jpeg_scan_header(data: bytes) -> tuple[list[tuple[int, int]], int, int, int]:
+    """The decoders' one SOS reader: ([(component id, table byte)],
+    Ss, Se, AhAl). Raises ValueError when the header is shorter than
+    its component count says (a flipped count must not index past the
+    segment) or the spectral band leaves 0..63."""
+    if not data or len(data) < 4 + 2 * data[0]:
+        raise ValueError("truncated SOS header")
+    ns = data[0]
+    ss, se, ahal = data[1 + 2 * ns : 4 + 2 * ns]
+    if not ss <= se <= 63:
+        raise ValueError(f"bad spectral selection Ss={ss} Se={se}")
+    return [(data[1 + 2 * cn], data[2 + 2 * cn]) for cn in range(ns)], ss, se, ahal
 
 
 def _jpeg_reconstruct(
@@ -1973,19 +1940,16 @@ def _decode_jpeg_progressive(
             mw, mh, geo, coef, prev_dc = frame_state(sof)
         elif marker == 0xDA:
             width, height, comps = sof
-            ns = data[0]
+            scan_comps, ss, se, ahal = _jpeg_scan_header(data)
+            ns = len(scan_comps)
             sel = []
-            for cn in range(ns):
-                cid = data[1 + 2 * cn]
-                tbl = data[2 + 2 * cn]
+            for cid, tbl in scan_comps:
                 frame_idx = next(
                     (i for i, c in enumerate(comps) if c[0] == cid), None
                 )
                 if frame_idx is None:
                     raise ValueError(f"scan component {cid} absent from frame")
                 sel.append((frame_idx, tbl >> 4, tbl & 0x0F))
-            ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-            ahal = data[3 + 2 * ns]
             ah, al = ahal >> 4, ahal & 0x0F
             for fi, _, _ in sel:  # record delivery for the EOI completeness check
                 for k in range(ss, se + 1):
@@ -2265,14 +2229,11 @@ def decode_jpeg_pixels(
         elif marker == 0xDA:  # SOS
             if sof is None:
                 raise ValueError("SOS before SOF")
-            ns = data[0]
-            if ns != len(sof[2]):
+            scan_comps = _jpeg_scan_header(data)[0]
+            if len(scan_comps) != len(sof[2]):
                 raise ValueError("scan must cover every frame component")
-            sel = {}  # component id -> (dc table, ac table)
-            for cn in range(ns):
-                cid = data[1 + 2 * cn]
-                tbl = data[2 + 2 * cn]
-                sel[cid] = (tbl >> 4, tbl & 0x0F)
+            # component id -> (dc table, ac table)
+            sel = {cid: (tbl >> 4, tbl & 0x0F) for cid, tbl in scan_comps}
             scan_start = end
             break
     if sof is None or scan_start is None:
@@ -3077,23 +3038,6 @@ def transcode_gif_to_png(payload: bytes) -> bytes:
     return encode_png_palette(w, h, idx, gct)
 
 
-def transcode_png_to_gif(payload: bytes) -> bytes:
-    """The REVERSE lossless direction (closing the pair for the
-    cross-codec fuzzer): grayscale PNG → GIF with the identity global
-    color table. An 8-bit gray sample IS its palette index under the
-    identity table, so the transcode is exact for any grayscale image
-    (all five filters, both interlace methods — whatever the decode
-    path handles). Non-grayscale PNGs raise: RGB has no faithful
-    256-entry palette in general, and guessing one would be lossy."""
-    w, h, ch, px = decode_png_pixels(payload)
-    if ch != 1:
-        raise ValueError(
-            "PNG->GIF transcode supports grayscale PNGs only "
-            f"(got {ch} channels; a general RGB palette would be lossy)"
-        )
-    return encode_gif_pixels(w, h, px)
-
-
 def gif_to_png_transcode_stats(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -3293,7 +3237,7 @@ def encode_media_payloads_ext(df: DataFrame, id_col: str = "doc_id") -> DataFram
 # stdlib byte surgery. Full-pixel JPEG transforms joined in r11-r13
 # (scan codec + transcodes) and video in r15 (MJPEG-in-AVI: the real
 # frame_sample at the end of this module); only the PIL-tier formats
-# (WebP/TIFF) remain behind the real_decode plug point.
+# (WebP/TIFF) have no decoder.
 
 
 def encode_bmp_pixels(width: int, height: int, pixels: bytes) -> bytes:
@@ -3742,6 +3686,8 @@ def parse_wav_samples(payload: bytes) -> list[int]:
     audio_format, channels, _, _, _, bits = fmt
     if audio_format != 1 or channels != 1 or bits != 16:
         raise ValueError("parse_wav_samples supports mono PCM-16 only")
+    if len(data) % 2:
+        raise ValueError("truncated PCM-16 data chunk: odd byte count")
     return [v[0] for v in struct.iter_unpack("<h", data)]
 
 
@@ -4168,6 +4114,8 @@ def _ima_decode_block_stream(
     for boff in range(0, len(data), block_align):
         if wrote >= n:
             break
+        if boff + 4 > len(data):
+            raise ValueError("truncated IMA block header")
         first, index, _ = struct.unpack_from("<hBB", data, boff)
         if not 0 <= index <= 88:
             raise ValueError("corrupt IMA block header: bad step index")
@@ -4981,55 +4929,6 @@ def avi_audio_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
 
     return _map_ids(df, id_col, rows, AVI_AUDIO_SCHEMA)
-
-
-def avi_audio_extract(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Generic AVI-audio extraction over a binary payload column: one
-    row per document with an audio stream — (doc_id, audio_fmt,
-    audio_rate, n_samples, n_chunks, decoded_sum). Corrupt payloads or
-    audio-less clips yield zero rows (filter-side semantics, matching
-    frame_sample's degrade contract — nothing kills a 100 TB scan)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    meta, dec = extract_avi_audio(bytes(payload))
-                except (
-                    ValueError,
-                    struct.error,
-                    zlib.error,
-                    KeyError,
-                    IndexError,
-                    ZeroDivisionError,
-                ):
-                    continue
-                rows.append(
-                    (
-                        int(doc_id),
-                        meta["audio_fmt"],
-                        meta["audio_rate"],
-                        meta["n_audio_samples"],
-                        meta["n_audio_chunks"],
-                        int(dec.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "audio_fmt", "audio_rate",
-                    "n_samples", "n_chunks", "decoded_sum",
-                ],
-            )
-
-    return _spread(df).mapInPandas(
-        batches,
-        schema="doc_id long, audio_fmt long, audio_rate long, "
-        "n_samples long, n_chunks long, decoded_sum long",
-    )
 
 
 def mjpeg_avi_frame_stats(

@@ -1032,7 +1032,7 @@ def ivfpq_encode(
     for 256 float32 bytes, the 32× compression the index stores.
     ``with_err=True`` appends ``qerr``: the exact int64 residual
     quantization error Σ_m ||r_m − cent_m[code_m]||² — the additive
-    statistic the streaming index's re-train gate watches."""
+    statistic whose growth says the codebooks need re-training."""
     d = dim // m
     vdf = _raw(vectors, id_col, vec_col, id_alias)
     ccids, ccents = _np_book({0: coarse}, 1)[0]
@@ -1453,10 +1453,9 @@ def ivfpq_qerr_by_cell(
 ) -> DataFrame:
     """The q255 spec surface: per coarse cell, the exact residual
     quantization error Σ||r_m − cent_m[code_m]||² of its members under
-    the trained residual codebooks — the PRECISE statistic the
-    streaming index's re-train gate (pq_index_monitor) folds and
-    compares, surfaced as an oracle-checkable batch query so the
-    gate's arithmetic has a driver row, not just fixture tests. One
+    the trained residual codebooks — the PRECISE statistic that says
+    when the codebooks need re-training, surfaced as an
+    oracle-checkable batch query. One
     map-only encode pass (books are closure captures) + one ≤ kc-row
     group exchange. Output: (cid, n, err_sum, err_min, err_max)."""
     seeds = _collect_seed_rows(
@@ -1562,241 +1561,17 @@ def ivfpq_recall_oracle_sql(
     )
 
 
-# --- streaming index maintenance (VERDICT r12 "Next round #7") --------------
-#
-# Every other store in the engine has a streaming twin; this closes the
-# ANN index's gap. The design splits the index into two kinds of state:
-#
-# 1. The ENCODED CORPUS — append-only and unbounded. Each micro-batch
-#    lands as its own parquet directory ``batch-<id>/`` whose _SUCCESS
-#    marker doubles as the replay fence (the ledger's append
-#    discipline, not the register stores' rewrite discipline): a
-#    replayed batch id is skipped, a crash mid-write leaves no marker
-#    and the rewrite is invisible to readers. Because the codebooks
-#    are PINNED for the generation, incremental encode is bit-identical
-#    to what a batch rebuild would produce — the twin-equality the
-#    fixture test pins.
-#
-# 2. The RE-TRAIN GATE — bounded (one row). Residual quantization
-#    error Σ||r − cent[code]||² is an additive exact integer, so the
-#    running stream error folds into a store.py fenced-generation store
-#    exactly like the drift twins, and the gate compares the stream's
-#    mean error against the training-time baseline by integer
-#    cross-multiplication (no division, no floats): when arriving
-#    vectors stop looking like the corpus the codebooks were trained
-#    on, mean qerr rises and the gate says "re-train" — the caller
-#    then trains generation g+1 and writes a fresh index directory
-#    (codebooks are never mutated in place).
-
-
-def ivfpq_fit_err(
-    vectors: DataFrame,
-    coarse: list[tuple[int, tuple[int, ...]]],
-    book: Codebook,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[int, int]:
-    """Training-time baseline for the re-train gate: (n, Σ qerr) of
-    the TRAINING corpus under its own codebooks — one map-only encode
-    pass + a 1-row aggregate."""
-    enc = ivfpq_encode(
-        vectors, coarse, book, m=m, dim=dim,
-        id_col=id_col, vec_col=vec_col, with_err=True,
-    )
-    row = enc.agg(
-        F.count("*").alias("n"), F.sum("qerr").alias("e")
-    ).collect()[0]
-    return int(row["n"]), int(row["e"] or 0)
-
-
-def _index_batch_dir(index_path: str, batch_id: int) -> str:
-    return f"{index_path}/batch-{int(batch_id)}"
-
-
-def pq_index_append(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    coarse: list[tuple[int, tuple[int, ...]]],
-    book: Codebook,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> bool:
-    """foreachBatch body: encode the micro-batch against the PINNED
-    codebook generation and append it to the index as its own
-    committed parquet directory. Replay-fenced by the directory's
-    _SUCCESS marker — a re-delivered batch id is skipped, so the index
-    holds each vector exactly once. Returns whether the batch was
-    appended."""
-    import os
-
-    bdir = _index_batch_dir(index_path, batch_id)
-    if os.path.exists(os.path.join(bdir, "_SUCCESS")):
-        return False
-    # id_alias matches ivfpq_write_index's output so a read_pq_index
-    # frame feeds _ivfpq_rank / pq_index_search directly (ADVICE r13:
-    # a vec_id-aliased index had no search path).
-    enc = ivfpq_encode(
-        batch_df, coarse, book, m=m, dim=dim,
-        id_col=id_col, vec_col=vec_col,
-        id_alias="neighbor_id", with_err=True,
-    )
-    enc.write.mode("overwrite").parquet(bdir)
-    return True
-
-
-def read_pq_index(spark, index_path: str) -> DataFrame | None:
-    """Union of all COMMITTED batch directories (uncommitted ones are
-    invisible, exactly like store.py's generation rule). None when no
-    batch has committed yet."""
-    import os
-
-    if not os.path.isdir(index_path):
-        return None
-    dirs = sorted(
-        os.path.join(index_path, e)
-        for e in os.listdir(index_path)
-        if e.startswith("batch-")
-        and os.path.exists(os.path.join(index_path, e, "_SUCCESS"))
-    )
-    if not dirs:
-        return None
-    # mergeSchema: batch dirs written before the id_alias change carry
-    # ``vec_id`` instead of ``neighbor_id``; without the merge the read
-    # takes ONE file's schema and the other generation's ids silently
-    # read as null. The merge is over a handful of 4-column schemas —
-    # footer-only work, no data cost (ADVICE r14).
-    enc = spark.read.option("mergeSchema", "true").parquet(*dirs)
-    # Backward compat (ADVICE r14): a mixed pre/post-upgrade directory
-    # surfaces BOTH id columns with nulls from the schema union.
-    # Normalize on read so pq_index_search works across an upgrade
-    # without rebuilding the index.
-    if "vec_id" in enc.columns:
-        if "neighbor_id" in enc.columns:
-            enc = enc.withColumn(
-                "neighbor_id", F.coalesce("neighbor_id", "vec_id")
-            ).drop("vec_id")
-        else:
-            enc = enc.withColumnRenamed("vec_id", "neighbor_id")
-    return enc
-
-
-def pq_index_search(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    coarse: list[tuple[int, tuple[int, ...]]],
-    book: Codebook,
-    m: int = 8,
-    k: int = 16,
-    dim: int = 64,
-    topk: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame | None:
-    """Search a STREAMING index built by ``pq_index_append`` /
-    ``pq_index_monitor`` (ADVICE r13: the streaming index previously
-    had no search path). Same probe→broadcast-equi-join→rank pipeline
-    as ``ivfpq_search_index``; the difference is physical, not
-    logical — batch directories are flat parquet, so unprobed cells
-    are dropped by the equi-join rather than by partition pruning
-    (re-layout via ``ivfpq_write_index`` when the stream quiesces to
-    get the pruned-scan plan back). None when no batch has committed.
-    Identical results to ``ivfpq_adc_topk`` with the same codebooks."""
-    enc = read_pq_index(spark, index_path)
-    if enc is None:
-        return None
-    probes = _ivfpq_probe_frame(
-        queries, coarse, book, m=m, k=k, dim=dim, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col,
-    )
-    return _ivfpq_rank(enc, probes, m=m, k=k, topk=topk)
-
-
-def pq_index_monitor(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    store_path: str,
-    coarse: list[tuple[int, tuple[int, ...]]],
-    book: Codebook,
-    base: tuple[int, int],
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    deg_num: int = 3,
-    deg_den: int = 2,
-) -> dict | None:
-    """foreachBatch body composing the append with the re-train gate:
-    fold the batch's (n, Σ qerr) into a one-row fenced store and
-    report whether the STREAM's mean residual error has degraded past
-    ``deg_num/deg_den``× the training baseline ``base = (n0, err0)``
-    (integer cross-multiplication: e·n0·den > e0·n·num — exact, no
-    floats). Returns {"n": .., "err_sum": .., "retrain": bool} for a
-    merged batch, None for a replay skip. When ``retrain`` is True the
-    caller trains generation g+1 on the current corpus and starts a
-    fresh index directory; this function never mutates codebooks."""
-    from .store import generation_committed, read_store, write_store
-
-    spark = batch_df.sparkSession
-    # The append fence and the store fence are INDEPENDENT (ADVICE r13):
-    # a crash after the index batch committed but before the store merge
-    # replays with appended=False, and the batch must still fold into the
-    # gate store or its (n, err_sum) is lost forever. So never
-    # short-circuit on the append result alone — only the store's own
-    # fences below decide whether this batch's statistic is already in.
-    pq_index_append(
-        batch_df, batch_id, index_path, coarse, book,
-        m=m, dim=dim, id_col=id_col, vec_col=vec_col,
-    )
-    if generation_committed(store_path, batch_id):
-        return None
-    # Read the 1-row store BEFORE the batch directory: a replayed batch
-    # older than ``merged_through`` is already folded, and the store
-    # probe is a single-row read while the batch dir is a full (if
-    # small) parquet scan (ADVICE r14 — don't pay the re-read when both
-    # fences are committed).
-    old = read_store(spark, store_path)
-    prev = old.collect()[0] if old is not None else None
-    if prev is not None and batch_id <= int(prev["merged_through"]):
-        return None
-    bdf = spark.read.parquet(_index_batch_dir(index_path, batch_id))
-    brow = bdf.agg(
-        F.count("*").alias("n"), F.sum("qerr").alias("e")
-    ).collect()[0]
-    bn, be = int(brow["n"]), int(brow["e"] or 0)
-    if prev is not None:
-        n, e = int(prev["n"]) + bn, int(prev["err_sum"]) + be
-    else:
-        n, e = bn, be
-    from .store import local_frame
-
-    out = local_frame(
-        spark, [(n, e, int(batch_id))], "n long, err_sum long, merged_through long"
-    )
-    write_store(out, store_path, int(batch_id))
-    n0, e0 = base
-    retrain = n > 0 and n0 > 0 and e * n0 * deg_den > e0 * n * deg_num
-    return {"n": n, "err_sum": e, "retrain": retrain}
-
-
 # --- codebook generations: the re-train FLIP (VERDICT r13 "Next #4") --------
 #
-# pq_index_monitor's gate says "re-train"; these close the loop. A
-# GENERATION is a self-contained directory ``gen-<g>/`` holding a
-# cell-partitioned index (ivfpq_write_index layout) plus a
-# ``codebooks.json`` sidecar. The sidecar is written LAST via
-# tempfile+rename, so its presence IS the commit marker: a crash
-# mid-flip leaves gen-<g> invisible to loaders and the retry rewrites
-# it from scratch. Committed generations are immutable — the flip only
-# ever ADDS ``gen-<g+1>``; searchers pinned to g keep reading g's
-# directory bit-for-bit while new searchers pick up g+1.
+# Re-training never mutates codebooks in place. A GENERATION is a
+# self-contained directory ``gen-<g>/`` holding a cell-partitioned
+# index (ivfpq_write_index layout) plus a ``codebooks.json`` sidecar.
+# The sidecar is written LAST via tempfile+rename, so its presence IS
+# the commit marker: a crash mid-flip leaves gen-<g> invisible to
+# loaders and the retry rewrites it from scratch. Committed generations
+# are immutable — the flip only ever ADDS ``gen-<g+1>``; searchers
+# pinned to g keep reading g's directory bit-for-bit while new
+# searchers pick up g+1.
 
 
 def codebooks_to_json(

@@ -2,21 +2,18 @@
 525-576 + priorityqueue.go).
 
 The reference buffers events per user and flushes on (a) event-count
-threshold, (b) inactivity timeout tracked by a min-heap. In Spark the
-heap/state machinery IS the engine:
+threshold, (b) inactivity timeout tracked by a min-heap. Here:
 
-- batch: gap-based island detection (lag + cumulative sum) — one
-  window over (user, ts); the exact batch analogue of inactivity
-  sessions (declared query q24 oracle-checks it);
-- streaming: ``session_window(ts, gap)`` + watermark — Spark's state
-  store replaces the reference's in-memory heap and survives restarts
-  (the reference loses its buffers on crash; processor.go:525-576);
-- count-triggered flush (the reference's sessionThresholdEvents) has
-  no session_window equivalent → optional post-split on cumulative
-  count inside each gap-session, preserving parity when a threshold is
-  configured. (Note the reference never assigns its thresholds —
-  processor.go:32-33 — so the effective default is flush-everything;
-  we make them real parameters.)
+- gap-based island detection (lag + cumulative sum) — one window over
+  (user, ts); the exact batch analogue of inactivity sessions
+  (declared query q24 oracle-checks it);
+- count-triggered flush (the reference's sessionThresholdEvents) is an
+  optional post-split on cumulative count inside each gap-session.
+
+The reference never assigns its thresholds (processor.go:32-33), so in
+effect it flushes everything; the server's streams behave the same way
+and run no sessionizer. Here the thresholds are real parameters of the
+batch operator.
 
 Scale: one shuffle keyed by user_id; hot users (celebrity keys) are
 the classic skew case — AQE skew-join handles joins, and for the
@@ -70,133 +67,3 @@ def sessionize_batch(
             + ((F.col("_n") - 1) / count_threshold).cast("long"),
         ).drop("_n")
     return out.drop("_is_new")
-
-
-def session_stats(sessions: DataFrame, user_col: str = "user_id") -> DataFrame:
-    return sessions.groupBy(user_col, "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-    )
-
-
-def sessionize_stream_count_trigger(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    count_threshold: int = 100,
-    watermark_minutes: int = 60,
-) -> DataFrame:
-    """Exact W1 parity: flush a user's session when the buffered event
-    count exceeds the threshold (processor/processor.go:380-382) OR the
-    inactivity gap elapses (W2 heap sweep → event-time timeout).
-
-    This is the applyInPandasWithState path — the one reference
-    behavior session_window can't express (count-triggered flush).
-    State per user: (n, start_us, last_us). Arrow-batched; state is
-    tuple-of-scalars so the state store stays tiny even for hot users.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_ms = gap_minutes * 60 * 1000
-
-    def flush_sessions(key, pdfs, state):
-        import pandas as pd
-
-        user = key[0]
-        if state.hasTimedOut:
-            n, start_us, last_us = state.get
-            state.remove()
-            if n > 0:  # n == 0: count-flush already emitted everything
-                yield pd.DataFrame(
-                    [
-                        {
-                            "user_id": user,
-                            "n_events": n,
-                            "session_start": pd.Timestamp(start_us, unit="us"),
-                            "session_end": pd.Timestamp(last_us, unit="us"),
-                            "flush_reason": "timeout",
-                        }
-                    ]
-                )
-            return
-        n, start_us, last_us = state.get if state.exists else (0, None, None)
-        out = []
-        ts_all = pd.concat([pdf[ts_col] for pdf in pdfs]).sort_values()
-        for ts in ts_all:
-            us = ts.value // 1000
-            if last_us is not None and (us - last_us) > gap_ms * 1000:
-                if n > 0:  # an empty buffer right after a count-flush has nothing to emit
-                    out.append((user, n, start_us, last_us, "gap"))
-                n, start_us = 0, None
-            n += 1
-            start_us = us if start_us is None else start_us
-            last_us = us
-            if n >= count_threshold:
-                out.append((user, n, start_us, last_us, "count"))
-                n, start_us = 0, None  # keep last_us: next gap check continues
-        if n > 0:
-            state.update((n, start_us, last_us))
-            # event-time timeouts below the current watermark are
-            # rejected by Spark (legally-late events can put
-            # last_us + gap behind it) — clamp to watermark + 1ms
-            timeout_ms = max(last_us // 1000 + gap_ms, state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(timeout_ms)
-        else:
-            # buffer drained by a count flush — nothing left to time out
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": u,
-                        "n_events": c,
-                        "session_start": pd.Timestamp(s, unit="us"),
-                        "session_end": pd.Timestamp(e, unit="us"),
-                        "flush_reason": r,
-                    }
-                    for (u, c, s, e, r) in out
-                ]
-            )
-
-    return (
-        events.withWatermark(ts_col, f"{watermark_minutes} minutes")
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            flush_sessions,
-            outputStructType=(
-                "user_id long, n_events long, session_start timestamp,"
-                " session_end timestamp, flush_reason string"
-            ),
-            stateStructType="n long, start_us long, last_us long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def sessionize_stream(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    watermark_minutes: int = 60,
-) -> DataFrame:
-    """Streaming sessionization: watermark + session_window.
-
-    Emits one row per closed session (append mode) with the same stats
-    as the batch path. Spark's state store replaces the reference's
-    min-heap (W2) and the watermark replaces its wall-clock sweep —
-    and unlike the reference, state survives restarts via checkpoint.
-    """
-    return (
-        events.withWatermark(ts_col, f"{watermark_minutes} minutes")
-        .groupBy(user_col, F.session_window(F.col(ts_col), f"{gap_minutes} minutes").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-        )
-        .select(user_col, "w.start", "w.end", "n_events", "session_start", "session_end")
-    )

@@ -374,58 +374,6 @@ def quantized_topk(
     return _partition_topk_then_rank(scored, k, "qcos")
 
 
-def hyperplane_bucket(vec: Column, dim: int, n_planes: int = 8, seed: str = "lsh") -> Column:
-    """Deterministic random-hyperplane LSH bucket id (string of sign
-    bits). Hyperplane r_i component j = centered md5-derived value of
-    (seed, i, j) — deterministic, no RNG state, identical on any
-    cluster size.
-    """
-    bits = []
-    for i in range(n_planes):
-        comps = F.array(
-            *[
-                (
-                    F.conv(F.substring(F.md5(F.lit(f"{seed}|{i}|{j}")), 1, 8), 16, 10).cast("double")
-                    - F.lit(2147483647.5)
-                )
-                for j in range(dim)
-            ]
-        )
-        bits.append(F.when(dot(vec, comps) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: only corpus vectors in the query's hyperplane
-    bucket are scored. Bucket join replaces the cross product — the
-    100 TB path (corpus shuffled once by bucket, queries broadcast)."""
-    from pyspark.sql import Window as W
-
-    c = vectors.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv"))
-    c = c.withColumn("bucket", hyperplane_bucket(F.col("cv"), dim, n_planes))
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"))
-    q = q.withColumn("bucket", hyperplane_bucket(F.col("qv"), dim, n_planes))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
-
-
 def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -680,8 +628,8 @@ def embedding_near_dup_pairs_lsh(
 ) -> DataFrame:
     """Distributed near-dup pairs: multi-table hyperplane-LSH candidate
     generation + the shared exact-fold verify. Same contract as
-    embedding_near_dup_pairs, NO quadratic stage anywhere: the shuffled
-    frames are (vid, table, bucket) assignments and bucket-local
+    embedding_near_dup_pairs_gemm, NO quadratic stage anywhere: the
+    shuffled frames are (vid, table, bucket) assignments and bucket-local
     candidate pairs, so work scales with bucket collisions. Recall is
     tuned by _lsh_tuning (per-pair miss ≤ 0.2% at the threshold);
     verification makes every emitted pair exact."""
@@ -713,7 +661,8 @@ def embedding_near_dup_pairs_gemm(
     margin: float = 1e-6,
     max_broadcast_rows: int = 200_000,
 ) -> DataFrame:
-    """Same contract as embedding_near_dup_pairs, via a BLAS prefilter.
+    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥ t,
+    cosine as the sequential fold), via a BLAS prefilter.
 
     Two phases:
     1. prefilter — the normalized corpus matrix is broadcast to
@@ -724,7 +673,7 @@ def embedding_near_dup_pairs_gemm(
        candidate set a strict superset of the true answer.
     2. exact verify — candidates join back to the vectors and the
        sequential-fold cosine (the oracle-exact definition) decides.
-       Output is therefore IDENTICAL to the all-pairs operator.
+       Output is therefore IDENTICAL to an all-pairs crossJoin.
 
     Scale: broadcast works to ~max_broadcast_rows (N·dim·8 bytes);
     beyond the cap the corpus routes to the DISTRIBUTED multi-table
@@ -768,37 +717,6 @@ def embedding_near_dup_pairs_gemm(
 
     cand = vectors.select(id_col, vec_col).mapInPandas(prefilter, schema="id_a long, id_b long")
     return _exact_verify(cand, vectors, threshold, id_col, vec_col)
-
-
-def embedding_near_dup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥ t).
-
-    All-pairs form for the oracle-checkable contract; at scale the same
-    threshold filter runs over LSH-bucketed candidates (lsh_topk path)
-    or the GEMM-prefiltered variant (embedding_near_dup_pairs_gemm).
-    """
-    a = vectors.select(F.col(id_col).alias("id_a"), as_double(vec_col).alias("va")).withColumn(
-        "na", norm(F.col("va"), dim)
-    )
-    b = vectors.select(F.col(id_col).alias("id_b"), as_double(vec_col).alias("vb")).withColumn(
-        "nb", norm(F.col("vb"), dim)
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
 
 
 def semantic_dedup(
@@ -948,7 +866,7 @@ def hard_negative_topk(
 
 def _jl_sign(seed: str, j: int, k: int) -> float:
     """Deterministic ±1.0 from md5 parity of (seed, j, k) — the
-    hyperplane_bucket recipe restricted to signs: first hex nibble of
+    md5-derived hyperplane recipe restricted to signs: first hex nibble of
     md5("{seed}|{j}|{k}") in 0-7 → +1.0, else -1.0.
 
     Computed at PLAN BUILD with hashlib, not as an in-engine

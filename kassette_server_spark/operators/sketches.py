@@ -589,76 +589,6 @@ def hll_algebra_oracle_sql(src_a: str, src_b: str, col: str, p: int = 9) -> str:
     """
 
 
-def countmin_merge_into_store(
-    batch_df: DataFrame,
-    batch_id: int,
-    col: str,
-    store_path: str,
-    depth: int = 4,
-    width: int = 256,
-) -> bool:
-    """foreachBatch body: fold a micro-batch's Count-Min registers into
-    a persistent store — streaming heavy-hitter maintenance.
-
-    Unlike the HLL store (max-merge, naturally idempotent), CMS
-    counters are ADDITIVE: re-merging a replayed batch would double
-    count. The store therefore fences on the foreachBatch ``batch_id``
-    (carried as a constant ``merged_through`` column on every register
-    row, so store + fence live in ONE dataset and one atomic-ish
-    directory overwrite): a batch at or below the high-water mark is
-    skipped, which is exactly Spark's documented foreachBatch
-    exactly-once recipe. Returns whether the batch was merged.
-
-    Store + fence live in ONE dataset committed through the generation
-    store (store.py): a crash mid-write leaves the previous committed
-    generation — with its fence — intact, so recovery can never
-    re-apply a batch the committed state already contains.
-    """
-    spark = batch_df.sparkSession
-    if generation_committed(store_path, batch_id):
-        # directory high-water fence: catches a replayed batch whose
-        # committed generation has ZERO data rows (row fence below has
-        # no hwm to compare) — ADVICE r6 #1
-        return False
-    new = countmin_registers(batch_df, col, depth, width)
-    old = read_store(spark, store_path)
-    if old is not None:
-        hwm = old.agg(F.max("merged_through")).collect()[0][0]
-        if hwm is not None and batch_id <= hwm:
-            return False  # replayed batch: already folded in
-        merged = (
-            old.select("d", "reg", "cnt")
-            .unionByName(new)
-            .groupBy("d", "reg")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:  # first batch: no committed store yet
-        merged = new
-    rows = merged.collect()  # bounded: <= depth*width rows
-    out = local_frame(spark, rows, merged.schema).withColumn(
-        "merged_through", F.lit(int(batch_id))
-    )
-    write_store(out, store_path, int(batch_id))
-    return True
-
-
-def bloom_merge_into_store(
-    batch_df: DataFrame, col: str, store_path: str, k: int = 3, m_bits: int = 1 << 14
-) -> None:
-    """foreachBatch body: OR a micro-batch's Bloom bits into a
-    persistent filter. Set-union is idempotent (like the HLL max), so
-    at-least-once replays are safe without fencing; the store is
-    <= m_bits rows of one int. Persisted via the crash-safe generation
-    store (store.py)."""
-    spark = batch_df.sparkSession
-    new = bloom_bits(batch_df, col, k, m_bits)
-    old = read_store(spark, store_path)
-    merged = old.unionByName(new).distinct() if old is not None else new
-    rows = merged.collect()  # bounded: <= m_bits rows
-    out = local_frame(spark, rows, merged.schema)
-    write_store(out, store_path, next_generation(store_path))
-
-
 def bin_index(col: str, bin_width: float, num_bins: int):
     """The clamped right-open bin index shared by every histogram
     consumer (hist_bins, binned quantiles, drift.ks_drift_binned):
@@ -697,13 +627,15 @@ def hist_merge_into_store(
     persistent store — streaming quantile maintenance (p50/p99 latency
     over an unbounded stream with ≤ num_bins rows of state).
 
-    Histogram counters are ADDITIVE like Count-Min's, so the store
-    reuses the same ``merged_through`` batch-id fence as
-    countmin_merge_into_store (Spark's documented foreachBatch
-    exactly-once recipe): a replayed batch at or below the high-water
-    mark is skipped rather than double-counted. Returns whether the
-    batch was merged. Committed through the generation store
-    (store.py) so a crash mid-write preserves fence + counters.
+    Unlike the HLL store (max-merge, naturally idempotent), histogram
+    counters are ADDITIVE: re-merging a replayed batch would double
+    count. The store therefore fences on the foreachBatch ``batch_id``,
+    carried as a constant ``merged_through`` column on every bin row so
+    store and fence live in one dataset (Spark's documented
+    foreachBatch exactly-once recipe): a replayed batch at or below the
+    high-water mark is skipped rather than double-counted. Returns
+    whether the batch was merged. Committed through the generation
+    store (store.py) so a crash mid-write preserves fence + counters.
     """
     spark = batch_df.sparkSession
     if generation_committed(store_path, batch_id):
@@ -729,39 +661,3 @@ def hist_merge_into_store(
     )
     write_store(out, store_path, int(batch_id))
     return True
-
-
-def hist_store_quantiles(
-    store: DataFrame,
-    quantiles: tuple[tuple[str, int, int], ...] = (
-        ("p50", 1, 2),
-        ("p90", 9, 10),
-        ("p99", 99, 100),
-    ),
-    bin_width: float = 1.0,
-) -> DataFrame:
-    """Quantile estimates from a (bin, cnt) store — the identical
-    integer threshold rule as binned_quantiles, so a streamed store
-    yields bit-for-bit the single-pass batch estimates."""
-    from pyspark.sql import Window
-
-    bins = store.select("bin", "cnt")
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = bins.select("bin", F.sum("cnt").over(w).alias("cum"))
-    tot = bins.agg(F.sum("cnt").alias("n"))
-    qdf = local_frame(
-        store.sparkSession, list(quantiles), "label string, num long, den long"
-    )
-    return (
-        cum.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(qdf))
-        .where(F.col("cum") * F.col("den") >= F.col("n") * F.col("num"))
-        .groupBy("label", "n")
-        .agg(F.min("bin").alias("bin"))
-        .select(
-            "label",
-            (F.col("bin") * F.lit(bin_width) + F.lit(bin_width / 2)).alias("est"),
-            F.col("n").cast("long").alias("n"),
-        )
-        .orderBy("label")
-    )

@@ -1,6 +1,6 @@
 """Crash-safe parquet micro-store shared by the foreachBatch state
-keepers (HLL / Count-Min / Bloom / histogram registers, the SCD2
-dimension, the priority-sample reservoir).
+keepers (HLL and histogram registers, the SCD2 dimension, the
+priority-sample reservoir).
 
 Why this exists (ADVICE r5, medium): the first-generation stores did
 ``spark.read.parquet(path)`` inside ``except Exception`` and rewrote
@@ -107,7 +107,7 @@ def write_store(df: DataFrame, store_path: str, generation: int) -> None:
 
 def generation_committed(store_path: str, batch_id: int) -> bool:
     """True iff a generation at/above ``batch_id`` is already
-    committed. The fenced mergers (countmin/hist/scd2) fence on BOTH
+    committed. The fenced mergers (hist/scd2) fence on BOTH
     this directory high-water AND the ``merged_through`` column: a
     committed generation with ZERO data rows (empty or fully-deduped
     first batch) yields no row-level high-water mark, and without this

@@ -307,13 +307,3 @@ def wrap_batch_payload(df: DataFrame, dest_fields: list[str]) -> DataFrame:
         frags.append(frag)
     event_json = F.concat(F.lit("{"), F.concat_ws(",", F.array_compact(F.array(*frags))), F.lit("}"))
     return df.withColumn("event_json", event_json)
-
-
-def collect_payload(df: DataFrame, group_cols: list[str]) -> DataFrame:
-    """collect events into {"payload":[...]} per group — only at the
-    REST-sink edge (driver never sees the data; the sink task does)."""
-    return df.groupBy(*group_cols).agg(
-        F.concat(F.lit('{"payload":['), F.concat_ws(",", F.collect_list("event_json")), F.lit("]}")).alias(
-            "payload_json"
-        )
-    )

@@ -15,7 +15,7 @@ first-class specs.
 
 - q233: real baseline JPEG scan round trip
   (multimodal.jpeg_roundtrip_stats — closes the r10 verdict's "JPEG
-  remains metadata-walk only" soft edge): encode_jpeg_gray_pixels
+  remains metadata-walk only" soft edge): encode_jpeg_pixels
   writes a DECODABLE entropy-coded scan (forward DCT, flat-8
   quantization, zigzag, canonical-Huffman coding with byte stuffing,
   tables written to DHT), decode_jpeg_pixels reads it back (marker

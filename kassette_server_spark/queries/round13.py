@@ -25,9 +25,9 @@ streaming-index era's remaining seams (VERDICT r12 "Next round" #7/#8).
   correction scan (sign bits, buffered correction bits, EOB-region
   corrections); 7 scans, decoded bit-identical to single-pass.
 - q255: per-cell residual quantization error under the trained
-  IVF-PQ codebooks (pq.ivfpq_qerr_by_cell) — the streaming re-train
-  gate's exact statistic (pq_index_monitor) surfaced as an
-  oracle-checkable batch query; the oracle extends the q249/q250
+  IVF-PQ codebooks (pq.ivfpq_qerr_by_cell) — the exact statistic that
+  says when the codebooks need re-training, as an oracle-checkable
+  batch query; the oracle extends the q249/q250
   replay chain with a chosen-centroid distance join.
 
 Determinism: everything is exact int64 (companded decode midpoints,

@@ -108,7 +108,8 @@ def dispatching_deliver_factory(work_dir: str):
       unreachable database would wedge the whole control plane and a
       DDL failure would strand a committed-but-never-started
       connection. On the first batch, a DDL failure just marks the
-      batch failed, and the ledger's retry ladder re-runs it.
+      batch failed: its rows wait in the ledger as retry candidates
+      (``retry_candidates``), and nothing re-delivers them yet.
     - The DDL renderer is chosen by identifier case: all-lowercase
       names take the reference's byte-exact unquoted DDL (Postgres
       folds unquoted to lowercase — same relation the quoted COPY
@@ -116,8 +117,9 @@ def dispatching_deliver_factory(work_dir: str):
       CREATE and COPY agree on the case-preserved relation.
     - Commit boundary is the reference's whole-batch transaction
       (integrations/postgres/main.go:108-151): the batch is coalesced
-      to ONE partition so a failure commits nothing and the ledger's
-      whole-batch retry cannot duplicate rows (ADVICE r6 #3).
+      to ONE partition so a failure commits nothing and a re-delivered
+      batch (checkpoint replay after a crash) cannot duplicate rows
+      (ADVICE r6 #3).
       Micro-batches are gateway-batch sized, so one COPY stream is
       enough.
     """

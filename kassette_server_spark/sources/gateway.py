@@ -23,8 +23,8 @@ Each landing line is one job row: ``payload`` carries the enriched
 envelope (JobT.EventPayload) and the sibling fields ``job_user_id`` /
 ``params`` / ``sdk_version`` carry JobT.UserID / JobT.Parameters /
 jobData.version. The streaming reader's ``payload string`` schema
-ignores the siblings, so pre-existing consumers are unaffected; the
-jobqueue read schema surfaces them.
+ignores the siblings, so pre-existing consumers are unaffected; a
+reader that declares them in its schema surfaces them.
 
 The shim itself is transport-agnostic (the engine contract is the
 landing zone; a Kafka producer writing the same shape plugs in).

@@ -1,2 +1,2 @@
 """Structured-streaming wrapping of the batch pipeline: delivery
-ledger (job-status analogue), retry/DLQ, sessionization."""
+ledger (job-status analogue), retry/DLQ, stream-stream join."""

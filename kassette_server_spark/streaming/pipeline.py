@@ -19,9 +19,11 @@ time), then foreachBatch runs per micro-batch:
   2. deliver (REST partition sender or parquet/jdbc write);
   3. append every outcome status to the ledger in one write.
 
-Retry (R5): failed ledger rows re-enter via ``retry_frame`` unioned
-into a later batch by the caller — mirroring
-CreateNewJobWithFailedEvents (router/router.go:98-116).
+Retry (R5): a failed row waits in the ledger as a
+``retry_candidates`` row. Nothing re-delivers it yet: ``retry_frame``
+selects those rows with attempt+1, the shape the reference's
+CreateNewJobWithFailedEvents (router/router.go:98-116) re-enqueues, but
+no stream calls it.
 """
 
 from __future__ import annotations

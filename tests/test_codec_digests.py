@@ -83,7 +83,7 @@ CASES = {
     "jpeg_rgb_411_rst": lambda: mm.encode_jpeg_pixels(
         37, 19, _ramp(2109, 31), channels=3, subsampling="411", restart_interval=3
     ),
-    "jpeg_gray_shorthand": lambda: mm.encode_jpeg_gray_pixels(9, 9, _ramp(81, 3)),
+    "jpeg_gray_shorthand": lambda: mm.encode_jpeg_pixels(9, 9, _ramp(81, 3), channels=1),
     "jpeg_prog_gray": lambda: mm.encode_jpeg_progressive_pixels(13, 11, _ramp(143)),
     "jpeg_prog_gray_refine": lambda: mm.encode_jpeg_progressive_pixels(
         13, 11, _ramp(143), ac_refine=True

@@ -1,6 +1,6 @@
 """Cross-codec differential fuzzer (VERDICT r11 #6): random pixel
-arrays through every lossless container and every lossless transcode
-pair, asserting BYTE-IDENTICAL pixels after decode.
+arrays through every lossless container and the lossless GIF→PNG
+transcode, asserting BYTE-IDENTICAL pixels after decode.
 
 The id-formula oracle specs (q230/q232/q237/q238/...) pin each codec
 path at fixed shapes; random composition ACROSS containers — arbitrary
@@ -24,7 +24,6 @@ from kassette_server_spark.operators.multimodal import (
     encode_png_interlaced,
     encode_png_palette,
     transcode_gif_to_png,
-    transcode_png_to_gif,
 )
 
 N_CASES = 120  # x2 parametrized classes = 240 seeded cases
@@ -42,14 +41,14 @@ def _dims(rng) -> tuple[int, int]:
 
 @pytest.mark.parametrize("seed", range(N_CASES))
 def test_gray_pixels_identical_across_all_lossless_containers(seed):
-    """One random grayscale raster, five storage layouts, two
-    transcode directions — every decode must return the SAME bytes:
+    """One random grayscale raster, four storage layouts and a
+    transcode — every decode must return the SAME bytes:
 
       PNG sequential (random per-row filters, random IDAT split)
       PNG Adam7 interlaced (random filter seed)
       PNG palette (identity PLTE → RGB replication)
       GIF (random interlace flag)
-      GIF→PNG and PNG→GIF transcodes
+      GIF→PNG transcode
     """
     rng = _rng(seed)
     w, h = _dims(rng)
@@ -73,15 +72,8 @@ def test_gray_pixels_identical_across_all_lossless_containers(seed):
     gif = encode_gif_pixels(w, h, px, interlaced=interlaced)
     assert decode_gif_pixels(gif) == (w, h, px)
 
-    # transcodes: GIF -> palette PNG (identity GCT carries over) and
-    # grayscale PNG -> GIF; pixels must survive both directions
+    # transcode: GIF -> palette PNG (identity GCT carries over)
     assert decode_png_pixels(transcode_gif_to_png(gif)) == (w, h, 3, rgb)
-    assert decode_gif_pixels(transcode_png_to_gif(seq)) == (w, h, px)
-    assert decode_gif_pixels(transcode_png_to_gif(adam)) == (w, h, px)
-
-    # and a full chain: PNG -> GIF -> PNG(palette) ends at the same gray
-    chained = decode_png_pixels(transcode_gif_to_png(transcode_png_to_gif(seq)))
-    assert chained == (w, h, 3, rgb)
 
 
 @pytest.mark.parametrize("seed", range(N_CASES))
@@ -114,16 +106,6 @@ def test_rgb_pixels_identical_across_png_layouts_and_bmp(seed):
     assert s["sum_r"] == int(a[:, :, 0].sum())
     assert s["sum_g"] == int(a[:, :, 1].sum())
     assert s["sum_b"] == int(a[:, :, 2].sum())
-
-
-def test_png_to_gif_rejects_color():
-    """RGB has no faithful 256-entry palette in general — the reverse
-    transcode must refuse, not quantize silently."""
-    rng = _rng(0)
-    px = rng.integers(0, 256, size=4 * 4 * 3, dtype=np.uint8).tobytes()
-    payload = encode_png_filtered(4, 4, px, channels=3)
-    with pytest.raises(ValueError, match="grayscale"):
-        transcode_png_to_gif(payload)
 
 
 @pytest.mark.parametrize("seed", range(60))
@@ -483,6 +465,67 @@ def test_truncated_payloads_raise_or_decode_complete(seed):
             except CORRUPT_EXC:
                 continue
             assert got == expect, (kind, cut, len(pay))
+
+
+@pytest.mark.parametrize("seed", range(30))
+def test_corrupt_jpeg_and_wav_raise_value_error(seed):
+    """One error class for corrupt input: baseline and progressive JPEG
+    decode, IMA ADPCM WAV decode and PCM-16 sample decode, over the
+    corpus's truncation draws and single-bit flips anywhere in the
+    payload, either decode or raise ValueError — never struct.error or
+    IndexError from a header read past its end."""
+    from kassette_server_spark.operators.multimodal import (
+        decode_wav_compressed,
+        encode_wav,
+        parse_wav_samples,
+    )
+
+    corpus = {kind: (pay, decode) for kind, pay, decode, _ in _corrupt_corpus(seed)}
+    ima, decode_ima = corpus["wav2"]
+    samples = decode_ima(ima)
+    pcm = encode_wav(len(samples), samples=np.array(samples, np.int16).tobytes())
+    targets = [
+        corpus["jpeg"],
+        corpus["jpeg_prog"],
+        (ima, decode_wav_compressed),
+        (pcm, parse_wav_samples),
+    ]
+    rng = np.random.default_rng(130_000 + seed)
+    for pay, decode in targets:
+        cuts = [pay[: int(rng.integers(1, len(pay)))] for _ in range(8)]
+        flips = []
+        for _ in range(16):
+            bad = bytearray(pay)
+            bad[int(rng.integers(0, len(pay)))] ^= 1 << int(rng.integers(0, 8))
+            flips.append(bytes(bad))
+        for bad in cuts + flips:
+            try:
+                decode(bad)
+            except ValueError:
+                continue  # any other exception class fails the test
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+@pytest.mark.parametrize("segment", ["sof", "sos"])
+def test_short_jpeg_frame_or_scan_header_raises_value_error(progressive, segment):
+    """A length word that leaves a SOF or SOS header shorter than its
+    fields is a corrupt container: ValueError, not struct.error or
+    IndexError from reading past the segment."""
+    from kassette_server_spark.operators.multimodal import (
+        decode_jpeg_pixels,
+        encode_jpeg_pixels,
+        encode_jpeg_progressive_pixels,
+    )
+
+    encode = encode_jpeg_progressive_pixels if progressive else encode_jpeg_pixels
+    pay = bytearray(encode(9, 9, bytes(range(81))))
+    sof = b"\xff\xc2" if progressive else b"\xff\xc0"
+    # SOF body cut to 3 of its 6 fixed bytes; SOS body to its count byte
+    marker, length = (sof, 5) if segment == "sof" else (b"\xff\xda", 3)
+    at = pay.find(marker)
+    pay[at + 2 : at + 4] = length.to_bytes(2, "big")
+    with pytest.raises(ValueError):
+        decode_jpeg_pixels(bytes(pay))
 
 
 @pytest.mark.parametrize("codec", ["mulaw", "alaw", "ima"])

@@ -137,18 +137,6 @@ def test_coercions_match_go_model(spark):
         assert bool(r.tok) == go_to_datetime_ok(v), (i, v)
 
 
-def test_audio_meta_plumbing(spark):
-    from kassette_server_spark.operators.multimodal import decode_audio_meta
-
-    df = spark.createDataFrame([(1, "hello")], "doc_id long, text string").select(
-        "doc_id", F.encode("text", "utf-8").alias("payload")
-    )
-    r = decode_audio_meta(df).collect()[0]
-    assert (r.n_bytes, r.sample_rate, r.n_samples, r.duration_ms, r.fmt) == (
-        5, 16000, 40, 2, "fake/pcm16",
-    )
-
-
 def test_functions_namespace_importable(spark):
     from kassette_server_spark import functions as KF
 

@@ -57,56 +57,15 @@ def test_shuffle_shards_contiguous_positions_and_determinism(spark):
     out1.unpersist()
 
 
-def test_exact_dedup_stream_first_seen_wins(spark, tmp_path):
-    from kassette_server_spark.operators.dedup import exact_dedup_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    # batch 1: two distinct texts, one intra-batch duplicate
-    spark.createDataFrame(
-        [(1, "alpha beta", 100), (2, "alpha beta", 200), (3, "gamma", 300)],
-        "doc_id long, text string, ts_s long",
-    ).write.json(str(src / "b1"))
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts_s long")
-        .option("recursiveFileLookup", "true")
-        .json(str(src))
-        .select("doc_id", "text", F.timestamp_seconds(F.col("ts_s")).alias("ts"))
+def _doc_verdicts(verdicts):
+    """Batch-local per-doc reduction of minhash_dedup_stream's
+    per-bucket verdicts: a doc is kept iff NO bucket matched; dup_of is
+    the smallest matching keeper."""
+    return (
+        verdicts.groupBy("doc_id")
+        .agg(F.min("dup_of").alias("dup_of"), F.max("est_jaccard").alias("est_jaccard"))
+        .withColumn("keep", F.col("dup_of").isNull())
     )
-    out = exact_dedup_stream(stream, watermark="10 minutes")
-    sink = str(tmp_path / "out")
-
-    def drain():
-        q = (
-            out.writeStream.outputMode("append")
-            .format("json")
-            .option("path", sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # batch 2: re-sends a batch-1 text within the watermark + one new;
-    # the file sink supports checkpoint recovery, so the dedup state
-    # (digests seen in batch 1) survives into the second run.
-    spark.createDataFrame(
-        [(4, "alpha beta", 400), (5, "delta", 500)],
-        "doc_id long, text string, ts_s long",
-    ).write.json(str(src / "b2"))
-    drain()
-    got = {
-        r.doc_id
-        for r in spark.read.schema("doc_id long").json(sink).collect()
-    }
-    # one survivor per digest: exactly one of {1, 2} (intra-batch pick
-    # is partition-order dependent), 3, 5 — and 4 (the cross-batch
-    # re-send, the guarantee under test) is dropped by digest state
-    # carried through the checkpoint.
-    assert len(got & {1, 2}) == 1
-    assert {3, 5} <= got
-    assert 4 not in got and len(got) == 3
 
 
 def test_minhash_dedup_stream_cross_batch_suppression(spark, tmp_path):
@@ -116,7 +75,6 @@ def test_minhash_dedup_stream_cross_batch_suppression(spark, tmp_path):
     State survives via the checkpoint across separate runs."""
     from kassette_server_spark.operators.dedup import (
         minhash_dedup_stream,
-        minhash_stream_doc_verdicts,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -140,7 +98,7 @@ def test_minhash_dedup_stream_cross_batch_suppression(spark, tmp_path):
 
     def drain():
         def write_batch(batch_df, batch_id):
-            minhash_stream_doc_verdicts(batch_df).write.mode("append").json(sink)
+            _doc_verdicts(batch_df).write.mode("append").json(sink)
 
         q = (
             verdicts.writeStream.outputMode("append")
@@ -174,7 +132,6 @@ def test_minhash_dedup_stream_prunes_stale_keepers(spark, tmp_path):
     crashing on a null signature."""
     from kassette_server_spark.operators.dedup import (
         minhash_dedup_stream,
-        minhash_stream_doc_verdicts,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -199,7 +156,7 @@ def test_minhash_dedup_stream_prunes_stale_keepers(spark, tmp_path):
 
     def drain():
         def write_batch(batch_df, batch_id):
-            minhash_stream_doc_verdicts(batch_df).write.mode("append").json(sink)
+            _doc_verdicts(batch_df).write.mode("append").json(sink)
 
         q = (
             verdicts.writeStream.outputMode("append")
@@ -243,7 +200,6 @@ def test_minhash_dedup_stream_from_plan_parity(spark, tmp_path):
     from kassette_server_spark.operators.dedup import (
         minhash_dedup_stream,
         minhash_dedup_stream_from_plan,
-        minhash_stream_doc_verdicts,
     )
     from kassette_server_spark.operators.diagnostics import lsh_band_plan
 
@@ -277,7 +233,7 @@ def test_minhash_dedup_stream_from_plan_parity(spark, tmp_path):
         sink = str(tmp_path / f"out-{tag}")
 
         def write_batch(batch_df, batch_id):
-            minhash_stream_doc_verdicts(batch_df).write.mode("append").json(sink)
+            _doc_verdicts(batch_df).write.mode("append").json(sink)
 
         q = (
             verdicts.writeStream.outputMode("append")

@@ -1,12 +1,9 @@
-"""Gateway shim (S1/R6/T3) and count-triggered stateful sessionization
-(W1 exact parity via applyInPandasWithState)."""
+"""Gateway shim (S1/R6/T3) and the REST poller's wall-clock clamp."""
 
 from __future__ import annotations
 
 import json
 from datetime import datetime, timezone
-
-from pyspark.sql import functions as F
 
 from kassette_server_spark.sources.gateway import GatewayShim
 
@@ -45,36 +42,6 @@ def test_gateway_shim_envelope_and_auth(spark, tmp_path):
     assert len(rows) == 2
 
 
-def test_no_ghost_sessions_after_count_flush(spark, tmp_path):
-    """Regression: a gap arriving right after a count-flush (empty
-    buffer) must not emit a zero-event 'ghost' session."""
-    from kassette_server_spark.operators.sessionize import sessionize_stream_count_trigger
-
-    rows = [
-        (1, datetime(2024, 1, 1, 0, 0, 0), 0),
-        (1, datetime(2024, 1, 1, 0, 1, 0), 1),
-        (1, datetime(2024, 1, 1, 0, 2, 0), 2),  # count-flush at 3 → buffer empty
-        (1, datetime(2024, 1, 1, 2, 0, 0), 3),  # >30min gap with n==0
-    ]
-    src = tmp_path / "ev2"
-    spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long").write.parquet(str(src))
-    stream = spark.readStream.schema("user_id long, ts timestamp, event_id long").parquet(str(src))
-    sessions = sessionize_stream_count_trigger(
-        stream, gap_minutes=30, count_threshold=3, watermark_minutes=1
-    )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("ghost_sess")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM ghost_sess").collect()
-    assert all(r.n_events > 0 for r in got), got
-    assert [(r.n_events, r.flush_reason) for r in got] == [(3, "count")]
-
-
 def test_rest_poller_wall_clock_clamp():
     """The poller must never advance its offset past now − history
     (future windows would be committed empty and their data skipped)."""
@@ -110,30 +77,3 @@ def test_rest_poller_wall_clock_clamp():
     )
     _ = r2.latestOffset()
     assert r2.initialOffset() == {"window_start": "2024-03-04T05:00:00"}
-
-
-def test_count_triggered_stateful_sessions(spark, tmp_path):
-    from kassette_server_spark.operators.sessionize import sessionize_stream_count_trigger
-
-    # one user, 7 events 1min apart → with threshold 3: two count-flushed
-    # sessions of 3, 1 event left buffered in state (no watermark push)
-    rows = [(1, datetime(2024, 1, 1, 0, i, 0), i) for i in range(7)]
-    src = tmp_path / "events"
-    spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long").write.parquet(str(src))
-    stream = spark.readStream.schema("user_id long, ts timestamp, event_id long").parquet(str(src))
-    sessions = sessionize_stream_count_trigger(
-        stream, gap_minutes=30, count_threshold=3, watermark_minutes=1
-    )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("count_sess")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM count_sess ORDER BY session_start").collect()
-    assert [(r.n_events, r.flush_reason) for r in got] == [(3, "count"), (3, "count")]
-    assert got[0].session_start == datetime(2024, 1, 1, 0, 0, 0)
-    assert got[0].session_end == datetime(2024, 1, 1, 0, 2, 0)
-    assert got[1].session_start == datetime(2024, 1, 1, 0, 3, 0)

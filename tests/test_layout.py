@@ -1,4 +1,4 @@
-"""Layout operators: bucketed shuffle-free joins and salted skew joins."""
+"""Layout operators: salted skew joins and scan-parallelism guards."""
 
 from __future__ import annotations
 
@@ -11,11 +11,9 @@ from conftest import SF_SMOKE
 
 from kassette_server_spark.catalog import load
 from kassette_server_spark.operators.layout import (
-    bucketed_join,
     ensure_scan_parallelism,
     salted_join,
     salted_join_from_profile,
-    write_bucketed,
 )
 
 
@@ -24,22 +22,6 @@ def _explain(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def test_bucketed_join_skips_shuffle(spark, tmp_path):
-    # session warehouse dir is set in conftest (static conf)
-    spark.sql("CREATE DATABASE IF NOT EXISTS buckets")
-    c = load(spark, SF_SMOKE, "customer").select("c_custkey", "c_name")
-    o = load(spark, SF_SMOKE, "orders").select("o_custkey", "o_orderkey")
-    write_bucketed(c, "buckets.cust_b", "c_custkey", 4)
-    write_bucketed(o, "buckets.ord_b", "o_custkey", 4)
-    joined = bucketed_join(spark, "buckets.cust_b", "buckets.ord_b", "c_custkey", "o_custkey")
-    plan = _explain(joined)
-    # both sides read bucket-aligned: the join has NO shuffle exchange
-    assert "Exchange hashpartitioning" not in plan
-    # result identical to the plain join
-    plain = c.join(o, c.c_custkey == o.o_custkey)
-    assert joined.count() == plain.count()
 
 
 def test_salted_join_matches_plain_join(spark):

@@ -355,249 +355,13 @@ def test_ivfpq_index_partition_pruned_search(spark, tmp_path):
     )
 
 
-# -- streaming index maintenance (VERDICT r12 #7) ------------------------------
-def _emb_batches(spark):
-    from pyspark.sql import functions as F
-
-    emb = load(spark, SF_SMOKE, "embeddings")
-    b0 = emb.where(F.col("vec_id") % 2 == 0)
-    b1 = emb.where(F.col("vec_id") % 2 == 1)
-    return emb, b0, b1
-
-
-def test_pq_index_stream_matches_batch_twin(spark, tmp_path):
-    """Incremental encode against a pinned codebook generation is
-    bit-identical to a batch rebuild over the concatenation, replayed
-    batches are fenced, and same-distribution batches don't trip the
-    re-train gate."""
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_encode,
-        ivfpq_fit_err,
-        ivfpq_train_residual,
-        pq_index_monitor,
-        read_pq_index,
-    )
-
-    emb, b0, b1 = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    base = ivfpq_fit_err(b0, coarse, book, m=M, dim=D)
-    assert base[0] == b0.count() and base[1] > 0
-
-    idx = str(tmp_path / "idx")
-    store = str(tmp_path / "gate")
-    r0 = pq_index_monitor(b0, 0, idx, store, coarse, book, base, m=M, dim=D)
-    assert r0 is not None and (r0["n"], r0["err_sum"]) == base
-    assert not r0["retrain"]  # the training corpus itself never trips
-    r1 = pq_index_monitor(b1, 1, idx, store, coarse, book, base, m=M, dim=D)
-    assert r1 is not None and r1["n"] == emb.count()
-    # same distribution: stays under 1.5x the baseline mean error
-    assert not r1["retrain"]
-
-    # re-delivery is idempotent: no append, no report, store unmoved
-    assert pq_index_monitor(b1, 1, idx, store, coarse, book, base, m=M, dim=D) is None
-
-    streamed = sorted(
-        (r["neighbor_id"], r["ccid"], tuple(r["codes"]), r["qerr"])
-        for r in read_pq_index(spark, idx).collect()
-    )
-    twin = sorted(
-        (r["neighbor_id"], r["ccid"], tuple(r["codes"]), r["qerr"])
-        for r in ivfpq_encode(
-            b0.unionByName(b1), coarse, book, m=M, dim=D, with_err=True
-        ).collect()
-    )
-    assert streamed == twin
-
-
-def test_pq_index_retrain_gate_fires_on_shift(spark, tmp_path):
-    """Vectors unlike the training corpus raise the mean residual
-    error past the 3/2 gate — the signal that codebook generation g+1
-    is due."""
-    import numpy as np
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_fit_err,
-        ivfpq_train_residual,
-        pq_index_monitor,
-    )
-
-    emb, b0, _ = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    base = ivfpq_fit_err(b0, coarse, book, m=M, dim=D)
-
-    rng = np.random.default_rng(7)
-    shifted = spark.createDataFrame(
-        [
-            (10_000 + i, [float(x) for x in rng.choice([-1.0, 1.0], size=D)])
-            for i in range(64)
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    r = pq_index_monitor(
-        shifted, 0, str(tmp_path / "idx"), str(tmp_path / "gate"),
-        coarse, book, base, m=M, dim=D,
-    )
-    assert r is not None and r["retrain"]
-
-
-def test_pq_index_uncommitted_batch_invisible(spark, tmp_path):
-    """A crash mid-append (no _SUCCESS) is invisible to readers and the
-    retry re-appends cleanly."""
-    import os
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_train_residual,
-        pq_index_append,
-        read_pq_index,
-    )
-
-    _, b0, _ = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    idx = str(tmp_path / "idx")
-    assert pq_index_append(b0, 0, idx, coarse, book, m=M, dim=D)
-    os.remove(os.path.join(idx, "batch-0", "_SUCCESS"))  # simulate crash
-    assert read_pq_index(spark, idx) is None
-    assert pq_index_append(b0, 0, idx, coarse, book, m=M, dim=D)  # retry
-    assert read_pq_index(spark, idx).count() == b0.count()
-
-
-def test_pq_index_monitor_crash_window_still_folds(spark, tmp_path):
-    """ADVICE r13 (medium): a crash AFTER the index batch committed but
-    BEFORE the gate store merged must not lose the batch's (n, err_sum)
-    — the replay sees appended=False yet must still fold the batch into
-    the store, or the gate statistic silently diverges from the index."""
-    import shutil
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_fit_err,
-        ivfpq_train_residual,
-        pq_index_monitor,
-    )
-
-    emb, b0, b1 = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    base = ivfpq_fit_err(b0, coarse, book, m=M, dim=D)
-    idx, store = str(tmp_path / "idx"), str(tmp_path / "gate")
-
-    r0 = pq_index_monitor(b0, 0, idx, store, coarse, book, base, m=M, dim=D)
-    assert r0 is not None
-    # simulate the crash window for batch 1: append commits, store write
-    # never happens (run the monitor, then roll the store back to the
-    # batch-0 state by restoring its pre-batch-1 generation)
-    import os
-
-    snap = str(tmp_path / "gate-snap")
-    shutil.copytree(store, snap)
-    r1 = pq_index_monitor(b1, 1, idx, store, coarse, book, base, m=M, dim=D)
-    assert r1 is not None
-    shutil.rmtree(store)
-    shutil.copytree(snap, store)  # store back at its pre-batch-1 state
-    # replay of batch 1: append is fenced (False), but the store MUST
-    # still receive the fold — same report as the first delivery
-    r1b = pq_index_monitor(b1, 1, idx, store, coarse, book, base, m=M, dim=D)
-    assert r1b is not None and (r1b["n"], r1b["err_sum"]) == (r1["n"], r1["err_sum"])
-    # and a further replay (both fences committed) is a clean skip
-    assert pq_index_monitor(b1, 1, idx, store, coarse, book, base, m=M, dim=D) is None
-
-
-def test_pq_index_search_matches_in_memory(spark, tmp_path):
-    """ADVICE r13 (low): the streaming index has a real search path —
-    pq_index_search over committed batch dirs returns bit-identical
-    rows to ivfpq_adc_topk under the same pinned codebooks."""
-    from pyspark.sql import functions as F
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_adc_topk,
-        ivfpq_train_residual,
-        pq_index_append,
-        pq_index_search,
-    )
-
-    emb, b0, b1 = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    idx = str(tmp_path / "idx")
-    q = emb.where(F.col("vec_id").isin([0, 250]))
-
-    assert pq_index_search(spark, idx, q, coarse, book, m=M, k=K, dim=D) is None
-    assert pq_index_append(b0, 0, idx, coarse, book, m=M, dim=D)
-    assert pq_index_append(b1, 1, idx, coarse, book, m=M, dim=D)
-
-    res = pq_index_search(
-        spark, idx, q, coarse, book, m=M, k=K, dim=D, topk=5, nprobe=2
-    )
-    twin = ivfpq_adc_topk(
-        emb, q, kc=8, m=M, k=K, iters=2, dim=D, topk=5, nprobe=2,
-        coarse=coarse, book=book,
-    )
-    assert sorted(map(tuple, res.collect())) == sorted(map(tuple, twin.collect()))
-
-
-def test_pq_index_vec_id_batch_dirs_normalized_on_read(spark, tmp_path):
-    """ADVICE r14: batch dirs written before the id_alias change carry
-    ``vec_id``; a mixed pre/post-upgrade index must read back with a
-    single ``neighbor_id`` column (no nulls) and search identically to
-    a rebuilt in-memory index — no directory rebuild required."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_adc_topk,
-        ivfpq_encode,
-        ivfpq_train_residual,
-        pq_index_append,
-        pq_index_search,
-        read_pq_index,
-    )
-
-    emb, b0, b1 = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    idx = str(tmp_path / "idx")
-
-    # batch 0: OLD layout (vec_id alias), written the way the previous
-    # pq_index_append did — encode + parquet + _SUCCESS marker
-    old_dir = os.path.join(idx, "batch-0")
-    ivfpq_encode(
-        b0, coarse, book, m=M, dim=D, id_alias="vec_id", with_err=True
-    ).write.mode("overwrite").parquet(old_dir)
-    # batch 1: NEW layout via the current append path
-    assert pq_index_append(b1, 1, idx, coarse, book, m=M, dim=D)
-
-    enc = read_pq_index(spark, idx)
-    assert "vec_id" not in enc.columns and "neighbor_id" in enc.columns
-    assert enc.where(F.col("neighbor_id").isNull()).count() == 0
-    assert enc.count() == emb.count()
-
-    q = emb.where(F.col("vec_id").isin([0, 250]))
-    res = pq_index_search(
-        spark, idx, q, coarse, book, m=M, k=K, dim=D, topk=5, nprobe=2
-    )
-    twin = ivfpq_adc_topk(
-        emb, q, kc=8, m=M, k=K, iters=2, dim=D, topk=5, nprobe=2,
-        coarse=coarse, book=book,
-    )
-    assert sorted(map(tuple, res.collect())) == sorted(map(tuple, twin.collect()))
-
-
+# -- codebook generations: the re-train flip -----------------------------------
 def test_ivfpq_generation_flip_end_to_end(spark, tmp_path):
-    """VERDICT r13 #4: the re-train loop CLOSED — the gate fires on a
-    drifted stream, generation 1 trains on the current corpus and
-    commits a fresh index directory, the searcher picks up gen-1 by
-    default while gen-0 stays immutable and byte-identically readable,
-    and the flip itself is replay-safe (crash → invisible; redo →
-    idempotent)."""
+    """VERDICT r13 #4: after a drifted stream, generation 1 trains on
+    the current corpus and commits a fresh index directory, the
+    searcher picks up gen-1 by default while gen-0 stays immutable and
+    byte-identically readable, and the flip itself is replay-safe
+    (crash → invisible; redo → idempotent)."""
     import os
 
     import numpy as np
@@ -606,26 +370,24 @@ def test_ivfpq_generation_flip_end_to_end(spark, tmp_path):
     from kassette_server_spark.operators.pq import (
         ivfpq_adc_topk,
         ivfpq_committed_generations,
-        ivfpq_fit_err,
         ivfpq_load_generation,
         ivfpq_search_generation,
         ivfpq_write_generation,
-        pq_index_monitor,
     )
 
-    emb, b0, _ = _emb_batches(spark)
+    emb = load(spark, SF_SMOKE, "embeddings")
+    b0 = emb.where(F.col("vec_id") % 2 == 0)
     root = str(tmp_path / "gens")
 
     # generation 0 serves the b0 corpus
-    coarse0, book0 = ivfpq_write_generation(b0, root, 0, kc=8, m=M, k=K, iters=2, dim=D)
+    ivfpq_write_generation(b0, root, 0, kc=8, m=M, k=K, iters=2, dim=D)
     assert ivfpq_committed_generations(root) == [0]
-    base = ivfpq_fit_err(b0, coarse0, book0, m=M, dim=D)
     q = emb.where(F.col("vec_id").isin([0, 250]))
     res0 = sorted(
         map(tuple, ivfpq_search_generation(spark, root, q, m=M, k=K, dim=D).collect())
     )
 
-    # a drifted stream trips the gate
+    # a drifted stream arrives
     rng = np.random.default_rng(7)
     shifted = spark.createDataFrame(
         [
@@ -634,11 +396,6 @@ def test_ivfpq_generation_flip_end_to_end(spark, tmp_path):
         ],
         "vec_id long, embedding array<float>",
     )
-    r = pq_index_monitor(
-        shifted, 0, str(tmp_path / "stream-idx"), str(tmp_path / "gate"),
-        coarse0, book0, base, m=M, dim=D,
-    )
-    assert r is not None and r["retrain"]
 
     # FLIP: generation 1 trains on the current corpus (served + drifted)
     corpus1 = b0.select("vec_id", "embedding").unionByName(shifted)
@@ -675,173 +432,3 @@ def test_ivfpq_generation_flip_end_to_end(spark, tmp_path):
         )
     )
     assert res0_after == res0
-
-
-def test_pq_index_monitor_through_real_writestream(spark, tmp_path):
-    """The index monitor driven by an ACTUAL Structured Streaming query
-    (file source → foreachBatch(pq_index_monitor)) rather than direct
-    calls: batches land as committed index directories, the gate store
-    folds across micro-batches, and the resulting index is bit-identical
-    to the batch-rebuild twin under the pinned codebooks."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_encode,
-        ivfpq_fit_err,
-        ivfpq_train_residual,
-        pq_index_monitor,
-        read_pq_index,
-    )
-
-    emb, b0, b1 = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    base = ivfpq_fit_err(b0, coarse, book, m=M, dim=D)
-
-    src = tmp_path / "src"
-    for i, part in enumerate((b0, b1)):
-        part.select("vec_id", "embedding").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        ).write.json(str(src / f"b{i}"))
-
-    idx, store = str(tmp_path / "idx"), str(tmp_path / "gate")
-    reports = []
-
-    def body(batch_df, batch_id):
-        bdf = batch_df.select(
-            "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-        )
-        r = pq_index_monitor(
-            bdf, batch_id, idx, store, coarse, book, base, m=M, dim=D
-        )
-        if r is not None:
-            reports.append(r)
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "8")
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    assert reports and reports[-1]["n"] == emb.count()
-    assert not reports[-1]["retrain"]  # same distribution as training
-    batch_dirs = [
-        e for e in os.listdir(idx)
-        if e.startswith("batch-") and os.path.exists(os.path.join(idx, e, "_SUCCESS"))
-    ]
-    assert batch_dirs  # at least one committed micro-batch directory
-
-    streamed = sorted(
-        (r["neighbor_id"], r["ccid"], tuple(r["codes"]), r["qerr"])
-        for r in read_pq_index(spark, idx).collect()
-    )
-    twin = sorted(
-        (r["neighbor_id"], r["ccid"], tuple(r["codes"]), r["qerr"])
-        for r in ivfpq_encode(
-            emb.select("vec_id", "embedding"), coarse, book, m=M, dim=D,
-            with_err=True,
-        ).collect()
-    )
-    assert streamed == twin
-
-
-def test_pq_index_search_while_appending(spark, tmp_path):
-    """VERDICT r14 #6: search a LIVE streaming index between
-    micro-batches — inside foreachBatch, after each batch's append+fold,
-    pq_index_search over the committed directories must return exactly
-    what ivfpq_adc_topk returns over the vectors appended SO FAR under
-    the same pinned codebooks. Proves search-while-appending: readers
-    see each committed prefix of the stream, never a torn batch."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kassette_server_spark.operators.pq import (
-        ivf_train_coarse,
-        ivfpq_adc_topk,
-        ivfpq_fit_err,
-        ivfpq_train_residual,
-        pq_index_monitor,
-        pq_index_search,
-    )
-
-    emb, b0, b1 = _emb_batches(spark)
-    coarse = ivf_train_coarse(b0, kc=8, iters=2, dim=D)
-    book = ivfpq_train_residual(b0, coarse, m=M, k=K, iters=2, dim=D)
-    base = ivfpq_fit_err(b0, coarse, book, m=M, dim=D)
-
-    src = tmp_path / "src"
-    for i, part in enumerate((b0, b1)):
-        # 4 files per half: with maxFilesPerTrigger=4 the stream runs
-        # >= 2 micro-batches, so the mid-stream search really does see
-        # a strict prefix of the corpus at least once
-        part.select("vec_id", "embedding").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        ).repartition(4).write.json(str(src / f"b{i}"))
-
-    idx, store = str(tmp_path / "idx"), str(tmp_path / "gate")
-    q_ids = [0, 250]
-    queries = emb.where(F.col("vec_id").isin(q_ids)).select(
-        "vec_id", "embedding"
-    )
-    seen_ids: list[int] = []
-    checks: list[tuple[int, bool, int]] = []
-
-    def body(batch_df, batch_id):
-        bdf = batch_df.select(
-            "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-        )
-        ids = [r["vec_id"] for r in bdf.select("vec_id").collect()]
-        pq_index_monitor(
-            bdf, batch_id, idx, store, coarse, book, base, m=M, dim=D
-        )
-        seen_ids.extend(ids)
-        # mid-stream search over the committed prefix
-        res = pq_index_search(
-            spark, idx, queries, coarse, book, m=M, k=K, dim=D,
-            topk=5, nprobe=2,
-        )
-        so_far = emb.where(F.col("vec_id").isin(seen_ids)).select(
-            "vec_id", "embedding"
-        )
-        twin = ivfpq_adc_topk(
-            so_far, queries, kc=8, m=M, k=K, iters=2, dim=D,
-            topk=5, nprobe=2, coarse=coarse, book=book,
-        )
-        ok = sorted(map(tuple, res.collect())) == sorted(
-            map(tuple, twin.collect())
-        )
-        checks.append((int(batch_id), ok, res.count()))
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "4")
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    # parity held at EVERY mid-stream point, across >1 micro-batch
-    assert len(checks) >= 2, checks
-    assert all(ok for _, ok, _ in checks), checks
-    assert all(n > 0 for _, _, n in checks), checks
-    assert len(seen_ids) == emb.count()

@@ -337,7 +337,7 @@ def test_jpeg_scan_block_constant_identity():
     exactly — any Huffman/zigzag/stuffing/IDCT bug breaks identity."""
     from kassette_server_spark.operators.multimodal import (
         decode_jpeg_pixels,
-        encode_jpeg_gray_pixels,
+        encode_jpeg_pixels,
         parse_jpeg_meta,
     )
 
@@ -348,7 +348,7 @@ def test_jpeg_scan_block_constant_identity():
             for y in range(h)
             for x in range(w)
         )
-        pay = encode_jpeg_gray_pixels(w, h, px)
+        pay = encode_jpeg_pixels(w, h, px, channels=1)
         meta = parse_jpeg_meta(pay)  # the container walk still passes
         assert (meta["width"], meta["height"], meta["components"]) == (w, h, 1)
         dw, dh, dch, out = decode_jpeg_pixels(pay)
@@ -366,14 +366,14 @@ def test_jpeg_scan_random_images_bounded_error_and_deterministic():
 
     from kassette_server_spark.operators.multimodal import (
         decode_jpeg_pixels,
-        encode_jpeg_gray_pixels,
+        encode_jpeg_pixels,
     )
 
     rng = random.Random(0x1DC7)
     for _ in range(8):
         w, h = rng.randint(3, 40), rng.randint(3, 33)
         px = bytes(rng.randrange(256) for _ in range(w * h))
-        pay = encode_jpeg_gray_pixels(w, h, px)
+        pay = encode_jpeg_pixels(w, h, px, channels=1)
         one = decode_jpeg_pixels(pay)
         assert one == decode_jpeg_pixels(pay)  # bit-deterministic
         got = np.frombuffer(one[3], dtype=np.uint8).astype(int)
@@ -389,12 +389,12 @@ def test_jpeg_scan_huffman_stress_all_categories():
     inside the scan)."""
     from kassette_server_spark.operators.multimodal import (
         decode_jpeg_pixels,
-        encode_jpeg_gray_pixels,
+        encode_jpeg_pixels,
     )
 
     w, h = 24, 24
     px = bytes(255 if (x + y) % 2 == 0 else 0 for y in range(h) for x in range(w))
-    pay = encode_jpeg_gray_pixels(w, h, px)
+    pay = encode_jpeg_pixels(w, h, px, channels=1)
     d1 = decode_jpeg_pixels(pay)
     assert d1 == decode_jpeg_pixels(pay)
     assert (d1[0], d1[1]) == (w, h)
@@ -405,11 +405,11 @@ def test_jpeg_scan_rejects_corruption():
 
     from kassette_server_spark.operators.multimodal import (
         decode_jpeg_pixels,
-        encode_jpeg_gray_pixels,
+        encode_jpeg_pixels,
         encode_jpeg,
     )
 
-    pay = encode_jpeg_gray_pixels(16, 16, bytes(range(256)))
+    pay = encode_jpeg_pixels(16, 16, bytes(range(256)), channels=1)
     with pytest.raises(ValueError):
         decode_jpeg_pixels(pay[: len(pay) // 2])  # truncated mid-segment
     with pytest.raises(ValueError):

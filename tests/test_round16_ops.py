@@ -7,8 +7,7 @@ ADVICE items on the AVI container code.
   accepted; partial trailing index records ignored.
 - encode_avi_mjpeg dwMaxBytesPerSec clamp (ADVICE r15): extreme
   fps × frame-size products no longer overflow uint32.
-- avi_audio_stats / avi_audio_extract: closed-form sums; corrupt
-  payloads degrade to zero rows.
+- avi_audio_stats: closed-form sums.
 """
 
 from __future__ import annotations
@@ -254,27 +253,3 @@ def test_avi_audio_stats_closed_form(spark):
             mulaw_decode(codes).astype(np.int64).sum()
         )
         assert r["vid0_sum"] == 64 * (i % 256)
-
-
-def test_avi_audio_extract_operator_degrades(spark):
-    """avi_audio_extract over a payload column: audio clips yield one
-    row, audio-less/truncated/alien payloads yield zero rows."""
-    from kassette_server_spark.operators.multimodal import avi_audio_extract
-
-    good, s, _ = _clip(4)
-    no_audio = encode_avi_mjpeg(
-        8, 8, [np.full((8, 8), 9, np.uint8).tobytes()]
-    )
-    rows = [
-        (0, bytearray(good)),
-        (1, bytearray(no_audio)),
-        (2, bytearray(good[: len(good) // 3])),
-        (3, bytearray(b"RIFF garbage")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in avi_audio_extract(df).collect()}
-    assert set(out) == {0}
-    assert out[0]["decoded_sum"] == int(
-        mulaw_decode(mulaw_encode(s)).astype(np.int64).sum()
-    )
-    assert out[0]["audio_fmt"] == 7 and out[0]["n_samples"] == 64

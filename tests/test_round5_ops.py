@@ -20,7 +20,6 @@ from kassette_server_spark.operators.linkage import (
     segment_blocking_keys,
 )
 from kassette_server_spark.operators.sketches import hll_set_algebra
-from kassette_server_spark.operators.store import read_store
 from kassette_server_spark.queries import all_specs
 
 from conftest import SF_SMOKE
@@ -175,53 +174,6 @@ def test_event_transitions_orders_ties_by_event_id(spark):
         ("a", "b"): 1,
         ("b", "c"): 1,
     }
-
-
-# ---------- streaming sketch store maintenance ----------
-
-
-def test_countmin_store_replay_fenced(spark, tmp_path):
-    from kassette_server_spark.operators import sketches
-
-    store = str(tmp_path / "cms_store")
-    b0 = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "v string")
-    b1 = spark.createDataFrame([("a",)] * 3 + [("c",)] * 4, "v string")
-
-    assert sketches.countmin_merge_into_store(b0, 0, "v", store)
-    assert sketches.countmin_merge_into_store(b1, 1, "v", store)
-    regs = read_store(spark, store).select("d", "reg", "cnt")
-    probe = spark.createDataFrame([("a",), ("b",), ("c",)], "v string")
-    est = {
-        r.v: r.est_count
-        for r in sketches.countmin_estimate(probe, regs, "v").collect()
-    }
-    assert est == {"a": 8, "b": 2, "c": 4}  # CMS exact here (no collisions forced)
-
-    # at-least-once replay of batch 1: additive merge MUST be fenced
-    assert not sketches.countmin_merge_into_store(b1, 1, "v", store)
-    regs2 = read_store(spark, store).select("d", "reg", "cnt")
-    est2 = {
-        r.v: r.est_count
-        for r in sketches.countmin_estimate(probe, regs2, "v").collect()
-    }
-    assert est2 == est
-
-
-def test_bloom_store_replay_idempotent(spark, tmp_path):
-    from kassette_server_spark.operators import sketches
-
-    store = str(tmp_path / "bloom_store")
-    b0 = spark.createDataFrame([("x",), ("y",)], "v string")
-    sketches.bloom_merge_into_store(b0, "v", store)
-    n1 = read_store(spark, store).count()
-    sketches.bloom_merge_into_store(b0, "v", store)  # replay
-    assert read_store(spark, store).count() == n1
-    bits = read_store(spark, store)
-    probe = spark.createDataFrame([("x",), ("zzz",)], "v string")
-    got = {r.v: r.in_bloom for r in sketches.bloom_probe(probe, bits, "v").collect()}
-    assert got["x"] is True
-    # "zzz" may false-positive in principle, but not at 2 entries / 16Ki bits
-    assert got["zzz"] is False
 
 
 # ---------- randomized cross-checks ----------

@@ -170,12 +170,14 @@ def test_store_crash_mid_write_recovers(spark, tmp_path):
     from kassette_server_spark.operators import sketches
     from kassette_server_spark.operators.store import committed_generations, read_store
 
-    store = str(tmp_path / "cms")
+    store = str(tmp_path / "hll")
     b0 = spark.createDataFrame([("a",)], "v string")
-    assert sketches.countmin_merge_into_store(b0, 0, "v", store)
-    before = sorted((r.d, r.reg, r.cnt) for r in read_store(spark, store).collect())
+    sketches.hll_merge_into_store(b0, "v", store)
+    assert committed_generations(store) == [0]
+    before = sorted((r.reg, r.m_rank) for r in read_store(spark, store).collect())
 
-    # crash mid-write of batch 1: half-written dir, no _SUCCESS marker
+    # crash mid-write of the next generation: half-written dir, no
+    # _SUCCESS marker
     import os
 
     half = os.path.join(store, "gen-1")
@@ -184,15 +186,18 @@ def test_store_crash_mid_write_recovers(spark, tmp_path):
         f.write("garbage, not parquet")
     assert committed_generations(store) == [0]
     assert sorted(
-        (r.d, r.reg, r.cnt) for r in read_store(spark, store).collect()
+        (r.reg, r.m_rank) for r in read_store(spark, store).collect()
     ) == before
 
-    # retry of batch 1 reclaims the dir and commits cleanly
+    # the retry reclaims the dir and commits cleanly
     b1 = spark.createDataFrame([("b",)], "v string")
-    assert sketches.countmin_merge_into_store(b1, 1, "v", store)
+    sketches.hll_merge_into_store(b1, "v", store)
     assert committed_generations(store) == [1]
-    total = read_store(spark, store).agg({"cnt": "sum"}).collect()[0][0]
-    assert total == 2 * 4  # two values x depth(=4 default) rows, no duplication
+    # the store is the single-pass sketch of both batches: nothing lost
+    both = sketches.hll_registers(b0.unionByName(b1), "v")
+    assert sorted(
+        (r.reg, r.m_rank) for r in read_store(spark, store).collect()
+    ) == sorted((r.reg, r.m_rank) for r in both.collect())
 
 
 def test_pareto_frontier_dominance_semantics(spark):

@@ -338,39 +338,6 @@ def test_contract_clean_data_passes(spark):
     assert all(r.violations == 0 and r.pass_rate == 1.0 for r in out)
 
 
-def test_split_by_contract_quarantine(spark):
-    """The gate names every broken rule per quarantined row and passes
-    clean rows through unchanged (no extra column)."""
-    from kassette_server_spark.operators.contracts import split_by_contract
-
-    df = spark.createDataFrame(
-        [(1, 10.0, "A"), (2, -5.0, "X"), (3, None, "A")],
-        "id long, amount double, flag string",
-    )
-    passing, violating = split_by_contract(
-        df,
-        {
-            "amount_positive": F.col("amount") > 0,
-            "flag_domain": F.col("flag").isin("A", "B"),
-        },
-    )
-    assert [r.id for r in passing.collect()] == [1]
-    assert passing.columns == ["id", "amount", "flag"]
-    v = {r.id: sorted(r.violated_rules) for r in violating.collect()}
-    assert v == {2: ["amount_positive", "flag_domain"], 3: ["amount_positive"]}
-
-
-def test_split_by_contract_is_map_only(spark):
-    from kassette_server_spark.operators.contracts import split_by_contract
-
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 10).alias("v"))
-    passing, violating = split_by_contract(df, {"v_small": F.col("v") < 5})
-    for side in (passing, violating):
-        plan = side._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-    assert passing.count() == 50 and violating.count() == 50
-
-
 def test_hist_drift_monitor_empty_first_batch_reports_nothing(spark, tmp_path):
     """An empty micro-batch commits (fence advances) but produces no
     report: tv over zero mass would be a NULL footgun (round-7

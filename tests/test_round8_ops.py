@@ -310,62 +310,6 @@ def test_rrf_tie_breaks_by_id(spark):
     assert out[0].rrf == out[1].rrf
 
 
-# -- streaming monitors -------------------------------------------------------
-def test_auc_monitor_stream(spark, tmp_path):
-    """foreachBatch composition: running AUC over the accumulated
-    score/label counts; perfect separation → 1.0, adding reversed
-    high-score negatives drags it to the hand-computed midrank value;
-    a replayed batch_id reports nothing."""
-    from kassette_server_spark.operators.evaluation import auc_monitor
-
-    store = str(tmp_path / "auc")
-    b0 = spark.createDataFrame([(1, 0)] * 5 + [(2, 1)] * 5, "s long, y int")
-    r0 = auc_monitor(b0, 0, "s", "y", store)
-    assert r0 is not None and r0["auc"] == 1.0
-    assert (r0["n_pos"], r0["n_neg"]) == (5, 5)
-
-    # five negatives ABOVE every positive: pos ranks midrank at 8
-    # (values 1,2,3 with 5 rows each; R1 = 5*8 = 40, U = 25, n1*n0 = 50)
-    b1 = spark.createDataFrame([(3, 0)] * 5, "s long, y int")
-    r1 = auc_monitor(b1, 1, "s", "y", store)
-    assert r1 is not None
-    assert (r1["n_pos"], r1["n_neg"]) == (5, 10)
-    assert r1["auc"] == 0.5
-
-    # replay of batch 1: fenced skip, no duplicate report
-    assert auc_monitor(b1, 1, "s", "y", store) is None
-
-
-def test_auc_monitor_single_class_reports_none_auc(spark, tmp_path):
-    from kassette_server_spark.operators.evaluation import auc_monitor
-
-    store = str(tmp_path / "auc1c")
-    b0 = spark.createDataFrame([(1, 1), (2, 1)], "s long, y int")
-    r = auc_monitor(b0, 0, "s", "y", store)
-    assert r is not None and r["n_neg"] == 0 and r["auc"] is None
-
-
-def test_skew_monitor_stream(spark, tmp_path):
-    """Running key-count skew: accumulates across batches, recommends
-    the salt factor, fences replays."""
-    from kassette_server_spark.operators.diagnostics import skew_monitor
-
-    store = str(tmp_path / "skew")
-    b0 = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
-    r0 = skew_monitor(b0, 0, "k", store, target_partitions=4)
-    assert r0 is not None
-    assert (r0["n_rows"], r0["n_keys"], r0["max_cnt"]) == (3, 2, 2)
-    assert r0["skew_ratio"] == 4.0 / 3.0
-    assert r0["salt_r"] == 3  # ceil(2*4/3)
-
-    b1 = spark.createDataFrame([("a",)], "k string")
-    r1 = skew_monitor(b1, 1, "k", store, target_partitions=4)
-    assert (r1["n_rows"], r1["max_cnt"]) == (4, 3)
-    assert r1["skew_ratio"] == 1.5 and r1["salt_r"] == 3
-
-    assert skew_monitor(b1, 1, "k", store, target_partitions=4) is None
-
-
 # -- degree_assortativity -----------------------------------------------------
 def test_assortativity_star_is_minus_one(spark):
     """Star K1,3: hub degree 3 links only to degree-1 leaves — the

@@ -594,36 +594,6 @@ def test_hard_negatives_nearest_other_label(spark):
     assert len(out) == 4
 
 
-# -- join_size_monitor (streaming) --------------------------------------------
-def test_join_size_monitor_accumulates_and_fences(spark, tmp_path):
-    """Running two-store join forecast: totals grow as either side's
-    stream advances; a both-sides replay reports nothing."""
-    from kassette_server_spark.operators.diagnostics import join_size_monitor
-
-    ls, rs = str(tmp_path / "l"), str(tmp_path / "r")
-    l0 = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
-    r0 = spark.createDataFrame([("a",), ("c",)], "k string")
-    rep0 = join_size_monitor(l0, 0, r0, 0, "k", "k", ls, rs)
-    # only 'a' matches: 2 (left) x 1 (right) = 2
-    assert rep0 == {
-        "total_out": 2,
-        "n_matched_keys": 1,
-        "max_out": 2,
-        "max_share": 1.0,
-    }
-
-    # right side catches up with a 'b' and another 'a'
-    r1 = spark.createDataFrame([("b",), ("a",)], "k string")
-    l1 = spark.createDataFrame([], "k string")
-    rep1 = join_size_monitor(l1, 1, r1, 1, "k", "k", ls, rs)
-    # a: 2x2=4, b: 1x1=1
-    assert rep1["total_out"] == 5 and rep1["n_matched_keys"] == 2
-    assert rep1["max_out"] == 4 and rep1["max_share"] == 4.0 / 5.0
-
-    # both sides replay → fenced, no duplicate report
-    assert join_size_monitor(l1, 1, r1, 1, "k", "k", ls, rs) is None
-
-
 # -- two_proportion_z ---------------------------------------------------------
 def test_two_proportion_z_hand_case(spark):
     """class1: 3 of 4 succeed (0.75); class0: 1 of 4 (0.25); pooled

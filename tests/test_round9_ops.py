@@ -648,71 +648,6 @@ def test_embedding_drift_one_sided_label_is_drift(spark):
     assert (out[7].n_ref, out[7].n_cur, out[7].norm_ratio) == (0, 1, None)
 
 
-# -- embedding_drift_monitor (streaming) ---------------------------------------
-def test_embedding_drift_monitor_matches_batch_twin(spark, tmp_path):
-    """After merging batches 0..N the running report must be
-    BIT-IDENTICAL to embedding_drift on the concatenation — the
-    additive-integer-sums property, plus the replay fence."""
-    from kassette_server_spark.operators.drift import (
-        embedding_drift,
-        embedding_drift_monitor,
-        embedding_label_sums,
-    )
-
-    schema = "vec_id long, embedding array<float>, label int"
-    ref = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0, 2.0], i % 2) for i in range(10)], schema
-    )
-    ref_sums = embedding_label_sums(ref, dim=3, tag="r")
-    b0 = spark.createDataFrame(
-        [(100 + i, [1.0, float(i % 3), 0.5], i % 2) for i in range(6)], schema
-    )
-    b1 = spark.createDataFrame(
-        [(200 + i, [0.25, 2.0, float(i % 4)], i % 2) for i in range(8)], schema
-    )
-    store = str(tmp_path / "emb_store")
-
-    r0 = embedding_drift_monitor(b0, 0, store, ref_sums, dim=3)
-    assert r0 is not None and len(r0) == 2
-    r1 = embedding_drift_monitor(b1, 1, store, ref_sums, dim=3)
-    assert r1 is not None
-
-    # replay of batch 1 is fenced: no duplicate report, store unmoved
-    assert embedding_drift_monitor(b1, 1, store, ref_sums, dim=3) is None
-
-    batch_twin = {
-        r.label: (r.n_ref, r.n_cur, r.cos_centroid, r.norm_ratio)
-        for r in embedding_drift(ref, b0.unionByName(b1), dim=3).collect()
-    }
-    running = {
-        r.label: (r.n_ref, r.n_cur, r.cos_centroid, r.norm_ratio) for r in r1
-    }
-    assert running == batch_twin
-
-
-def test_embedding_drift_monitor_empty_batch_reports_nothing(spark, tmp_path):
-    """An empty micro-batch merges no mass; labels seen only in the
-    reference still report (NULL cosine) once data exists."""
-    from kassette_server_spark.operators.drift import (
-        embedding_drift_monitor,
-        embedding_label_sums,
-    )
-
-    schema = "vec_id long, embedding array<float>, label int"
-    ref = spark.createDataFrame([(1, [1.0, 0.0], 0)], schema)
-    ref_sums = embedding_label_sums(ref, dim=2, tag="r")
-    empty = spark.createDataFrame([], schema)
-    store = str(tmp_path / "emb_store")
-    r0 = embedding_drift_monitor(empty, 0, store, ref_sums, dim=2)
-    # empty batch merges (fence advances) but the report has no
-    # current-side labels: only the reference's NULL-cosine row ships
-    assert r0 is not None and {x.label: x.n_cur for x in r0} == {0: 0}
-    b1 = spark.createDataFrame([(2, [0.0, 1.0], 0)], schema)
-    r1 = embedding_drift_monitor(b1, 1, store, ref_sums, dim=2)
-    assert {x.label: x.n_cur for x in r1} == {0: 1}
-    assert r1[0].cos_centroid == 0.0
-
-
 # -- tokenizer fertility --------------------------------------------------------
 def test_tokenizer_fertility_hand_case(spark):
     """Corpus 'abc abc' (en) / 'abc' (de) with k=3: 'abc' fully merges

@@ -6,9 +6,9 @@ replay-fencing and single-pass equivalence over 2-3 micro-batches; at
 what matters is that the invariants are INVARIANTS, not 2-batch
 coincidences:
 
-1. Store size stays at its structural bound forever — <= depth*width
-   register rows (Count-Min), <= 2^p rows (HLL), keys+history rows
-   (SCD2) — independent of how many batches have been folded in.
+1. Store size stays at its structural bound forever — <= num_bins
+   rows (histogram), <= 2^p rows (HLL), keys+history rows (SCD2) —
+   independent of how many batches have been folded in.
 2. On-disk state stays exactly ONE committed generation (store.py
    prunes after commit), so disk usage is flat, not O(batches).
 3. Interleaved at-least-once replays (every k-th batch re-delivered)
@@ -40,32 +40,32 @@ def _flat(latencies: list[float]) -> bool:
     return tail <= 4 * head
 
 
-def test_countmin_store_100_batch_soak(spark, tmp_path):
+def test_hist_store_100_batch_soak(spark, tmp_path):
     """100 fenced additive merges, every 7th batch replayed."""
-    store = str(tmp_path / "cms")
-    depth, width = 3, 32
+    store = str(tmp_path / "hist")
+    num_bins = 64
     lat = []
     for b in range(100):
         batch = spark.createDataFrame(
-            [(f"k{b}-{i}",) for i in range(10)], "v string"
+            [(float(b * 10 + i),) for i in range(10)], "v double"
         )
         t0 = time.perf_counter()
-        assert sketches.countmin_merge_into_store(batch, b, "v", store, depth, width)
+        assert sketches.hist_merge_into_store(batch, b, "v", store, num_bins=num_bins)
         lat.append(time.perf_counter() - t0)
         if b % 7 == 0:  # at-least-once replay: fence must reject
-            assert not sketches.countmin_merge_into_store(
-                batch, b, "v", store, depth, width
+            assert not sketches.hist_merge_into_store(
+                batch, b, "v", store, num_bins=num_bins
             )
         if b % 25 == 24:  # bounds hold mid-soak, not just at the end
             st = read_store(spark, store)
-            assert st.count() <= depth * width
+            assert st.count() <= num_bins
             assert committed_generations(store) == [b]
     st = read_store(spark, store)
-    assert st.count() <= depth * width
+    assert st.count() <= num_bins
     assert st.agg({"merged_through": "max"}).collect()[0][0] == 99
-    # total mass == 1000 inserted values x depth rows (replays excluded)
+    # total mass == 1000 inserted values (replays excluded)
     assert (
-        st.agg({"cnt": "sum"}).collect()[0][0] == 100 * 10 * depth
+        st.agg({"cnt": "sum"}).collect()[0][0] == 100 * 10
     ), "a replayed batch was double-counted"
     assert committed_generations(store) == [99]
     assert _flat(lat), f"merge latency drifted: {lat[:10]} -> {lat[-10:]}"
@@ -142,22 +142,14 @@ def test_empty_first_batch_replay_is_graceful(spark, tmp_path):
     generation assertion."""
     from pyspark.sql import functions as F
 
-    empty = spark.range(0).select(F.col("id").cast("string").alias("v"))
-    one = spark.range(1).select(F.col("id").cast("string").alias("v"))
-
-    cm = str(tmp_path / "cm")
-    assert sketches.countmin_merge_into_store(empty, 0, "v", cm) is True
-    # replay of the committed-but-empty batch: graceful skip
-    assert sketches.countmin_merge_into_store(empty, 0, "v", cm) is False
-    assert sketches.countmin_merge_into_store(one, 0, "v", cm) is False
-    # the stream moves on normally afterwards
-    assert sketches.countmin_merge_into_store(one, 1, "v", cm) is True
-
     h = str(tmp_path / "h")
     empty_n = spark.range(0).select(F.col("id").cast("double").alias("v"))
     one_n = spark.range(1).select(F.col("id").cast("double").alias("v"))
     assert sketches.hist_merge_into_store(empty_n, 0, "v", h) is True
+    # replay of the committed-but-empty batch: graceful skip
     assert sketches.hist_merge_into_store(empty_n, 0, "v", h) is False
+    assert sketches.hist_merge_into_store(one_n, 0, "v", h) is False
+    # the stream moves on normally afterwards
     assert sketches.hist_merge_into_store(one_n, 1, "v", h) is True
 
     s = str(tmp_path / "scd2")
