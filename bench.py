@@ -321,8 +321,9 @@ def main() -> None:
     high_variance = {
         "q57_simhash_near_dup",
         "q68_near_dup_clusters",
-        # iterative/multi-job: 3 power iterations x broadcast+checkpoint
-        # — swung 1.6-8 s across six r15 measurements (VERDICT r15 #2)
+        # swung 1.6-8 s across six r15 measurements as 3 power
+        # iterations of broadcast+checkpoint jobs (VERDICT r15 #2); now
+        # one Gram scan + driver iterations, 2 jobs
         "q118_power_iteration_pca",
         # the PQ/IVF-PQ family runs sequential Lloyd/search JOBS whose
         # per-job scheduler overhead dominates at sf0.1 — quiet-box

@@ -38,8 +38,19 @@ fit step).
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import FloatType
+
+from .store import local_frame
+
+_INT64_MAX = 2**63 - 1
 
 
 def _assign(pts: DataFrame, feature_cols: list[str], centroids: list[tuple]) -> DataFrame:
@@ -112,179 +123,150 @@ def kmeans_fit(
     return final.select(F.col("cid").cast("long"), "n", *ctr)
 
 
-# Above this corpus size the per-iteration `dot` table (one row per
-# vector) stops being broadcastable and the exact-int64 Σ_rows
-# envelope stops being provable; power_iteration_top_component then
-# switches to the co-partitioned shuffle join + DECIMAL accumulators.
-# 10⁶ rows × ~24 B ≈ 24 MB broadcast — comfortably under typical
-# executor broadcast budgets, far under the int64 overflow point for
-# the default scales (|w| ≲ rows·maxX·maxDot needs rows ≲ 10⁶ at
-# x_scale=10⁴ for unit-norm embeddings with slack to spare).
-BROADCAST_DOT_MAX_ROWS = 1_000_000
+def _gram_partials(batches):
+    """mapInArrow kernel over one array<bigint> column: fold the
+    partition's exact upper-triangular XᵀX (nulls and the ragged tail
+    count as 0) and per-dim non-null counts across ALL its Arrow
+    batches, and yield one (nd, g, nz) row — nd = the longest array.
+
+    Each partial stays inside int64: |G_ij| ≤ rows·max|x|², so rows
+    are folded in chunks whose bound fits, and a partition whose
+    running bound would pass 2⁶³ yields early instead of wrapping (one
+    row per partition below ~9·10¹⁰ unit-norm rows at x_scale 10⁴)."""
+    g = np.zeros((0, 0), np.int64)
+    nz = np.zeros(0, np.int64)
+    nd, bound = -1, 0
+
+    def flush():
+        iu = np.triu_indices(nd)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([nd], pa.int32()),
+                pa.array([g[iu]], pa.list_(pa.int64())),
+                pa.array([nz], pa.list_(pa.int64())),
+            ],
+            names=["nd", "g", "nz"],
+        )
+
+    for b in batches:
+        q = b.column(0)
+        lens = pc.list_value_length(q).fill_null(0).to_numpy().astype(np.int64)
+        if not pc.any(q.is_valid()).as_py():
+            continue
+        width = int(lens.max())
+        flat = q.flatten()
+        rows = np.repeat(np.arange(len(q)), lens)
+        pos = np.arange(len(flat)) - np.repeat(np.cumsum(lens) - lens, lens)
+        X = np.zeros((len(q), width), np.int64)
+        X[rows, pos] = flat.fill_null(0).to_numpy()
+        seen = np.bincount(pos[flat.is_valid().to_numpy(False)], minlength=width)
+        top = max(-int(X.min()), int(X.max())) if X.size else 0
+        if top * top > _INT64_MAX:
+            raise ValueError(f"quantized component {top} squares past int64")
+        step = _INT64_MAX // max(top * top, 1)
+        for s in range(0, len(q), step):
+            chunk = X[s : s + step]
+            if bound + len(chunk) * top * top > _INT64_MAX:
+                yield flush()
+                g[:], nz[:], bound = 0, 0, 0
+            bound += len(chunk) * top * top
+            if width > nd:
+                g = np.pad(g, (0, width - max(nd, 0)))
+                nz = np.pad(nz, (0, width - max(nd, 0)))
+                nd = width
+            g[:width, :width] += chunk.T @ chunk
+        nz[:width] += seen
+    if nd >= 0:
+        yield flush()
+
+
+def _round_half_up(x: float) -> int:
+    # Spark's round(double) is BigDecimal HALF_UP on the double's
+    # shortest repr, which lies on the same side of every .5 as the
+    # exact binary value Decimal(x) holds; Python's round() is
+    # half-even
+    return int(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
 
 
 def power_iteration_top_component(
     df: DataFrame,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
     iters: int = 3,
     x_scale: int = 10_000,
     v_scale: int = 100_000,
-    broadcast_dot: bool | None = None,
-    _capture_plans: list | None = None,
 ) -> DataFrame:
     """Top principal direction of X'X by ``iters`` fixed-point power
     iterations — the distributed-PCA reduce step (whitening, SemDeDup
     axes, embedding drift) made engine-reproducible.
 
-    Float power iteration is summation-order-dependent twice per pass
-    (the dot products and the Σ_rows accumulation); here every
-    accumulation is EXACT integer arithmetic: embeddings quantize to
-    ``round(x·x_scale)``, the direction to ``round(v·v_scale)``,
-    per-row dots are Σ Xᵢ·Vᵢ over int64 (row-local, exact — bounded by
-    n_dims terms, corpus-size-independent), the new direction
-    w_j = Σ_rows Xⱼ·dot is an exact integer sum, and ‖w‖² feeds one
-    sqrt; the ONLY floats are the final sqrt + scale + round per
-    component — IEEE exact-rounded, identical everywhere.
+    Float power iteration is summation-order-dependent twice per pass;
+    here every accumulation is EXACT integer arithmetic: embeddings
+    quantize to ``round(x·x_scale)`` (in Spark), the direction to
+    ``round(v·v_scale)``. ONE Spark job scans X: a per-partition
+    kernel folds the exact int64 Gram matrix G = XᵀX
+    (``_gram_partials``) and the driver sums the ≤ partitions ×
+    d(d+1)/2 partials in Python ints — exact at any corpus size. The
+    iterations then run on the driver over the d×d matrix (Spark
+    MLlib's ``RowMatrix.computePrincipalComponents`` shape): w = G·v
+    in Python ints, which is the very integer the row-wise loop
+    builds, since Σ_r x_rj·(Σ_i x_ri·v_i) = Σ_i G_ji·v_i. The only
+    floats are the ones the oracle's SQL takes, in the same order:
+    ‖w‖ = sqrt(float(Σ w²)), then HALF_UP round(float(w)·v_scale/‖w‖)
+    — correctly rounded IEEE steps, identical everywhere.
 
-    Two physical modes, gated on corpus size (VERDICT r15 #4 — the
-    unconditional per-vector broadcast was the round's one scale flag;
-    the opt-in pattern copies PageRank's ``broadcast_ranks``,
-    operators/graph.py):
+    Every row is one vector; null elements and the tail of a shorter
+    array count as 0. Null semantics follow the SQL plan the oracle
+    unrolls: a dim with no non-null element anywhere gets a null
+    ``vj``, and a zero norm nulls every ``vj`` (non-ANSI division).
 
-    - ``broadcast_dot=True`` (auto when rows ≤ BROADCAST_DOT_MAX_ROWS):
-      the 1-row-per-vector ``dot`` table is broadcast each pass — zero
-      shuffle of the exploded X; Σ_rows stays in int64 (exact inside
-      the documented envelope, |w| ≲ rows·maxX·maxDot).
-    - ``broadcast_dot=False`` (auto beyond the threshold): X is hash-
-      partitioned by ``rid`` ONCE at checkpoint time; ``dot`` comes out
-      of its groupBy already hash-partitioned on ``rid``, so the
-      per-iteration join is co-partitioned — the only per-pass exchange
-      is the small dot table itself, never X. Σ_rows widens to
-      DECIMAL(38,0) (exact to 38 digits — past any realistic corpus);
-      ‖w‖² is then accumulated in double (relative error ~1e-16·n_dims,
-      invisible after the round() — and already outside the bit-exact
-      envelope by construction at that scale).
-
-    Both modes produce identical output inside the int64 envelope (the
-    oracle runs there); the wide mode trades the bit-exactness proof of
-    ‖w‖² for not overflowing, not correctness. The explicit flag exists
-    for callers that know their corpus; ``None`` = decide by count.
-
-    The per-dim direction ``v`` (n_dims rows) is ALWAYS broadcast —
-    it is bounded by embedding dimensionality, not corpus size.
-
-    Output: (dim, vj) — the unit direction × v_scale, 1-based dims.
+    Output: (dim, vj) — the unit direction × v_scale, dims 1..max
+    array length, as a one-slice local frame.
     """
-    # ONE tiny aggregate answers both bounded questions (r17): the
-    # broadcast gate's row count and the dimensionality. n_dims =
-    # max(size(vec)) is provably the old dims.distinct() set's max —
-    # posexplode emits contiguous 0..len-1 per row, so the union of
-    # (pos+1) values is exactly 1..max(size) — and replaces a distinct
-    # + count over the EXPLODED frame (rows × dims) with a scan-local
-    # max over rows.
-    meta = df.agg(
-        F.count("*").alias("n"), F.max(F.size(F.col(vec_col))).alias("nd")
-    ).collect()[0]
-    if broadcast_dot is None:
-        broadcast_dot = int(meta["n"] or 0) <= BROADCAST_DOT_MAX_ROWS
-    x = df.select(
-        F.col(id_col).alias("rid"),
-        F.posexplode(F.col(vec_col)).alias("pos", "xval"),
-    ).select(
-        "rid",
-        (F.col("pos") + 1).alias("dim"),
-        F.round(F.col("xval") * x_scale).cast("long").alias("xi"),
+    spark = df.sparkSession
+    # FLOAT·INT must stay FLOAT, as non-ANSI Spark and the oracle's
+    # DuckDB compute it; ANSI coercion would widen it to DOUBLE
+    scale = F.lit(x_scale)
+    if df.schema[vec_col].dataType.elementType == FloatType():
+        scale = scale.cast("float")
+    q = df.select(
+        F.transform(F.col(vec_col), lambda e: F.round(e * scale).cast("long"))
     )
-    if broadcast_dot:
-        x = x.localCheckpoint(eager=False)
-    else:
-        # pay the X shuffle ONCE; every iteration's rid join and dot
-        # groupBy then find X already hash-partitioned on rid and plan
-        # no further X exchange. persist(), not localCheckpoint: a lazy
-        # checkpoint under AQE materializes as Scan ExistingRDD with
-        # UNKNOWN partitioning, re-inserting the rid exchange per
-        # iteration — InMemoryRelation preserves outputPartitioning
-        # (cached-plan partitioning is stable while
-        # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-        # keeps its default false). Storage cost is the same block
-        # store localCheckpoint would use.
-        x = x.repartition("rid").persist()
-        # materialize the cached frame NOW: planning the first
-        # iteration against an unbuilt InMemoryRelation re-inserts the
-        # rid ENSURE_REQUIREMENTS exchange the explicit repartition
-        # exists to eliminate (the old dims.count() did this by
-        # accident; wide mode keeps one bounded action for it)
-        x.count()
-    n_dims = int(meta["nd"])  # bounded: embedding dimensionality
-    seed = int(round(v_scale / n_dims**0.5))
-    # dim spelled as the same INT type x carries (pos + 1), so the
-    # per-iteration USING joins stay coercion-free and the output
-    # schema is unchanged
-    v = (
-        df.sparkSession.range(1, n_dims + 1, 1, 1)
-        .select(F.col("id").cast("int").alias("dim"))
-        .select("dim", F.lit(seed).cast("long").alias("vj"))
+    parts = q.mapInArrow(
+        _gram_partials, "nd int, g array<bigint>, nz array<bigint>"
+    ).collect()  # bounded: partitions × d(d+1)/2
+    n_dims = max((r["nd"] for r in parts), default=0)
+    G = [[0] * n_dims for _ in range(n_dims)]
+    seen = [0] * n_dims
+    for r in parts:
+        tri = iter(r["g"])
+        for i in range(r["nd"]):
+            seen[i] += r["nz"][i]
+            for j in range(i, r["nd"]):
+                G[i][j] += next(tri)
+    for i in range(n_dims):
+        for j in range(i):
+            G[i][j] = G[j][i]
+    # a dim with no non-null element has a zero G row and column, so
+    # while any v_i lives the live dims are exactly the seen ones
+    v = [int(round(v_scale / n_dims**0.5))] * n_dims if n_dims else []
+    for _ in range(iters):
+        live = any(vi is not None for vi in v)
+        w = [
+            sum(g * vi for g, vi in zip(G[j], v) if vi is not None)
+            if live and seen[j]
+            else None
+            for j in range(n_dims)
+        ]
+        nrm = math.sqrt(float(sum(wj * wj for wj in w if wj is not None)))
+        v = [
+            None
+            if wj is None or nrm == 0
+            else _round_half_up(float(wj) * v_scale / nrm)
+            for wj in w
+        ]
+    return local_frame(
+        spark, [(j + 1, vj) for j, vj in enumerate(v)], "dim int, vj long"
     )
-    for it in range(iters):
-        dot = (
-            x.join(F.broadcast(v), "dim")
-            .groupBy("rid")
-            .agg(F.sum(F.col("xi") * F.col("vj")).alias("dot"))
-        )
-        if broadcast_dot:
-            w = (
-                x.join(F.broadcast(dot), "rid")
-                .groupBy("dim")
-                .agg(F.sum(F.col("xi") * F.col("dot")).alias("w"))
-            )
-            norm = w.agg(
-                F.sqrt(
-                    F.sum(
-                        F.col("w").cast("decimal(38,0)") * F.col("w")
-                    ).cast("double")
-                ).alias("nrm")
-            )
-        else:
-            # shuffle_hash hint, dot build side: at wide-mode scale
-            # NEITHER side is broadcastable (Catalyst would otherwise
-            # auto-broadcast whichever side's stats look small and the
-            # plan would flip with the data); SHJ on the co-partitioned
-            # sides exchanges nothing and skips SMJ's per-pass sort of
-            # X — the build map is one iteration's dot rows for one
-            # partition, 1/shuffle.partitions of the corpus ids.
-            w = (
-                x.join(dot.hint("shuffle_hash"), "rid")
-                .groupBy("dim")
-                .agg(
-                    F.sum(
-                        F.col("xi").cast("decimal(38,0)") * F.col("dot")
-                    ).alias("w")
-                )
-            )
-            norm = w.agg(
-                F.sqrt(F.sum(F.pow(F.col("w").cast("double"), 2))).alias(
-                    "nrm"
-                )
-            )
-        vq = w.crossJoin(F.broadcast(norm)).select(
-            "dim",
-            F.round(F.col("w").cast("double") * v_scale / F.col("nrm"))
-            .cast("long")
-            .alias("vj"),
-        )
-        if _capture_plans is not None:
-            # plan-lock hook: the checkpoint boundary hides the
-            # per-iteration join structure from the returned frame's
-            # explain, so tests capture each pre-checkpoint plan here
-            _capture_plans.append(
-                vq._jdf.queryExecution().executedPlan().toString()
-            )
-        # the checkpoint feeds the NEXT iteration's broadcast; the
-        # final round's frame is consumed exactly once by the caller
-        # (the pagerank/LPA final-round rule, r16) — skip it there
-        v = vq if it == iters - 1 else vq.localCheckpoint(eager=False)
-    return v
 
 
 def power_iteration_oracle_sql(

@@ -368,8 +368,8 @@ def _png_read(payload: bytes) -> tuple[dict, bytes | None, bytes]:
     concatenated IDAT stream inflated ONCE with exact scanline-length
     verification (sequential images; Adam7 pass sizes are checked by
     the pixel decode). Returns (meta, PLTE body or None, inflated
-    scanline stream). Raises ValueError on any corruption (zlib.error
-    on a bad deflate stream)."""
+    scanline stream). Raises ValueError on any corruption, a bad
+    deflate stream included."""
     if payload[:8] != PNG_SIG:
         raise ValueError("not a PNG: bad signature")
     pos, ihdr, idat, plte = 8, None, [], None
@@ -401,7 +401,10 @@ def _png_read(payload: bytes) -> tuple[dict, bytes | None, bytes]:
     if color_type not in _PNG_CHANNELS:
         raise ValueError(f"unknown PNG color type {color_type}")
     channels = _PNG_CHANNELS[color_type]
-    raw = zlib.decompress(b"".join(idat))
+    try:
+        raw = zlib.decompress(b"".join(idat))
+    except zlib.error as e:
+        raise ValueError(f"bad IDAT stream: {e}") from None
     stride = 1 + (width * channels * bit_depth + 7) // 8  # +1 filter byte
     if interlace == 0 and len(raw) != stride * height:
         raise ValueError("pixel stream length mismatch")

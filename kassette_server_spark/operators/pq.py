@@ -220,9 +220,9 @@ def _update_frame(
     coarse: list[tuple[int, tuple[int, ...]]] | None = None,
 ) -> DataFrame:
     """One Lloyd update as a DataFrame: assign every (vector, m) to its
-    nearest centroid and PARTIALLY aggregate per Arrow batch (one
+    nearest centroid and PARTIALLY aggregate per partition (one
     vectorized numpy kernel — (n, k, d) broadcast diff, exact int64 —
-    emitting ≤ M·K partial rows per batch), then groupBy((m, cid))
+    emitting ≤ M·K partial rows per partition), then groupBy((m, cid))
     sums the partials. Output: (m, cid, n, s_0..s_{d-1}) — ≤ M·K rows
     through the single Exchange.
 
@@ -254,7 +254,9 @@ def _update_partials(
     coarse: list[tuple[int, tuple[int, ...]]] | None = None,
 ) -> DataFrame:
     """The map-only half of one Lloyd update: ≤ M·K partial
-    (m, cid, n, s_0..s_{d-1}) rows PER ARROW BATCH, nothing shuffled."""
+    (m, cid, n, s_0..s_{d-1}) rows PER PARTITION — the kernel folds
+    every Arrow batch of its partition before yielding — nothing
+    shuffled."""
     nb = _np_book(book, m)
     coarse_np = _np_book({0: coarse}, 1)[0] if coarse is not None else None
     vec_field = "v" if quantize else "qv"
@@ -264,23 +266,29 @@ def _update_partials(
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # per (m, cid): [n, s_0..s_{d-1}] in int64 — components are
+        # int8-range (a coarse residual at most doubles them), so a
+        # partition's sums stay exact past 10¹⁶ rows
+        acc: dict[tuple[int, int], np.ndarray] = {}
         for pdf in it:
             if not len(pdf):
                 continue
             V = _prep_np(pdf[vec_field], quantize, coarse_np)
-            rows = []
             for mi in range(m):
                 cids, cents = nb[mi]
                 S = V[:, mi * d : (mi + 1) * d]
                 a = _assign_np(S, cents)
                 for ai in np.unique(a):
                     mask = a == ai
-                    sums = S[mask].sum(axis=0, dtype=np.int64)
-                    rows.append(
-                        (mi, int(cids[ai]), int(mask.sum()))
-                        + tuple(int(x) for x in sums)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+                    key = (mi, int(cids[ai]))
+                    got = acc.setdefault(key, np.zeros(d + 1, np.int64))
+                    got[0] += mask.sum()
+                    got[1:] += S[mask].sum(axis=0, dtype=np.int64)
+        if acc:
+            yield pd.DataFrame(
+                [key + tuple(int(x) for x in acc[key]) for key in sorted(acc)],
+                columns=cols,
+            )
 
     return qdf.select(vec_field).mapInPandas(batches, schema=schema)
 
@@ -294,9 +302,9 @@ def _update_book(
     coarse: list[tuple[int, tuple[int, ...]]] | None = None,
 ) -> Codebook:
     """One Lloyd update folded driver-side (r17): collect the map-only
-    partials (≤ M·K rows per Arrow batch — bounded by the codebook
-    size × batch count, the same boundedness the old ≤ M·K-row collect
-    asserted) and sum them in Python instead of through a groupBy
+    partials (≤ M·K rows per partition — bounded by the codebook size
+    × partition count, never by input rows or Arrow batches) and sum
+    them in Python instead of through a groupBy
     Exchange + final-aggregate stage. Python ints are exact (arbitrary
     precision) and integer addition is order-free, so the folded sums
     — and therefore the floored-mean centroids — are bit-identical to

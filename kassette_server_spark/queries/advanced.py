@@ -1252,8 +1252,8 @@ def q119(spark: SparkSession, sf: str) -> DataFrame:
     "q118_power_iteration_pca",
     oracle=power_iteration_oracle_sql(),
     doc="top principal direction of the embedding matrix via 3 "
-    "exact-integer power iterations (quantized dots, DECIMAL norm, "
-    "broadcast per-pass state)",
+    "exact-integer power iterations (one scan for the quantized Gram "
+    "matrix, iterations on the driver in Python ints)",
     tags=("embedding", "llm"),
 )
 def q118(spark: SparkSession, sf: str) -> DataFrame:

@@ -11,10 +11,13 @@ the ledger records delivery *outcomes* (succeeded/failed), and
 reference's `MAX(id) GROUP BY job_id` pattern (jobs/jobsdb.go:557-559)
 expressed as an aggregate instead of a self-join.
 
-Scale notes: the ledger is partitioned by date in production; latest-
-state is one shuffle on job_id with map-side partial max_by; retry
-scans prune to recent partitions. Append-only means no row-level
-update contention at 1000 executors.
+Scale notes: ``append`` writes one unpartitioned parquet directory,
+one part per non-empty batch, and ``compact`` is the only thing that
+shrinks it. Latest-state is one shuffle on job_id with map-side
+partial max_by over the WHOLE history, so every dedup and retry read
+grows with the ledger until it is compacted — bounding that read by
+the batch is ROADMAP item 6. Append-only means no row-level update
+contention at 1000 executors.
 """
 
 from __future__ import annotations

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import re
 
 from pyspark.sql import functions as F
 
@@ -560,60 +559,102 @@ def test_power_iteration_finds_dominant_direction(spark):
     assert again == {(r.dim, r.vj) for r in out.collect()}
 
 
-def test_power_iteration_wide_mode_matches_and_engages(spark):
-    """VERDICT r15 #4 (the round's one `weak` scale flag): the
-    per-vector `dot` broadcast must be threshold-gated. Locks that
-    (a) the non-broadcast mode produces the identical direction on
-    in-envelope data, (b) its plan joins `dot` WITHOUT a broadcast and
-    WITHOUT re-shuffling X on rid (X paid its hash(rid) exchange once
-    at checkpoint time; dot's groupBy inherits it), and (c) the
-    broadcast mode still plans zero rid shuffles at all."""
-    import numpy as np
+def _power_iteration_vs_oracle(spark, rows, **kw):
+    """The operator's (dim, vj) set against power_iteration_oracle_sql
+    run in DuckDB over the same rows."""
+    import duckdb
 
     from kassette_server_spark.operators.clustering import (
+        power_iteration_oracle_sql,
         power_iteration_top_component,
     )
 
-    rng = np.random.RandomState(11)
-    true_dir = np.zeros(8)
-    true_dir[1] = 0.6
-    true_dir[5] = 0.8
-    pts = [
-        (i, (float(c) * true_dir + rng.normal(0, 0.01, 8)).tolist())
-        for i, c in enumerate(rng.normal(0, 1, 120))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = power_iteration_top_component(df.repartition(4), **kw)
+    got = {tuple(r) for r in out.collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    n_dims = max(len(v) for _, v in rows if v is not None)
+    sql = power_iteration_oracle_sql("t", n_dims=n_dims, **kw)
+    want = set(con.execute(sql).fetchall())
+    assert got == want
+    return got
+
+
+def test_power_iteration_matches_oracle_on_ragged_null_input(spark):
+    """One Gram pass + driver iterations ≡ the row-wise SQL iterations:
+    ragged lengths, null arrays and elements, an all-null dim (null vj),
+    several partitions' partials folded, HALF_UP rounding and a zero
+    norm (every vj null, as non-ANSI division gives)."""
+    import random
+
+    rng = random.Random(5)
+    rows = [
+        (i, None if i % 17 == 0 else [
+            None if rng.random() < 0.1 else rng.gauss(0, 1)
+            for _ in range(rng.randint(0, 9))
+        ])
+        for i in range(200)
     ]
-    df = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
+    rows.append((200, [0.5] + [None] * 11))  # dims 10..12: no non-null element
+    got = _power_iteration_vs_oracle(spark, rows)
+    assert {d for d, vj in got if vj is None} == {10, 11, 12}
 
-    plans_b: list = []
-    plans_w: list = []
-    out_b = power_iteration_top_component(
-        df, broadcast_dot=True, _capture_plans=plans_b
+    # w = (4, 4, 4, -4), ‖w‖ = 8: vj = ±2.5 rounds away from zero
+    got = _power_iteration_vs_oracle(
+        spark, [(1, [1.0, 1.0, 1.0, -1.0])], iters=1, x_scale=1, v_scale=5
     )
-    out_w = power_iteration_top_component(
-        df, broadcast_dot=False, _capture_plans=plans_w
-    )
-    got_b = {(r.dim, r.vj) for r in out_b.collect()}
-    got_w = {(r.dim, r.vj) for r in out_w.collect()}
-    assert got_b == got_w  # identical inside the int64 envelope
+    assert got == {(1, 3), (2, 3), (3, 3), (4, -3)}
 
-    assert len(plans_b) == 3 and len(plans_w) == 3
-    ensure_rid = re.compile(
-        r"Exchange hashpartitioning\(rid[^\n]*ENSURE_REQUIREMENTS"
-    )
-    for p in plans_w:
-        # the rid join is a shuffle-hash join (at wide-mode scale
-        # NEITHER side is broadcastable; the hint pins it so Catalyst
-        # can't flip the plan on whichever side's stats look small)...
-        assert "ShuffledHashJoin" in p
-        # ...and the planner inserts ZERO rid exchanges: X paid one
-        # explicit REPARTITION_BY_COL before persist(), and both the
-        # dot groupBy and the join reuse that partitioning
-        assert not ensure_rid.search(p)
-        # dot is never broadcast (it is one row per corpus vector)
-        assert "BroadcastHashJoin [rid" not in p
-    for p in plans_b:
-        # broadcast mode: dot is broadcast, no shuffle-class rid join
-        assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
+    got = _power_iteration_vs_oracle(spark, [(1, [0.0, 0.0]), (2, [0.0, None])])
+    assert got == {(1, None), (2, None)}
+
+
+def test_gram_partials_split_before_int64_overflow():
+    """A partition whose |x|² bound passes 2⁶³ yields several int64
+    partials instead of wrapping; their Python-int sum is the exact
+    Gram matrix."""
+    import pyarrow as pa
+
+    from kassette_server_spark.operators.clustering import _gram_partials
+
+    big = 3 * 10**9  # big² < 2⁶³ < 2·big²
+    vecs = [[big, -big, None], [big, 1], None, [2]]
+    batch = pa.RecordBatch.from_arrays([pa.array(vecs, pa.list_(pa.int64()))], ["q"])
+    parts = [b.to_pylist()[0] for b in _gram_partials(iter([batch, batch]))]
+    assert len(parts) > 2
+    got = {}
+    for p in parts:
+        tri = [(i, j) for i in range(p["nd"]) for j in range(i, p["nd"])]
+        for ij, g in zip(tri, p["g"]):
+            got[ij] = got.get(ij, 0) + g
+    rows = [[x or 0 for x in v] + [0] * (3 - len(v)) for v in vecs if v] * 2
+    want = {
+        (i, j): sum(r[i] * r[j] for r in rows) for i in range(3) for j in range(i, 3)
+    }
+    assert got == want and max(got.values()) > 2**63
+    seen = [0, 0, 0]
+    for p in parts:
+        for i, c in enumerate(p["nz"]):
+            seen[i] += c
+    assert seen == [6, 4, 0]
+
+
+def test_power_iteration_runs_two_jobs(spark):
+    """q118 scans the embeddings once (the Gram pass) and the result is
+    a local frame: building and consuming it runs at most 2 jobs."""
+    load(spark, SF_SMOKE, "embeddings")  # schema inference is a job of its own
+    sc = spark.sparkContext
+    sc.setJobGroup("q118-jobs", "q118 job count")
+    try:
+        SPECS["q118_power_iteration_pca"].fn(spark, SF_SMOKE).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        jobs = sc.statusTracker().getJobIdsForGroup("q118-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(jobs) <= 2
 
 
 # ---------- plan locks for the session-3 tail (q105-q118) ----------

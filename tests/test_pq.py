@@ -9,6 +9,9 @@ from conftest import SF_SMOKE
 
 from kassette_server_spark.catalog import load
 from kassette_server_spark.operators.pq import (
+    _raw,
+    _seed_codebook,
+    _update_partials,
     exact_int8_l2_topk,
     pq_adc_topk,
     pq_encode,
@@ -67,6 +70,32 @@ def test_pq_train_matches_numpy_reference(spark):
         assert set(got) == set(ref_book[mi])
         for cid, coords in got.items():
             assert coords == tuple(int(v) for v in ref_book[mi][cid]), (mi, cid)
+
+
+def test_pq_update_partials_fold_per_partition(spark):
+    """With many Arrow batches per partition the update kernel still
+    yields ≤ M·K partial rows per partition (the driver collect is
+    bounded by plan size, not batch count), and training still matches
+    the numpy reference."""
+    e = load(spark, SF_SMOKE, "embeddings")
+    _, _, ref_book, _ = _numpy_pq(e.toPandas())
+    parts = 3
+    vdf = _raw(e, "vec_id", "embedding", "_pid").repartition(parts)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")  # ~10 batches per partition at sf0.001
+    try:
+        book0 = _seed_codebook(vdf, M, K, D, quantize=True)
+        rows = _update_partials(vdf, book0, M, d, quantize=True).collect()
+        book = pq_train(e.repartition(parts), m=M, k=K, iters=2, dim=D)
+    finally:
+        spark.conf.set(key, prev)
+    assert len(rows) <= parts * M * K
+    assert sum(r["n"] for r in rows) == M * e.count()
+    for mi in range(M):
+        assert dict(book[mi]) == {
+            cid: tuple(int(v) for v in c) for cid, c in ref_book[mi].items()
+        }
 
 
 def test_pq_fit_summary_moments_match_numpy(spark):

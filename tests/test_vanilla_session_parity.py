@@ -27,6 +27,7 @@ SPECS = [
     "q24_sessionize",       # timestamp arithmetic
     "q102_pagerank",        # integer division + DECIMAL(38,0) product
     "q117_bigram_logprob",  # ln + frequency-cut joins
+    "q118_power_iteration_pca",  # FLOAT·INT quantization (ANSI widens to DOUBLE)
     "q136_dow_seasonality", # modulo sign semantics
     "q140_point_in_time_join",
     "q141_dataset_split",   # md5-hex -> BIGINT conv + double compare
