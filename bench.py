@@ -146,6 +146,9 @@ LAYER_KEYS = {
     "stages": "spark.stages",
     "tasks": "spark.tasks",
     "executor_run_s": "spark.executor_run_s",
+    # task input metrics: checkpoint-block and parquet-footer reads,
+    # NOT parquet scan volume (a full scan of a 780 KB parquet file
+    # reads ~2 kB here)
     "input_bytes": "spark.input_bytes",
     "shuffle_read_bytes": "spark.shuffle_read_bytes",
     "shuffle_write_bytes": "spark.shuffle_write_bytes",

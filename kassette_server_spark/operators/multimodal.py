@@ -2740,14 +2740,7 @@ def decode_media_meta(
                     elif payload[:2] == BMP_SIG:
                         m = parse_bmp_meta(payload)
                         row.update(kind="bmp", width=m["width"], height=m["height"])
-                except (
-                    ValueError,
-                    struct.error,
-                    zlib.error,
-                    KeyError,
-                    IndexError,
-                    ZeroDivisionError,
-                ):
+                except ValueError:  # every parser's one corrupt-input class
                     pass
                 rows.append(row)
             yield pd.DataFrame(rows)
@@ -4836,17 +4829,7 @@ def frame_sample(
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 try:
                     decoded = decode_avi_frames(bytes(payload), every_n)
-                except (
-                    # decode_media_meta's full degrade set: a crafted
-                    # frame can reach any of these through the JPEG
-                    # decoder (zero sampling factors, missing tables)
-                    ValueError,
-                    struct.error,
-                    zlib.error,
-                    KeyError,
-                    IndexError,
-                    ZeroDivisionError,
-                ):
+                except ValueError:  # the AVI/JPEG decoders' one error class
                     continue
                 for idx, w, h, ch, px in decoded:
                     rows.append(

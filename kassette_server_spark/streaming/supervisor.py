@@ -34,7 +34,7 @@ StartFn = Callable[[Connection], object]
 DRAIN_TIMEOUT_S = 10.0
 
 #: extra slack stop_all grants beyond the drain window for in-flight
-#: starts to schedule their orphans' stops and for those stops to join
+#: starts to return and for their queries' stops to finish
 #: (module-level so tests can shrink it; production default generous —
 #: a Spark streaming-query start can take seconds)
 START_WAIT_GRACE_S = 10.0
@@ -66,346 +66,203 @@ def _swallow(fn) -> None:
         pass  # a concurrently-stopped query raises; stop() handles it
 
 
+class _Slot:
+    """One connection's desired and actual state. Every field is read
+    and written under the supervisor's Condition."""
+
+    __slots__ = (
+        "want", "gen", "query", "query_gen", "tried", "error", "step", "worker"
+    )
+
+    def __init__(self):
+        self.want: Connection | None = None  # None: removed or disabled
+        self.gen = 0  # bumped by every apply() that touches the cid
+        self.query = None  # the live query, of generation query_gen
+        self.query_gen = 0
+        self.tried = 0  # last generation whose start was attempted
+        self.error: str | None = None  # repr of the last failed start
+        self.step: str | None = None  # "start" | "stop" while one runs
+        self.worker: threading.Thread | None = None
+
+
 class StreamingSupervisor:
+    """Desired-state reconcile loop, one slot per connection.
+
+    ``apply`` records the desired state (bumping the slot's
+    generation) and makes sure the slot has a worker thread; the
+    worker alone starts and stops that connection's queries. It
+    drain-stops any live query that is not of the current generation,
+    then starts the desired config once per generation, and exits when
+    nothing is left to do. Because one thread owns each connection's
+    lifecycle, two live queries can never share a checkpoint directory,
+    and restarts mid-start, orphaned starts, stacked reconfigs and
+    enable-then-disable during a drain are just more turns of the loop
+    that converge to the LAST desired state. Nothing slow ever runs
+    under the lock: ``apply`` is the ConfigStore's on_change callback
+    and executes inside its mutation lock, so a stop that is slower
+    than 0.5 s finishes in the background."""
+
     def __init__(self, start: StartFn):
         self._start = start
-        self._queries: dict[int, object] = {}
-        #: in-flight drain-then-stop threads, one per connection id
-        self._stopping: dict[int, threading.Thread] = {}
-        #: per-cid pending-start token: the ONE queued/in-flight start
-        #: that currently owns the right to populate _queries[cid].
-        #: apply() supersedes it (fresh token, or pop on disable) before
-        #: scheduling anything new, and every start re-checks its token
-        #: under the lock before going live — closing the round-8 advice
-        #: race where two waiters on one pending stop both started (two
-        #: live queries sharing a checkpoint dir), and where an
-        #: enable-then-disable left a waiter to start a query for a
-        #: now-disabled connection that nothing would ever stop.
-        self._pending_start: dict[int, object] = {}
-        #: cid -> repr(exception) of the most recent FAILED start. A
-        #: start that throws (bad config, checkpoint corruption) used
-        #: to die silently on its waiter daemon thread, leaving the
-        #: connection enabled-but-never-running with no surfaced error
-        #: (ADVICE r8 item 3); now the failure is recorded here, read
-        #: via ``failed_starts``, and cleared by the next successful
-        #: start or disable of the same cid.
-        self._failed: dict[int, str] = {}
-        #: cid -> Event for a ``_start`` call currently EXECUTING (as
-        #: opposed to queued — that's ``_pending_start``). A restart
-        #: that arrives mid-start must chain behind this the same way
-        #: it chains behind ``_stopping``: without it, apply(changed)
-        #: finds nothing in _queries or _stopping, pops the old token,
-        #: and fast-paths a second ``_start`` for the same cid — two
-        #: live queries overlapping on the shared checkpoint dir until
-        #: the first start returns and notices it was superseded
-        #: (ADVICE r9 item 1). The event is set only AFTER the start's
-        #: outcome is registered (query live, failure recorded, or
-        #: orphan stop scheduled into ``_stopping``), so a successor
-        #: waking on it always sees the stop it must join.
-        self._starting: dict[int, threading.Event] = {}
-        # RLock: _finish_start -> _start may be re-entered by callbacks
-        self._lock = threading.RLock()
+        self._slots: dict[int, _Slot] = {}
+        self._cv = threading.Condition(threading.Lock())
 
     @property
     def running(self) -> dict[int, object]:
-        return dict(self._queries)
+        """cid -> live query of the connection's CURRENT config (a
+        query that a newer apply() superseded is draining, not running)."""
+        with self._cv:
+            return self._running()
+
+    def _running(self) -> dict[int, object]:
+        return {
+            cid: s.query
+            for cid, s in self._slots.items()
+            if s.query is not None and s.query_gen == s.gen
+        }
 
     @property
     def failed_starts(self) -> dict[int, str]:
-        """cid -> error repr for connections whose last start THREW.
-        Health surfaces (M3 /router-job-status) should report these —
-        an enabled connection in here is down, not pending."""
-        with self._lock:
-            return dict(self._failed)
+        """cid -> error repr for connections whose last start THREW. An
+        enabled connection in here is down, not pending, until the next
+        apply() touching it; the planned ``/status`` surface (ROADMAP
+        item 3) is to report these."""
+        with self._cv:
+            return {cid: s.error for cid, s in self._slots.items() if s.error}
 
     def busy_reason(self) -> str | None:
         """A human-readable reason the supervisor is NOT quiescent
-        (running queries, winding-down stops, or queued starts), or
-        None when idle. Maintenance operations that require quiescence
-        — ledger compaction above all — consult this to fail loudly
-        instead of racing a live stream."""
-        with self._lock:
-            self._reap_stopped()
-            if self._queries:
-                return f"queries running for connections {sorted(self._queries)}"
-            if self._stopping:
-                return f"stops draining for connections {sorted(self._stopping)}"
-            if self._pending_start:
-                return f"starts queued for connections {sorted(self._pending_start)}"
-            # a disable that lands mid-start pops the token but the
-            # Spark start is still executing — not quiescent until its
-            # orphan is handed to _stopping
-            if self._starting:
-                return f"starts in flight for connections {sorted(self._starting)}"
+        (running queries, draining stops, or queued and in-flight
+        starts), or None when idle. Maintenance operations that require
+        quiescence — ledger compaction above all — consult this to fail
+        loudly instead of racing a live stream."""
+        with self._cv:
+            running = self._running()
+            slots = self._slots.items()
+            draining = [
+                c
+                for c, s in slots
+                if s.step == "stop" or s.query is not None and c not in running
+            ]
+            starting = [c for c, s in slots if s.worker is not None]
+        for what, cids in (
+            ("queries running", running),
+            ("stops draining", draining),
+            ("starts queued or in flight", starting),
+        ):
+            if cids:
+                return f"{what} for connections {sorted(cids)}"
         return None
 
-    def _reap_stopped(self) -> None:
-        for cid, t in list(self._stopping.items()):
-            if not t.is_alive():
-                self._stopping.pop(cid, None)
-
     def apply(self, diff: ConfigDiff, conns: dict[int, Connection]) -> None:
-        """Reconcile running queries with a config diff: stop removed,
-        restart changed (new plan compiles from the new config, state
-        resumes from the checkpoint), start added.
+        """Reconcile with a config diff: stop removed, restart changed
+        (the new plan compiles from the new config, state resumes from
+        the checkpoint), start added.
 
-        Stops AND slow restarts run on BACKGROUND threads (round-7
-        review findings: apply() is the ConfigStore's on_change
-        callback and executes inside its mutation lock — any long wait
-        here freezes ingest auth and the whole config surface). A
-        restart of the SAME id must never overlap its predecessor on
-        the shared checkpoint directory, so the start takes a short
-        fast-path join on the pending stop (the common case: the drain
-        finished long ago) and otherwise hands the join-then-start to
-        a waiter thread — the new query appears in ``running`` when the
-        old one is actually gone, never beside it. Each scheduled start
-        carries a per-cid token; a later apply() for the same cid
-        supersedes it, so stacked reconfigs converge to exactly the
-        LAST desired state — never two live queries, never a stranded
-        query for a disabled connection."""
-        for cid in diff.removed + diff.changed:
-            with self._lock:
-                # supersede any queued start for this cid: its waiter
-                # will find its token gone and do nothing
-                self._pending_start.pop(cid, None)
-                self._failed.pop(cid, None)  # disabled ≠ failed
-                q = self._queries.pop(cid, None)
-            if q is not None:
-                self._begin_stop(cid, q)
-        for cid in diff.added + diff.changed:
-            conn = conns[cid]
-            if not conn.enabled:
-                continue
-            self._start_after_stop(cid, conn)
+        Returns once every start this diff requested has run, so a
+        connection created through the control plane is in ``running``
+        when the request returns. A start that must first wait for its
+        predecessor's stop (or an older in-flight start) is waited for
+        at most 0.5 s and otherwise lands in the background; removals
+        and disables are not waited for."""
+        desired: dict[int, Connection | None] = dict.fromkeys(diff.removed)
+        desired.update((cid, conns[cid]) for cid in diff.changed + diff.added)
+        deadline = time.monotonic() + 0.5
+        with self._cv:
+            gens = {cid: self._want(cid, conn) for cid, conn in desired.items()}
+            for cid, gen in gens.items():
+                s = self._slots[cid]
+                # until the start runs (tried == gen) the wait is bounded
+                while (
+                    s.gen == gen
+                    and s.want is not None
+                    and (s.tried != gen or s.step == "start")
+                ):
+                    left = None if s.tried == gen else deadline - time.monotonic()
+                    if left is not None and left <= 0:
+                        break
+                    self._cv.wait(left)
 
-    def _begin_stop(self, cid: int, q) -> None:
-        """Schedule this query's drain-then-stop, chained behind any
-        predecessor stop for the same cid.
+    def _want(self, cid: int, conn: Connection | None) -> int:
+        """Record the desired state as a new generation and make sure a
+        worker will reconcile it. Caller holds the lock."""
+        s = self._slots.setdefault(cid, _Slot())
+        s.want = conn if conn is not None and conn.enabled else None
+        s.gen += 1
+        s.error = None  # disabled ≠ failed; a new config gets a new try
+        if s.worker is None:
+            s.worker = threading.Thread(target=self._work, args=(s,), daemon=True)
+            s.worker.start()
+        self._cv.notify_all()
+        return s.gen
 
-        The read-of-prev, thread start, and tracking-entry install all
-        happen under ``self._lock`` (ADVICE r10 item 1): two concurrent
-        ``_begin_stop`` calls for one cid — an apply-driven stop racing
-        a superseded start's orphan stop — previously interleaved the
-        unlocked read-join-write and the loser's drain thread ran
-        UNTRACKED, invisible to quiesce()/busy_reason(). Chaining
-        unconditionally replaces the old bounded fast-path join: a
-        finished predecessor joins instantly inside the new thread, a
-        wedged one serializes behind, and the caller never blocks. The
-        install happens before the lock is released, and every tracked
-        thread is started inside the same critical section that
-        installed it, so a racer always observes a STARTED predecessor
-        (joining an unstarted thread raises)."""
-        with self._lock:
-            prev = self._stopping.get(cid)
-            if prev is not None and prev.is_alive():
-
-                def chained(prev=prev, q=q):
-                    prev.join()
-                    _drain_then_stop(q)
-
-                t = threading.Thread(target=chained, daemon=True)
-            else:
-                t = threading.Thread(
-                    target=_drain_then_stop, args=(q,), daemon=True
-                )
-            t.start()
-            self._stopping[cid] = t
-
-    def _start_after_stop(self, cid: int, conn: Connection) -> None:
-        token = object()
-        with self._lock:
-            self._pending_start[cid] = token  # newest start owns cid
-            # read _starting in the SAME critical section that installs
-            # the token (ADVICE r10 item 3): _finish_start's ownership
-            # check and its _starting install share one locked block,
-            # so either we see its in-flight event here (and chain), or
-            # our token landed first and that start's ownership check
-            # will fail before it creates a query — no ordering of the
-            # two blocks readmits the two-live-queries race.
-            starting = self._starting.get(cid)
-        # fast path: no in-flight start AND no pending stop
-        if starting is None and self._await_stop(cid, 0.5):
-            self._finish_start(cid, conn, token)
-            return
-
-        def waiter(cid=cid, conn=conn, token=token):
-            # chain behind BOTH predecessor kinds, re-checking after
-            # each wait: an in-flight _start, once superseded, SCHEDULES
-            # a stop for its orphan before releasing its event, so the
-            # loop must look again for a _stopping entry it just missed
-            # (ADVICE r9 item 1 — restart-mid-start overlap).
+    def _work(self, s: _Slot) -> None:
+        with self._cv:
             while True:
-                ev = self._starting.get(cid)
-                if ev is not None:
-                    ev.wait()  # unbounded, but OFF the config-store lock
-                    continue
-                pending = self._stopping.get(cid)
-                if pending is None:
-                    break
-                pending.join()
-                with self._lock:
-                    # pop only OUR pending stop — a chained newer stop
-                    # may have replaced the entry while we slept
-                    if self._stopping.get(cid) is pending:
-                        self._stopping.pop(cid, None)
-            self._finish_start(cid, conn, token)
-
-        threading.Thread(target=waiter, daemon=True).start()
-
-    def _finish_start(self, cid: int, conn: Connection, token: object) -> None:
-        """Go live iff this start still owns the cid (its token was not
-        superseded by a later apply()).
-
-        The slow ``_start`` (a Spark streaming-query start can take
-        seconds) runs OUTSIDE the lock — holding it across the start
-        froze ``busy_reason()`` (hence ledger compaction's quiescence
-        probe) and ``apply()`` for the duration (ADVICE r8 item 3).
-        The token STAYS in ``_pending_start`` while the start runs, so
-        quiescence still sees a queued start, and the post-start
-        critical section re-checks ownership: a disable or newer start
-        that arrived mid-start superseded the token, and the query this
-        thread just created — which nothing registered — is stopped
-        here rather than leaking beside its successor. A throwing
-        ``_start`` is recorded in ``_failed`` instead of silently
-        killing the waiter daemon thread."""
-        in_flight = threading.Event()
-        with self._lock:
-            if self._pending_start.get(cid) is not token:
-                return  # superseded: disabled, or a newer start owns cid
-            # claim WITHOUT popping: the token doubles as the
-            # in-flight placeholder for busy_reason/supersede checks.
-            # The _starting event marks the EXECUTING start: a restart
-            # arriving mid-start chains behind it (ADVICE r9 item 1)
-            # instead of fast-pathing a second start for the same cid.
-            self._starting[cid] = in_flight
-        try:
-            try:
-                q = self._start(conn)
-            except Exception as exc:  # noqa: BLE001 — any start failure
-                with self._lock:
-                    if self._pending_start.get(cid) is token:
-                        self._pending_start.pop(cid, None)
-                        self._failed[cid] = repr(exc)
-                return
-            with self._lock:
-                if self._pending_start.get(cid) is token:
-                    self._pending_start.pop(cid, None)
-                    self._queries[cid] = q
-                    self._failed.pop(cid, None)
+                if s.query is not None and s.query_gen != s.gen:
+                    q, s.step = s.query, "stop"
+                    self._unlocked(_drain_then_stop, q)
+                    s.query = None
+                elif s.query is None and s.want is not None and s.tried != s.gen:
+                    conn, gen = s.want, s.gen
+                    s.tried, s.step = gen, "start"
+                    q, err = self._unlocked(self._start, conn)
+                    if q is not None:  # a superseded one is stopped next turn
+                        s.query, s.query_gen = q, gen
+                    elif gen == s.gen:
+                        s.error = err  # final until the next apply()
+                else:
+                    s.worker = None
+                    self._cv.notify_all()
                     return
-            # superseded while starting: stop the orphan we just
-            # created (background drain keeps this thread off the slow
-            # path). This registers the stop in _stopping BEFORE the
-            # finally block releases the in-flight event, so a queued
-            # successor waking on the event finds the stop and chains
-            # behind it — never starting beside the orphan.
-            self._begin_stop(cid, q)
-        finally:
-            with self._lock:
-                if self._starting.get(cid) is in_flight:
-                    self._starting.pop(cid, None)
-            in_flight.set()
+                s.step = None
+                self._cv.notify_all()
 
-    def _await_stop(self, cid: int, timeout_s: float | None) -> bool:
-        """Join the pending stop; True iff none remains. A timed-out
-        thread STAYS tracked (popping it would hide a still-running
-        query from quiesce and the restart path — round-7 second-pass
-        review finding). The read and the pop each hold ``self._lock``
-        (ADVICE r10 item 1) — the join itself runs unlocked so a long
-        drain never freezes busy_reason()/apply() — and the pop is
-        identity-checked: a chained newer stop may have replaced the
-        entry while this thread joined, and popping THAT one would
-        untrack a live drain."""
-        with self._lock:
-            t = self._stopping.get(cid)
-        if t is None:
-            return True
-        t.join(timeout_s)
-        if t.is_alive():
-            return False
-        with self._lock:
-            if self._stopping.get(cid) is t:
-                self._stopping.pop(cid, None)
-        return True
+    def _unlocked(self, fn, arg) -> tuple[object, str | None]:
+        """fn(arg) with the lock released: (result, None) or
+        (None, repr(exception)). A start that throws (bad config,
+        checkpoint corruption) is recorded and a stop that throws leaves
+        nothing to retry; neither kills the worker."""
+        self._cv.release()
+        try:
+            return fn(arg), None
+        except Exception as exc:  # noqa: BLE001 — any start/stop failure
+            return None, repr(exc)
+        finally:
+            self._cv.acquire()
 
     def quiesce(self) -> None:
-        """Join every pending background stop (unbounded) — for tests
-        and maintenance windows that need 'no query is still winding
-        down' as a hard fact rather than an eventuality. Re-snapshots
-        until the map is empty: a joined stop can register a chained
-        successor (or a superseded start its orphan's stop) that a
-        single pass would miss."""
-        while True:
-            with self._lock:
-                cids = list(self._stopping)
-            if not cids:
-                return
-            for cid in cids:
-                self._await_stop(cid, None)
+        """Wait (unbounded) until no connection has a worker — for tests
+        and maintenance windows that need 'no query is still starting
+        or winding down' as a hard fact rather than an eventuality."""
+        with self._cv:
+            self._cv.wait_for(self._settled)
+
+    def _settled(self) -> bool:
+        return all(s.worker is None for s in self._slots.values())
 
     def start_all(self, conns: dict[int, Connection]) -> None:
         self.apply(ConfigDiff(tuple(sorted(conns)), (), ()), conns)
 
     def stop_all(self) -> None:
-        """Drain every query in PARALLEL (serial drains cost up to
-        DRAIN_TIMEOUT_S x N on shutdown), then join them all."""
-        with self._lock:
-            # cancel queued starts FIRST: a waiter that wakes during
-            # shutdown must find its token gone, not start a query
-            # nobody will stop
-            self._pending_start.clear()
-            queries = list(self._queries.items())
-            self._queries.clear()
-        for cid, q in queries:
-            self._begin_stop(cid, q)
-        # an in-flight start whose token we just cleared will schedule
-        # its orphan's stop itself — wait for it to do so before the
-        # final join, RE-CHECKING the map after each bounded wait
-        # (ADVICE r10 item 2): a _start slower than the deadline used
-        # to schedule its orphan's stop only after this method had
-        # already snapshotted _stopping, so the orphan outlived
-        # stop_all undetected. Now a wedged start is SURFACED with a
-        # warning (busy_reason keeps reporting it too) instead of
-        # silently leaked.
-        deadline = time.monotonic() + DRAIN_TIMEOUT_S + START_WAIT_GRACE_S
-        while True:
-            with self._lock:
-                events = list(self._starting.items())
-            if not events:
-                break
-            remaining = deadline - time.monotonic()
-            if remaining <= 0:
-                warnings.warn(
-                    "stop_all: starts still in flight for connections "
-                    f"{sorted(cid for cid, _ in events)} after bounded "
-                    "wait; their orphan stops may land after shutdown "
-                    "(supervisor stays non-quiescent until they do)",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                break
-            events[0][1].wait(remaining)
-        # join the stops, re-snapshotting: a start that finished during
-        # the wait above registered its orphan's stop AFTER our first
-        # look, and a drain can chain a successor. Wedged drains stay
-        # tracked (visible to busy_reason) and bound the loop.
-        while True:
-            with self._lock:
-                cids = list(self._stopping)
-            if not cids:
-                break
-            # Join EVERY drain in the snapshot before deciding whether
-            # to exit: all() over a generator short-circuits on the
-            # first wedged drain and would skip joining its (possibly
-            # instantly-joinable) siblings (ADVICE r11). The list
-            # comprehension evaluates every cid; one wedged drain still
-            # bounds the loop, but its siblings get awaited first.
-            results = [
-                self._await_stop(cid, DRAIN_TIMEOUT_S + START_WAIT_GRACE_S)
-                for cid in cids
-            ]
-            if not all(results):
-                break  # a wedged drain: bounded exit, still tracked
+        """Turn every connection off (their drains run in PARALLEL, one
+        per worker) and wait for the workers, bounded by
+        DRAIN_TIMEOUT_S + START_WAIT_GRACE_S. A wedged drain stays
+        visible to busy_reason(); a wedged start is warned about, and
+        its query is stopped by its worker once the start returns."""
+        with self._cv:
+            for cid in list(self._slots):
+                self._want(cid, None)
+            self._cv.wait_for(self._settled, DRAIN_TIMEOUT_S + START_WAIT_GRACE_S)
+            wedged = sorted(c for c, s in self._slots.items() if s.step == "start")
+        if wedged:
+            warnings.warn(
+                f"stop_all: starts still in flight for connections {wedged} "
+                "after bounded wait; their orphan stops may land after "
+                "shutdown (supervisor stays non-quiescent until they do)",
+                RuntimeWarning,
+                stacklevel=2,
+            )
 
 
 def connection_stream_starter(

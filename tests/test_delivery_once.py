@@ -314,7 +314,7 @@ def test_compact_refuses_while_streams_active(spark, tmp_path):
 
 def test_server_wires_compaction_guard_to_supervisor(spark, tmp_path):
     """The composed server's ledger must refuse to compact while its
-    supervisor reports running queries (and boot-time compaction still
+    supervisor runs a connection's query (and boot-time compaction still
     works because start() compacts before start_all)."""
     import pytest
 
@@ -323,8 +323,17 @@ def test_server_wires_compaction_guard_to_supervisor(spark, tmp_path):
     srv = KassetteServer(spark, str(tmp_path / "work"), write_keys=["k"], gateway_port=0, config_port=0)
     probe = srv.ledger.activity_probe
     assert probe is not None and probe.__self__ is srv.supervisor
-    assert srv.ledger.compact() == 0  # quiescent: fine
-    srv.supervisor._queries[10] = object()  # simulate a live query
-    with pytest.raises(RuntimeError, match="requires quiescence"):
-        srv.ledger.compact()
-    srv.supervisor._queries.clear()
+    srv.start()  # boot compaction: no stream yet
+    try:
+        assert srv.ledger.compact() == 0  # still quiescent: fine
+        schema = {"table_name": "e", "schema_fields": [{"name": "event_id", "type": "STRING"}]}
+        srv.store.create("source", {"id": 1, "name": "s", "write_key": "k", "schema": schema})
+        srv.store.create("destination", {"id": 2, "name": "d", "type": "postgres", "schema": schema})
+        srv.store.create("connection", {"id": 10, "source_id": 1, "destination_id": 2})
+        assert set(srv.supervisor.running) == {10}  # a live query
+        with pytest.raises(RuntimeError, match="requires quiescence"):
+            srv.ledger.compact()
+    finally:
+        srv.stop()
+    assert srv.supervisor.busy_reason() is None
+    assert srv.ledger.compact() == 0  # streams stopped: allowed again

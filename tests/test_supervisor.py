@@ -38,7 +38,8 @@ def test_supervisor_reconciles_diffs():
 
     conns = {10: _conn(10), 11: _conn(11), 12: _conn(12, enabled=False)}
     sup.start_all(conns)
-    assert log == [("start", 10), ("start", 11)]  # disabled 12 skipped
+    # the two starts run in parallel, one worker per connection
+    assert sorted(log) == [("start", 10), ("start", 11)]  # disabled 12 skipped
     assert set(sup.running) == {10, 11}
 
     # changed 10 → stop + restart; removed 11 → stop; added 13 → start
@@ -85,7 +86,7 @@ def test_supervisor_wired_to_config_store(tmp_path):
 def test_wedged_stop_never_collides_on_checkpoint():
     """A stop that hangs past the drain window must NOT let the
     restarted query start beside its predecessor (shared checkpoint
-    dir): the start waits on a background waiter and registers only
+    dir): the connection's worker starts the new query only
     after the old query's stop() finally returns (round-7 second-pass
     review finding)."""
     import threading
@@ -124,7 +125,7 @@ def test_wedged_stop_never_collides_on_checkpoint():
         assert not q_old.stopped  # still wedged
         assert len(made) == 1  # replacement NOT started yet
         assert 10 not in sup.running  # and not falsely reported running
-        release.set()  # sink unblocks; stop completes; waiter starts v2
+        release.set()  # sink unblocks; stop completes; worker starts v2
         deadline = time.time() + 10
         while time.time() < deadline and 10 not in sup.running:
             time.sleep(0.05)
@@ -139,7 +140,7 @@ def test_stacked_reconfigs_converge_to_last_desired_state():
     """Round-8 advice race: two apply()s for the same cid during the
     drain window used to queue two waiters on one pending stop — both
     later started, leaving two live queries sharing a checkpoint dir.
-    With per-cid start tokens, only the LAST apply's start goes live."""
+    With one worker per connection, only the LAST desired config starts."""
     import threading
     import time
 
@@ -254,14 +255,24 @@ def test_failed_start_is_recorded_not_silent():
     assert "RuntimeError" in sup.failed_starts.get(10, "")
     assert sup.busy_reason() is None  # failure is terminal, not pending
 
-    # a later successful start clears the failure record
+    # the failure is final until the next apply(); a later successful
+    # start clears the failure record
     log: list = []
-    sup2 = StreamingSupervisor(
-        lambda conn: (log.append(("start", conn.id)), FakeQuery(conn.id, log))[1]
-    )
-    sup2._failed[10] = "RuntimeError('old')"
+    fails = [RuntimeError("old")]
+
+    def flaky(conn):
+        if fails:
+            raise fails.pop()
+        return FakeQuery(conn.id, log)
+
+    sup2 = StreamingSupervisor(flaky)
     sup2.start_all({10: _conn(10)})
+    sup2.quiesce()
+    assert sup2.failed_starts == {10: "RuntimeError('old')"}
+    assert not sup2.running
+    sup2.apply(ConfigDiff(added=(), removed=(), changed=(10,)), {10: _conn(10)})
     assert sup2.failed_starts == {}
+    assert set(sup2.running) == {10}
     sup2.stop_all()
 
     # disabling a failed connection clears the record too
@@ -288,8 +299,8 @@ def test_busy_reason_not_blocked_by_slow_start():
         return FakeQuery(conn.id, log)
 
     sup = StreamingSupervisor(slow_start)
-    # start_all runs _finish_start on the calling thread via the fast
-    # path, so drive it from a helper thread to observe concurrency
+    # start_all waits on the calling thread until the start has run,
+    # so drive it from a helper thread to observe concurrency
     t = _t.Thread(target=lambda: sup.start_all({10: _conn(10)}), daemon=True)
     t.start()
     assert started.wait(10)
@@ -305,7 +316,7 @@ def test_busy_reason_not_blocked_by_slow_start():
 
 def test_disable_during_slow_start_stops_orphan():
     """A disable that lands WHILE _start is executing supersedes the
-    token; the query the start thread created must be stopped, not
+    start; the query the start created must be stopped, not
     leaked beside an empty registry."""
     import threading as _t
 
@@ -325,7 +336,7 @@ def test_disable_during_slow_start_stops_orphan():
     t = _t.Thread(target=lambda: sup.start_all({10: _conn(10)}), daemon=True)
     t.start()
     assert started.wait(10)
-    # disable arrives mid-start: supersedes the pending token
+    # disable arrives mid-start: supersedes the in-flight start
     sup.apply(ConfigDiff(added=(), removed=(), changed=(10,)),
               {10: _conn(10, enabled=False)})
     gate.set()
@@ -388,47 +399,6 @@ def test_restart_during_slow_start_never_overlaps():
     sup.stop_all()
 
 
-def test_concurrent_stops_for_one_cid_both_tracked():
-    """ADVICE r10 item 1: an apply-driven stop racing a superseded
-    start's orphan stop for the SAME cid used to interleave
-    _begin_stop's unlocked read-join-write — one drain thread ran
-    UNTRACKED, invisible to quiesce()/busy_reason(). Both stops must
-    now execute (both queries stopped) and quiesce must actually wait
-    for both."""
-    import threading as _t
-    import time as _time
-
-    log: list = []
-    barrier = _t.Barrier(2)
-    in_stop = _t.Event()
-    release = _t.Event()
-
-    class SlowQuery(FakeQuery):
-        def stop(self):
-            in_stop.set()
-            release.wait(10)
-            super().stop()
-
-    sup = StreamingSupervisor(lambda conn: FakeQuery(conn.id, log))
-    q1, q2 = SlowQuery(10, log), SlowQuery(10, log)
-
-    def racer(q):
-        barrier.wait(5)
-        sup._begin_stop(10, q)
-
-    t1 = _t.Thread(target=racer, args=(q1,), daemon=True)
-    t2 = _t.Thread(target=racer, args=(q2,), daemon=True)
-    t1.start(); t2.start(); t1.join(5); t2.join(5)
-    assert in_stop.wait(5)
-    # while draining, the supervisor must KNOW it is not quiescent
-    reason = sup.busy_reason()
-    assert reason is not None and "10" in reason
-    release.set()
-    sup.quiesce()
-    assert q1.stopped and q2.stopped  # neither drain was lost
-    assert sup.busy_reason() is None
-
-
 def test_stop_all_surfaces_wedged_start(recwarn):
     """ADVICE r10 item 2: a _start slower than stop_all's bounded wait
     used to schedule its orphan's stop only after stop_all had already
@@ -473,8 +443,8 @@ def test_stop_all_surfaces_wedged_start(recwarn):
         # the wedged start is SURFACED, not silently leaked
         reason = sup.busy_reason()
         assert reason is not None and "in flight" in reason
-        gate.set()  # start finally returns; token was cleared by
-        t.join(10)  # stop_all, so the orphan's stop gets scheduled
+        gate.set()  # start finally returns; stop_all superseded it,
+        t.join(10)  # so its worker stops the orphan next
         deadline = _time.time() + 10
         while _time.time() < deadline and sup.busy_reason() is not None:
             _time.sleep(0.05)
@@ -528,19 +498,14 @@ def test_stop_all_joins_healthy_siblings_of_a_wedged_drain():
             return q
 
         sup = sup_mod.StreamingSupervisor(start)
-        # cid 10 (the WEDGED one) starts first, so its drain is FIRST
-        # in the _stopping snapshot — exactly the order in which the
-        # old short-circuit skipped the sibling.
         sup.start_all({10: _conn(10), 11: _conn(11)})
         sup.stop_all()  # bounded: returns despite the wedged 10
-        # the healthy sibling was joined (stopped AND untracked)
+        # the healthy sibling was joined (stopped AND settled)
         # before the bounded exit, not skipped
         assert queries[11].stopped
-        with sup._lock:
-            still = set(sup._stopping)
-        assert still == {10}, still  # only the wedged drain remains
         reason = sup.busy_reason()
-        assert reason is not None and "10" in reason
+        # only the wedged drain remains
+        assert reason == "stops draining for connections [10]", reason
         release.set()
         sup.quiesce()
         assert queries[10].stopped
@@ -548,3 +513,108 @@ def test_stop_all_joins_healthy_siblings_of_a_wedged_drain():
     finally:
         sup_mod.DRAIN_TIMEOUT_S = old_drain
         sup_mod.START_WAIT_GRACE_S = old_grace
+
+
+def test_random_interleavings_converge_without_overlap():
+    """Seeded stress: three actors, serialized the way ConfigStore
+    serializes its on_change callers, issue add / change / disable /
+    remove diffs over two connections while starts and stops take
+    random short sleeps and 10 % of starts fail. One stop in four
+    outlasts apply()'s 0.5 s wait, so later diffs land while the
+    worker is still draining or starting. No start may ever see
+    an un-stopped query for its connection, and after quiesce()
+    ``running`` and ``failed_starts`` match the last desired state with
+    every other query stopped."""
+    import sys
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # preempt threads often
+    try:
+        for seed in range(4):
+            _interleave_once(seed)
+    finally:
+        sys.setswitchinterval(switch)
+
+
+def _interleave_once(seed: int) -> None:
+    import itertools
+    import random
+    import threading as _t
+    import time as _time
+
+    rng = random.Random(seed)
+    rng_lock = _t.Lock()
+
+    def draw(fn):
+        with rng_lock:
+            return fn(rng)
+
+    made: list = []
+    overlaps: list = []
+
+    class SlowQuery(FakeQuery):
+        def stop(self):
+            slow = draw(lambda r: r.random() < 0.25)
+            _time.sleep(draw(lambda r: r.uniform(0.5, 0.54)) if slow else 0.01)
+            super().stop()
+
+    def start(conn):
+        # an assert here would only be recorded as a failed start
+        live = [q for q in made if q.cid == conn.id and not q.stopped]
+        if live:
+            overlaps.append((conn.id, conn.source.name))
+        _time.sleep(draw(lambda r: r.uniform(0, 0.04)))
+        if draw(lambda r: r.random() < 0.1):
+            raise RuntimeError(f"start {conn.source.name} failed")
+        q = SlowQuery(conn.id, [])
+        q.conn = conn
+        made.append(q)
+        return q
+
+    sup = StreamingSupervisor(start)
+    conns: dict[int, Connection] = {}
+    store_lock = _t.Lock()  # ConfigStore's mutation lock
+    version = itertools.count()
+
+    def actor(k: int):
+        arng = random.Random(seed * 10 + k)
+        for _ in range(15):
+            cid = arng.choice((10, 11))
+            op = arng.choice(("add", "change", "disable", "remove"))
+            with store_lock:
+                name = f"v{next(version)}"
+                if op == "add" and cid not in conns:
+                    conns[cid] = _conn(cid, name)
+                    diff = ConfigDiff(added=(cid,), removed=(), changed=())
+                elif op == "remove" and cid in conns:
+                    del conns[cid]
+                    diff = ConfigDiff(added=(), removed=(cid,), changed=())
+                elif op in ("change", "disable") and cid in conns:
+                    conns[cid] = _conn(cid, name, enabled=op == "change")
+                    diff = ConfigDiff(added=(), removed=(), changed=(cid,))
+                else:
+                    continue
+                sup.apply(diff, dict(conns))
+            _time.sleep(arng.uniform(0, 0.04))
+
+    actors = [_t.Thread(target=actor, args=(k,), daemon=True) for k in range(3)]
+    for a in actors:
+        a.start()
+    for a in actors:
+        a.join(30)
+    assert not any(a.is_alive() for a in actors)
+    sup.quiesce()
+
+    assert not overlaps, (seed, overlaps)
+    enabled = {cid: c for cid, c in conns.items() if c.enabled}
+    running, failed = sup.running, sup.failed_starts
+    assert set(running) | set(failed) == set(enabled), (seed, running, failed)
+    assert not set(running) & set(failed), seed
+    for cid, q in running.items():
+        assert q.conn is enabled[cid] and not q.stopped, seed
+    assert all(q.stopped for q in made if q not in running.values()), seed
+    assert sup.busy_reason() == (
+        f"queries running for connections {sorted(running)}" if running else None
+    )
+    sup.stop_all()
+    assert all(q.stopped for q in made) and sup.busy_reason() is None
